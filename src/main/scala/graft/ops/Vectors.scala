@@ -115,75 +115,136 @@ object Vectors {
     * definition shared by the Spark side and the oracle SQL. */
   private[graft] val AnnFilteredTarget = 30L
 
-  /** Exact fixed-point per-cell centroids over (`k`, `embedding`) rows —
-    * the same grid-snap as v_centroid: components floor(x·1e6+0.5)
-    * BEFORE an integer (order-independent) sum, so every engine and
-    * every cluster re-run produces bit-identical centroids.
+  /** Driver-held k-means state: cell ids ascending (a null label last,
+    * the argmax's tie order) and each cell's fixed-point centroid, with
+    * a null component where no member of the cell has a value there.
+    * It is a K×D summary merged from per-partition integer sums, so the
+    * driver can hold it at any corpus size.
     */
-  private def fxCentroids(df: DataFrame): DataFrame =
-    df.select(col("k"), posexplode(col("embedding")).as(Seq("dim", "x")))
+  private[graft] final case class Centroids(ids: Array[Integer],
+      cv: Array[Array[java.lang.Double]]) {
+
+    /** Cells whose centroid is not bit-equal to the one in `prev`,
+      * counting cells that appeared or vanished: 0 iff the two are the
+      * same centroids. `Double.equals` compares bits. */
+    def moved(prev: Centroids): Int = {
+      val was = prev.byId
+      val now = byId
+      (was.keySet ++ now.keySet).count(k => !(was.contains(k) &&
+        now.contains(k) && java.util.Arrays.equals(
+          was(k).asInstanceOf[Array[AnyRef]],
+          now(k).asInstanceOf[Array[AnyRef]])))
+    }
+
+    private def byId = ids.map(Option(_)).zip(cv).toMap
+
+    /** The nearest cell of each vector, by cosine: see NearestCell. */
+    def nearest(v: Column): Column =
+      org.apache.spark.sql.graftshim.NearestCell.nearest(v, ids, cv)
+
+    /** (vec_id, v, cluster) for every vector of `e`. No cells, no rows:
+      * the answer of the (vector × centroid) cross join. */
+    def assign(e: DataFrame): DataFrame =
+      (if (ids.isEmpty) e.where(lit(false)) else e)
+        .select(col("vec_id"), col("embedding").as("v"),
+          nearest(col("embedding")).as("cluster"))
+
+    /** The (cl int, cv array<double>) centroid frame, as a local
+      * relation. */
+    def toDF(s: org.apache.spark.sql.SparkSession): DataFrame =
+      s.createDataFrame(java.util.Arrays.asList(ids.indices.map(i =>
+        org.apache.spark.sql.Row(ids(i), cv(i).toSeq)): _*), CentroidSchema)
+  }
+
+  private val CentroidSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "cl INT, cv ARRAY<DOUBLE>")
+
+  /** Exact fixed-point per-cell centroids over (`k`, `embedding`) rows,
+    * as ONE Spark action — the same grid-snap as v_centroid: components
+    * floor(x·1e6+0.5) BEFORE an integer (order-independent) sum, so every
+    * engine and every re-run produces bit-identical centroids. The
+    * (k, dim) sums are collected and divided on the driver: the same
+    * IEEE s6 / (1e6·n) the Spark expression evaluates.
+    */
+  private def fxCollect(kv: DataFrame): Centroids = {
+    val sums = kv.select(col("k"),
+        posexplode(col("embedding")).as(Seq("dim", "x")))
       .groupBy("k", "dim")
       .agg(sum(floor(col("x").cast("double") * lit(1000000.0) + lit(0.5))
         .cast("long")).as("s6"), count("*").as("n"))
-      .select(col("k"), col("dim"),
-        (col("s6").cast("double") / (lit(1000000.0) * col("n"))).as("c"))
-      .groupBy("k")
-      .agg(transform(array_sort(collect_list(struct(col("dim"),
-        col("c")))), s => s.getField("c")).as("cv"))
-      .select(col("k").as("cl"), col("cv"))
+      .collect()
+    val cells = sums.groupBy(r => Option(r.getAs[Integer](0))).toArray
+      .sortBy { case (k, _) => (k.isEmpty, k.fold(0)(_.intValue)) }
+    Centroids(cells.map(_._1.orNull), cells.map { case (_, rs) =>
+      rs.sortBy(_.getInt(1)).map(r =>
+        if (r.isNullAt(2)) null
+        else java.lang.Double.valueOf(
+          r.getLong(2).toDouble / (1000000.0 * r.getLong(3))))
+    })
+  }
 
-  /** Lloyd-to-fixpoint over `e` (vec_id, label, embedding): the
-    * v_kmeans_conv loop, factored so the sampled-training variant can
-    * reuse it. Returns (converged assignment, converged centroids).
-    * Body unchanged from the r16-proven shape — an r17 attempt to fuse
-    * the changed-count join into the assignment checkpoint measured 2×
-    * SLOWER (19.9 → 43 s one-shot at sf0.1), so the two-action round
-    * (checkpoint, then join-count over two cached frames) stays.
+  /** Label-seeded centroids: the starting point of every Lloyd run. */
+  private def labelSeeds(e: DataFrame): Centroids =
+    fxCollect(e.select(col("label").as("k"), col("embedding")))
+
+  /** One Lloyd round: assign every vector of `e` to its nearest cell by
+    * cosine, then re-centre. One Spark action; the assignment is a
+    * projection (NearestCell), never a shuffle of the vector table. */
+  private def lloydStep(e: DataFrame, c: Centroids): Centroids =
+    fxCollect(e.select(c.nearest(col("embedding")).as("k"),
+      col("embedding")))
+
+  /** Lloyd to a checked fixpoint over `e` (vec_id, label, embedding):
+    * the v_kmeans_conv loop, shared with the sampled-training variant.
+    * Returns the converged centroids and the rounds run.
+    *
+    * The centroids live on the driver; each round is ONE Spark action
+    * (`lloydStep`), and the loop stops when the collected centroids are
+    * bit-equal to the previous round's. With a_r = A(c_r) the assignment
+    * against centroids c_r and c_{r+1} = C(a_r) its re-centring (both
+    * deterministic):
+    *  - c_{r+1} = c_r implies a_{r+1} = A(c_{r+1}) = A(c_r) = a_r;
+    *  - a_r = a_{r−1} implies c_{r+1} = C(a_r) = C(a_{r−1}) = c_r.
+    * So this loop stops at the first r with c_{r+1} = c_r, no later
+    * than a loop that waits for an unchanged assignment, and returns the
+    * same fixpoint (A(c_r), c_r) that loop returns.
+    *
+    * r20 negative result, measured and reverted: repartitioning the
+    * training set to cluster parallelism (the pqEncode fix) made this
+    * loop ~2× slower (11.9 s vs 6-7 s steady at sf0.1, low steal) —
+    * with only |labels| = 10 centroids the per-round fold is ~1.3M
+    * flops, so the 1-task scan was never the bottleneck and several
+    * 32-task stages per round are pure scheduling overhead. Parallelize
+    * the n·M·K-fold PQ paths (pqEncode/pqCodebooksK), not this one.
     */
-  private def kmeansLoop(s: org.apache.spark.sql.SparkSession,
-      e: DataFrame, tag: String): (DataFrame, DataFrame) = {
+  private[graft] def kmeansLoop(e: DataFrame,
+      tag: String): (Centroids, Int) = {
     val cap = KmeansMaxRounds
-    // r20 negative result, measured and reverted: repartitioning the
-    // training set to cluster parallelism (the pqEncode fix) made THIS
-    // loop ~2× slower (11.9 s vs 6-7 s steady at sf0.1, low steal, both
-    // with and without a fused lazy-checkpoint count) — with only
-    // |labels| = 10 centroids the per-round fold is ~1.3M flops, so the
-    // 1-task scan was never the bottleneck and 24 rounds × several
-    // 32-task stages is pure scheduling overhead. Parallelize the
-    // n·M·K-fold PQ paths (pqEncode/pqCodebooksK), not this one.
-    var cent = fxCentroids(
-      e.select(col("label").as("k"), col("embedding")))
-    var prev: DataFrame = null
+    var cent = labelSeeds(e)
     var rounds = 0
-    var changed = 1L
-    while (changed > 0 && rounds < cap) {
-      val asg = ivfArgmin(e, cent)
-        .select(col("vec_id"), col("v"), col("cl").as("cluster"))
-        .localCheckpoint(true)
-      changed =
-        if (prev == null) asg.count()
-        else asg.as("a").join(prev.as("p"), "vec_id")
-          .filter(col("a.cluster") =!= col("p.cluster")).count()
-      if (changed > 0)
-        cent = fxCentroids(asg.select(col("cluster").as("k"),
-          col("v").as("embedding")))
-      prev = asg
+    var moved = -1
+    while (moved != 0 && rounds < cap) {
+      val next = lloydStep(e, cent)
+      moved = next.moved(cent)
+      cent = next
       rounds += 1
       // the d_clusters attribution discipline: per-round progress on
       // stderr so convergence behavior is visible in any run log
-      System.err.println(s"[$tag] round=$rounds changed=$changed")
+      System.err.println(s"[$tag] round=$rounds moved=$moved")
     }
-    require(changed == 0,
+    require(moved == 0,
       s"k-means did not converge within $cap rounds (oscillating " +
         "fixture?) — refusing to return a non-fixpoint")
-    (prev.select(col("vec_id"), col("cluster")), cent)
+    (cent, rounds)
   }
 
-  private def kmeansFixpoint(s: org.apache.spark.sql.SparkSession,
-      e: DataFrame, tag: String): DataFrame = kmeansLoop(s, e, tag)._1
+  /** The converged assignment (vec_id, cluster), lazily projected. */
+  private def kmeansFixpoint(e: DataFrame, tag: String): DataFrame =
+    kmeansLoop(e, tag)._1.assign(e).select(col("vec_id"), col("cluster"))
 
-  private def kmeansCentroids(s: org.apache.spark.sql.SparkSession,
-      e: DataFrame, tag: String): DataFrame = kmeansLoop(s, e, tag)._2
+  /** The converged centroids (cl, cv). */
+  private def kmeansCentroids(e: DataFrame, tag: String): DataFrame =
+    kmeansLoop(e, tag)._1.toDF(e.sparkSession)
 
   /** Every vector ranked against every centroid → (vec_id, v, cl, cc,
     * rn): rn = 1 is the assignment, rn <= nprobe are a probe's search
@@ -236,32 +297,26 @@ object Vectors {
 
   /** Coarse quantizer: label-seeded centroids refined by `lloydRounds`
     * Lloyd iterations (assign every vector to its nearest centroid by
-    * cosine, recompute fixed-point means). Deterministic end-to-end:
-    * ties break on cell id, means are integer-summed fixed point.
+    * cosine, recompute fixed-point means) — the k-means round, held on
+    * the driver. Deterministic end-to-end: ties break on cell id, means
+    * are integer-summed fixed point.
     */
-  def ivfCentroids(e: DataFrame,
-      lloydRounds: Int): DataFrame = {
-    var cent = fxCentroids(
-      e.select(col("label").as("k"), col("embedding")))
-    for (_ <- 1 to lloydRounds)
-      cent = fxCentroids(ivfArgmin(e, cent)
-        .select(col("cl").as("k"), col("v").as("embedding")))
-    // |cells| rows. Materialize once: every caller references the
-    // trained quantizer from ≥2 places (assignment + probe ranking),
-    // and Spark does not dedupe common subplans — un-checkpointed, the
-    // whole training chain (label seed + Lloyd rounds over the corpus)
-    // re-executes per reference (guide §3.3 / §5; the coactivityEdges
-    // precedent). At 100 TB those are full corpus passes.
-    cent.localCheckpoint(true)
-  }
+  private def ivfTrain(e: DataFrame, lloydRounds: Int): Centroids =
+    (1 to lloydRounds).foldLeft(labelSeeds(e))((c, _) => lloydStep(e, c))
+
+  /** [[ivfTrain]] as a (cl, cv) local relation: every caller references
+    * the trained quantizer from ≥2 places (assignment + probe ranking),
+    * and a local relation is computed once, never re-executed per
+    * reference. */
+  def ivfCentroids(e: DataFrame, lloydRounds: Int): DataFrame =
+    ivfTrain(e, lloydRounds).toDF(e.sparkSession)
 
   /** Cluster assignment under the label-seeded coarse quantizer:
     * (vec_id, v, cluster). The clustering half of SemDeDup — shared with
     * Dedup.d_semdedup so the dedup pass and the ANN index agree on one
     * partition of the space. */
   private[graft] def ivfAssign(e: DataFrame, lloydRounds: Int): DataFrame =
-    ivfArgmin(e, ivfCentroids(e, lloydRounds))
-      .select(col("vec_id"), col("v"), col("cl").as("cluster"))
+    ivfTrain(e, lloydRounds).assign(e)
 
   /** Assignment against an EXISTING (cl, cv) centroid frame — e.g. one
     * read back from a maintained parquet index. The incremental half of
@@ -299,7 +354,7 @@ object Vectors {
       .select(col("vec_id"), col("label"), col("s.m").as("m"),
         col("s.sv").as("sv"))
 
-  /** fxCentroids with the sub-space id carried through: fixed-point
+  /** fxCollect's grid with the sub-space id carried through: fixed-point
     * means per (m, k) — same integer-sum grid as the IVF quantizer. */
   private def pqFxCentroids(df: DataFrame): DataFrame =
     df.select(col("m"), col("k"), posexplode(col("sv"))
@@ -408,10 +463,10 @@ object Vectors {
     for (_ <- 1 to lloydRounds)
       cent = pqFxCentroids(pqArgmin(subs, cent)
         .select(col("m"), col("cl").as("k"), col("sv")))
-    // M·K rows. Materialize once — same rationale as ivfCentroids:
-    // every caller references the codebooks from ≥2 places (encode +
-    // the per-query ADC table), so un-checkpointed the whole per-sub-
-    // space training chain re-executes per reference.
+    // M·K rows. Materialize once: every caller references the
+    // codebooks from ≥2 places (encode + the per-query ADC table), so
+    // un-checkpointed the whole per-sub-space training chain
+    // re-executes per reference.
     cent.localCheckpoint(true)
   }
 
@@ -621,12 +676,14 @@ object Vectors {
       nprobe: Int, lloydRounds: Int, quantized: Boolean = false)
       : DataFrame = {
     val e = t(s, d, "embeddings")
-    val cent = ivfCentroids(e, lloydRounds)
-    // assignment via hash-agg argmax (ivfArgmin); the window ranking
-    // survives only for the every-50th probes, whose vec_id % 50
-    // filter pushes below the window (it references only the
-    // partitioning column), so the sort sees n/50 vectors.
-    val asg = ivfArgmin(e, cent)
+    val trained = ivfTrain(e, lloydRounds)
+    val cent = trained.toDF(s)
+    // assignment: the NearestCell projection against the driver-held
+    // centroids, no shuffle; the window ranking survives only for the
+    // every-50th probes, whose vec_id % 50 filter pushes below the
+    // window (it references only the partitioning column), so the sort
+    // sees n/50 vectors.
+    val asg = trained.assign(e)
     // quantized mode: the inverted file stores int8 vectors (the v_quant
     // transform) — 4× less memory bandwidth on the scan that dominates
     // IVF search at 100 TB. The symmetric scale CANCELS in cosine
@@ -635,7 +692,6 @@ object Vectors {
     // any score. Probes stay float (queries are not storage).
     val stored =
       if (!quantized) asg
-        .select(col("vec_id"), col("v"), col("cl").as("cluster"))
       else asg
         .withColumn("maxabs", array_max(transform(col("v"),
           x => abs(x.cast("double")))))
@@ -644,7 +700,7 @@ object Vectors {
           transform(col("v"), x => floor(x.cast("double") *
             (lit(127.0) / col("maxabs")) + lit(0.5)).cast("double"))
             .as("v"),
-          col("cl").as("cluster"))
+          col("cluster"))
     val probes = ivfRanked(e, cent).filter(col("rn") <= nprobe &&
         col("vec_id") % 50 === 0)
       .select(col("vec_id").as("q"), col("v").as("vq"),
@@ -861,9 +917,10 @@ object Vectors {
 
     // K-means run to a CHECKED FIXPOINT — the iterate-to-convergence
     // discipline (d_clusters / g_labelprop_conv) on a numeric op: Lloyd
-    // rounds repeat until the assignment is STABLE (zero changed rows —
-    // one driver count per round, each round's assignment
-    // localCheckpointed like the other loops), require-capped so an
+    // rounds repeat until the centroids are STABLE (bit-equal to the
+    // previous round's — the driver holds them, and each round is one
+    // collected fixed-point aggregate; see kmeansLoop for why this is
+    // the same fixpoint as a stable assignment), require-capped so an
     // oscillating fixture fails LOUDLY. The oracle is exact despite the
     // unknown round count because a k-means fixpoint is absorbing under
     // the shared grid-rounded arithmetic: once assignments repeat,
@@ -874,7 +931,7 @@ object Vectors {
     // at sf0.01 (500 -> 80 -> 41 -> ... -> 0), round 22 at sf0.1 —
     // the cap leaves ~1.5x headroom.
     "v_kmeans_conv" -> ((s, d) =>
-      kmeansFixpoint(s, t(s, d, "embeddings"), "v_kmeans_conv")
+      kmeansFixpoint(t(s, d, "embeddings"), "v_kmeans_conv")
         .orderBy("vec_id")),
 
     // K-means at the PRODUCTION TRAINING SHAPE (r16 verdict #6): the
@@ -893,7 +950,7 @@ object Vectors {
       val train = graft.ops.Text.portableHash(concat(lit("kms:"),
         col("vec_id").cast("string"))) % 4 === 0
       val sample = e.filter(train)
-      val cent = kmeansCentroids(s, sample, "v_kmeans_sampled")
+      val cent = kmeansCentroids(sample, "v_kmeans_sampled")
       ivfArgmin(e, cent)
         .select(col("vec_id"), col("cl").as("cluster"))
         .orderBy("vec_id")

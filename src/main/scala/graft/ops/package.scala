@@ -21,9 +21,10 @@ package object ops {
     * (KB-MB at test scale) to spread per-row work that costs 10-100×
     * the shuffle; at production scale multi-split inputs already scan
     * in parallel. NOT for rows whose scan-stage work is trivial — the
-    * exchange is pure overhead there (measured: repartitioning
-    * v_kmeans_conv's 10-centroid training input made it 2× slower; see
-    * Vectors.kmeansLoop). */
+    * exchange is pure overhead there. Nor for iterative rows that rescan
+    * their input once per round: the exchange is paid every round (r20:
+    * repartitioning v_kmeans_conv's training input, a ~1.3M-flop fold
+    * per Lloyd round, made the row 2× slower). */
   def tPar(spark: SparkSession, dir: String, name: String): DataFrame =
     t(spark, dir, name)
       .repartition(spark.sparkContext.defaultParallelism)
