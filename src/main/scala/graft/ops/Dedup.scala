@@ -722,22 +722,20 @@ object Dedup {
       if (!built) {
         val bands0 = minhashBands(minhashSig(s, d)
           .filter(col("doc_id") < corpusCut)).localCheckpoint()
-        st.publishGen(statePath, 0L) { g =>
+        st.publishGen(statePath, 0L) { (_, g) =>
           bands0.write.mode("overwrite").parquet(s"$g/bands")
         }
       }
-      if (st.lastAppliedBatchGen(statePath).forall(_ < 1L)) {
+      st.publishGen(statePath, 1L) { (prev, g) =>
         val bands1 = minhashBands(minhashSig(s, d)
           .filter(col("doc_id") >= corpusCut && col("doc_id") < splitId))
         // materialize the merged index BEFORE publishing: the union
         // reads gen=0 while the write lands in the (uniquely named)
         // gen=1 dir, and localCheckpoint gives the commit real size
         // stats
-        val merged = st.readGenArtifact(s, statePath, "bands")
+        val merged = s.read.parquet(s"${prev.get}/bands")
           .unionByName(bands1).localCheckpoint()
-        st.publishGen(statePath, 1L) { g =>
-          merged.write.mode("overwrite").parquet(s"$g/bands")
-        }
+        merged.write.mode("overwrite").parquet(s"$g/bands")
       }
       val idx = st.readGenArtifact(s, statePath, "bands")
       val batch = minhashBands(

@@ -337,7 +337,7 @@ object Etl {
     // the source events — is what the oracle checks against a full
     // recompute. This closes the loop the StreamsSpec-only coverage
     // left open: the hash-red surface now includes the foreachBatch
-    // partial-agg merge, the staged-swap publish, and the crash-recovery
+    // partial-agg merge, the generation commit, and the pointer-resolved
     // read path, end to end. Merge input per batch stays |rollup keys| +
     // |batch keys| rows (days × types, never events), and decimal sums
     // are exact, so any batch split yields a bit-identical table.
@@ -980,9 +980,9 @@ object Etl {
     // space is user_id mod 97 (97 keys < k = 256); the stream is the
     // same 2-batch time-split replay, so the distributed per-batch
     // sketch, the O(k) cross-batch merge, the out-of-band running
-    // total, the staged swap, and the recovery read all sit on the
-    // hash-red path. (The sub-capacity regime — where est is a lower
-    // bound, not a count — stays covered by StreamsSpec's k=50
+    // total, the generation commit, and the pointer-resolved read all
+    // sit on the hash-red path. (The sub-capacity regime — where est
+    // is a lower bound, not a count — stays covered by StreamsSpec's k=50
     // guarantee proof; it is deliberately NOT oracle-material since
     // eviction order depends on merge grouping.)
     "l_hh_maintained" -> ((s, d) => {
@@ -996,7 +996,7 @@ object Etl {
         "heavy-hitters maintenance stream must drain (AvailableNow)")
       require(q.recentProgress.map(_.batchId).distinct.length >= 2,
         "replay must span two micro-batches or the merge path is untested")
-      s.read.parquet(statePath)
+      graft.streaming.Streams.readGenMaintained(s, statePath)
         .select(col("n").as("n_total"), explode(col("mg")).as(Seq("key", "est_n")))
         .select(col("key"), col("est_n"), col("n_total"))
         .orderBy("key")
@@ -1009,11 +1009,12 @@ object Etl {
     // BOTH sketches in Spark — the grid MAINTAINED by the real
     // streaming sink (Streams.countMinMaintain over the 2-batch
     // replay: distributed per-batch sketch, elementwise O(d·w) merge,
-    // staged swap, recovery read) and a one-shot batch grid over the
-    // whole table — and emits checkable facts: cells_diff (CM's merge
-    // is elementwise sum, so the maintained grid must be BIT-IDENTICAL
-    // to the batch grid — 0 differing cells), n_total (vs the oracle's
-    // COUNT(*) — an exact value, not a verdict), and per-probe
+    // generation commit, pointer-resolved read) and a one-shot batch
+    // grid over the whole table — and emits checkable facts:
+    // cells_diff (CM's merge is elementwise sum, so the maintained grid
+    // must be BIT-IDENTICAL to the batch grid — 0 differing cells),
+    // n_total (vs the oracle's COUNT(*) — an exact value, not a
+    // verdict), and per-probe
     // no_underestimate / within_2eps point-query verdicts against
     // DISTRIBUTED exact counts (est ≥ exact always — counters only
     // add; est ≤ exact + 2·(e/w)·n with the documented 2× Markov
@@ -1037,8 +1038,8 @@ object Etl {
       require(q.recentProgress.map(_.batchId).distinct.length >= 2,
         "replay must span two micro-batches or the merge path is untested")
       import s.implicits._
-      val (nMaint, gridMaint) = s.read.parquet(statePath)
-        .as[(Long, Array[Long])].head()
+      val (nMaint, gridMaint) = graft.streaming.Streams
+        .readGenMaintained(s, statePath).as[(Long, Array[Long])].head()
       val ev = t(s, d, "events").select(key.as("k"))
       val bRow = ev.agg(hh.cmSketchCol(col("k"), width).as("cm"),
         count(lit(1)).as("n")).head()

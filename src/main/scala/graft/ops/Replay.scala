@@ -38,61 +38,31 @@ private[graft] object Replay {
   /** PERSISTENT maintained-state dir for `tag`/`d`, keyed by a caller-
     * supplied fingerprint — the deployment shape of maintenance: the
     * state table OUTLIVES a run, and the next tick pays only the
-    * delta. Returns (dir, alreadyBuilt): alreadyBuilt is true iff a
-    * prior run finished a build under the SAME key (marker file), in
-    * which case the caller skips its build phase and reads the state
-    * as-is — exactly what the steady passes of a bench measure. The
-    * key must encode every input the state depends on (data cut,
-    * thresholds, algorithm caps); a key change lands in a fresh dir so
-    * stale state from another configuration can never be read, and the
-    * registered row's full-graph oracle still hash-checks whatever is
-    * read. Unlike [[scratchDir]] this does NOT wipe — the build phase
-    * must write atomically-enough (parquet overwrite + marker last).
-    * SINGLE-PUBLISHER assumption: two processes building the same key
-    * concurrently could interleave their overwrites (the test-scale
-    * stand-in has no conditional PUT); production maintenance commits
-    * through [[graft.streaming.GenPointerStore]]'s conditional-PUT
-    * generation layout instead — this helper exists for the
-    * registered-query fixtures, which run single-driver.
-    */
-  def maintainedDir(tag: String, d: String,
-      key: String): (java.io.File, Boolean) = {
-    // sanitization maps disallowed characters to '_', which can MERGE
-    // distinct (tag, d, key) triples onto one directory — so the raw
-    // triple's hash is appended, making the mapping injective up to
-    // hash collision (2^-32 per pair; a collision would still be
-    // caught by the registered row's oracle, this just removes the
-    // systematic aliasing)
-    val fp = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(s"$tag $d $key"))
-    val base = new java.io.File(
-      s"/tmp/graft_$tag/x${d.replaceAll("[^0-9a-zA-Z.]", "_")}_" +
-        s"k${key.replaceAll("[^0-9a-zA-Z.-]", "_")}_h$fp")
-    base.mkdirs()
-    val marker = new java.io.File(base, "_BUILT")
-    (base, marker.isFile)
-  }
-
-  /** Generation-layout counterpart of [[maintainedDir]] (round-18
-    * unification): same persistent path discipline (key pins every
-    * input, hash suffix keeps sanitization injective), but commitment
-    * goes through [[graft.streaming.GenPointerStore]]'s conditional-
-    * PUT generation layout instead of a `_BUILT` marker — so the
-    * loud-lost-update guarantee is UNIFORM across every maintained
-    * artifact in the repo: two concurrent builders of the same key
-    * race the pointer flip and exactly one wins; the loser fails
-    * loudly, and because each publish attempt writes into its own
-    * uniquely-named gen dir (r19: `gen=N-<nonce>`, the label recorded
-    * in the pointer), the loser's parquet writes land in an orphan
-    * dir and can never interleave with — or clobber — the generation
-    * the winner committed (the single-publisher assumption
-    * [[maintainedDir]] documents is no longer assumed here, it is
-    * enforced on BOTH the pointer and the data plane). Returns
-    * (statePath,
-    * alreadyBuilt): alreadyBuilt is true iff a generation has been
-    * COMMITTED (pointer resolves). Callers build cold state via
-    * `Streams.publishGen(statePath, 0L) { gen => ...writes... }` and
-    * read artifacts via `Streams.readGenArtifact`.
+    * delta. Returns (statePath, alreadyBuilt): alreadyBuilt is true iff
+    * a generation has been COMMITTED (the pointer resolves), in which
+    * case the caller skips its build phase and reads the state as-is —
+    * exactly what the steady passes of a bench measure. The key must
+    * encode every input the state depends on (data cut, thresholds,
+    * algorithm caps); a key change lands in a fresh dir so stale state
+    * from another configuration can never be read, and the registered
+    * row's full-graph oracle still hash-checks whatever is read. The
+    * raw triple's hash is appended to the sanitized path, so the
+    * mapping stays injective up to hash collision.
+    *
+    * Commitment goes through [[graft.streaming.GenPointerStore]]'s
+    * conditional-PUT generation layout, so the loud-lost-update
+    * guarantee is UNIFORM across every maintained artifact in the repo:
+    * two concurrent builders of the same key race the pointer flip and
+    * exactly one wins; the loser fails loudly, and because each publish
+    * attempt writes into its own uniquely-named gen dir
+    * (`gen=N-<nonce>`, the label recorded in the pointer), the loser's
+    * parquet writes land in an orphan dir and can never interleave
+    * with — or clobber — the generation the winner committed. Callers
+    * build cold state via
+    * `Streams.publishGen(statePath, 0L) { (_, gen) => ...writes... }`,
+    * fold a tick via `Streams.publishGen(statePath, 1L) { (prev, gen) =>
+    * ... }` (prev is the committed generation the tick reads), and read
+    * artifacts via `Streams.readGenArtifact`.
     */
   def maintainedGen(tag: String, d: String,
       key: String): (String, Boolean) = {
@@ -104,14 +74,6 @@ private[graft] object Replay {
     base.mkdirs()
     (base.getPath,
       graft.streaming.Streams.currentGen(base.getPath).isDefined)
-  }
-
-  /** Marks a [[maintainedDir]] build complete (write LAST, after all
-    * state parquet has landed). */
-  def markBuilt(base: java.io.File): Unit = {
-    java.nio.file.Files.write(new java.io.File(base, "_BUILT").toPath,
-      Array.emptyByteArray)
-    ()
   }
 
   /** Write `df` as exactly one parquet file named `name` under `base`

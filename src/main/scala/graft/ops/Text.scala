@@ -993,7 +993,7 @@ object Text {
     // STREAMING SINK: the corpus replays as two halves through
     // countMaintain (the rollupMaintain discipline keyed by the
     // 60-bit segment hash — a |vocabulary|-sized DataFrame merge with
-    // staged-swap publish, never driver state), and the scrub then
+    // generation commit, never driver state), and the scrub then
     // consumes the maintained counts. The ORACLE IS t_scrub's — the
     // maintained table must reproduce the batch frequency truth
     // exactly, or the reassembled md5s go hash-red. This is the
@@ -1389,28 +1389,27 @@ object Text {
       if (!built) {
         val (post0, mdl0, stats0) = parts(docs.filter(col("doc_id") <
           cut1))
-        st.publishGen(statePath, 0L) { g =>
+        st.publishGen(statePath, 0L) { (_, g) =>
           post0.write.mode("overwrite").parquet(s"$g/post")
           mdl0.write.mode("overwrite").parquet(s"$g/mdl")
           stats0.write.mode("overwrite").parquet(s"$g/stats")
         }
       }
-      if (st.lastAppliedBatchGen(statePath).forall(_ < 1L)) {
+      st.publishGen(statePath, 1L) { (prev, g) =>
+        def prevArt(name: String) = s.read.parquet(s"${prev.get}/$name")
         val (post1, mdl1, stats1) = parts(docs.filter(
           col("doc_id") >= cut1 && col("doc_id") < cut2))
         // materialize the merged artifacts BEFORE publishing: the
         // union reads gen=0 while the write lands in the (uniquely
         // named) gen=1 dir, and localCheckpoint gives the commit real
         // size stats
-        val mPost = art("post").unionByName(post1).localCheckpoint()
-        val mMdl = art("mdl").unionByName(mdl1).localCheckpoint()
-        val mStats = sumStats(art("stats").unionByName(stats1))
+        val mPost = prevArt("post").unionByName(post1).localCheckpoint()
+        val mMdl = prevArt("mdl").unionByName(mdl1).localCheckpoint()
+        val mStats = sumStats(prevArt("stats").unionByName(stats1))
           .localCheckpoint()
-        st.publishGen(statePath, 1L) { g =>
-          mPost.write.mode("overwrite").parquet(s"$g/post")
-          mMdl.write.mode("overwrite").parquet(s"$g/mdl")
-          mStats.write.mode("overwrite").parquet(s"$g/stats")
-        }
+        mPost.write.mode("overwrite").parquet(s"$g/post")
+        mMdl.write.mode("overwrite").parquet(s"$g/mdl")
+        mStats.write.mode("overwrite").parquet(s"$g/stats")
       }
       // tick 2 — the query tick, every run: fold the newest quarter
       // in memory and score from index-sized state only

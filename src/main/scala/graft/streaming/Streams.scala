@@ -504,58 +504,19 @@ object Streams {
     }
   }
 
-  /** Run a streaming query to completion over the files currently present
-    * (Trigger.AvailableNow — the batch-parity mode), writing to an
-    * in-memory table. Returns the drained query. This is the "bulk job"
-    * lifecycle: start → InProgress → JobComplete.
-    */
-  /** Crash-safer staged swap for the local-FS maintenance sinks: rename
-    * the current state ASIDE, rename the staged version into place, then
-    * drop the old copy. A crash at any point leaves a full copy on disk
-    * (either `cur` or `cur + "_old"`), and [[recoverState]] — called by
-    * every maintenance reader before it opens state — renames a stranded
-    * `_old` back into place on the next run, so accumulated state
-    * SURVIVES a kill between the two renames (StreamsSpec simulates the
-    * crash and asserts it). A leftover `_old` alongside a missing `cur`
-    * is therefore never cleared here: that would delete the only copy
-    * after a merge-from-empty — stagedSwap refuses instead, pointing at
-    * the missed recovery. Production state belongs on a transactional
-    * table format (or the Hadoop FileSystem API with an atomic rename
-    * contract); this bounds the local-mode damage.
-    */
   private def rmTree(f: java.io.File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
     f.delete(); ()
   }
 
-  private def stagedSwap(stagedPath: String, curPath: String): Unit = {
-    def rm(f: java.io.File): Unit = rmTree(f)
-    val staged = new java.io.File(stagedPath)
-    val cur = new java.io.File(curPath)
-    val old = new java.io.File(curPath + "_old")
-    if (old.exists()) {
-      // `_old` without `cur` means a prior run crashed mid-swap and the
-      // caller merged WITHOUT recovering — deleting it would finalize
-      // silent state loss. recoverState before reading is the contract.
-      require(cur.exists(),
-        s"stranded crash state at ${old.getPath} with no $curPath — " +
-          "recoverState(curPath) must run before the state is read")
-      rm(old)
-    }
-    if (cur.exists())
-      require(cur.renameTo(old), s"swap aside failed: $curPath")
-    require(staged.renameTo(cur), s"swap failed: $stagedPath -> $curPath")
-    if (old.exists()) rm(old)
-  }
-
-  /** Crash recovery for [[stagedSwap]]-managed state: if `cur` is missing
-    * but the rename-aside copy `cur + "_old"` survives (a crash landed
-    * between stagedSwap's two renames), rename it back into place so the
-    * next merge starts from the accumulated state instead of silently
-    * from zero. Idempotent and cheap (one existence check) — every
-    * maintenance reader calls it before opening `curPath`.
+  /** Legacy-upgrade repair for dirs written by the retired rename-aside
+    * publish: it moved the current state to `<path>_old` before renaming
+    * the new copy in, so a crash between the two renames left `_old` as
+    * the only copy. Renames a stranded `_old` back into place. Only the
+    * two paths that open pre-generation dirs call it:
+    * [[migrateToGenLayout]] and [[recoverCompaction]].
     */
-  private[streaming] def recoverState(curPath: String): Unit = {
+  private def recoverState(curPath: String): Unit = {
     val cur = new java.io.File(curPath)
     val old = new java.io.File(curPath + "_old")
     if (!cur.exists() && old.exists())
@@ -563,11 +524,11 @@ object Streams {
         s"state recovery failed: ${old.getPath} -> $curPath")
   }
 
-  /** BatchId marker inside a committed maintained-state dir: the id of
-    * the last micro-batch merged into it. An underscore-named file (the
+  /** BatchId marker inside a committed generation dir: the id of the
+    * last micro-batch merged into it. An underscore-named file (the
     * `_SUCCESS` convention), so parquet readers never see it — and it
-    * lives INSIDE the state dir, so it renames WITH the data through
-    * [[stagedSwap]] and [[recoverState]].
+    * lives INSIDE the generation, so the pointer flip commits it
+    * atomically with the data ([[publishGen]]).
     */
   private val BatchMarker = "_graft_last_batch"
 
@@ -583,27 +544,6 @@ object Streams {
       new java.io.File(stagedPath, BatchMarker).toPath,
       id.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     ()
-  }
-
-  /** Exactly-once guard for the MERGE sinks under foreachBatch's
-    * at-least-once redelivery: a crash AFTER [[stagedSwap]] committed
-    * but BEFORE the streaming checkpoint recorded the batch redelivers
-    * a batch whose rows the state already includes — and a re-sum merge
-    * would double-count them. (The append sink is naturally idempotent
-    * via its `batch=<id>` overwrite subdirs; the merge sinks need this
-    * marker.) The body runs only when the committed state does not
-    * already carry `id`: a crash before the swap leaves the previous
-    * marker, so the retry re-merges (correct); a crash after leaves
-    * this id, so the retry skips (correct — StreamsSpec drives both the
-    * skip and the faithful restart). BatchIds are monotone within ONE
-    * checkpoint lineage, which is the scope of the guarantee: the
-    * maintained state and its checkpoint must live and die together —
-    * restarting with a fresh checkpoint against old state restarts ids
-    * at 0, so pair a fresh statePath with any fresh checkpoint.
-    */
-  private def mergeOnce(curPath: String, id: Long)(body: => Unit): Unit = {
-    recoverState(curPath)
-    if (!lastAppliedBatch(curPath).exists(_ >= id)) body
   }
 
   /** Delta-sized shuffle partitioning for the maintenance streams
@@ -644,7 +584,7 @@ object Streams {
 
   /** foreachBatch writer shared by the maintenance sinks: AvailableNow
     * trigger, with an optional PERSISTENT checkpoint so a restarted run
-    * continues the same batchId lineage (the pairing [[mergeOnce]]'s
+    * continues the same batchId lineage (the pairing [[publishGen]]'s
     * retry guard is scoped to). Tests and the replay rigs omit it
     * (temporary checkpoint — one lineage per run); a production
     * deployment pins it alongside the state path.
@@ -658,25 +598,13 @@ object Streams {
     }
   }
 
-  /** Incremental rollup maintenance as a streaming sink — the
-    * `l_rollup_merge` loop run CONTINUOUSLY: every micro-batch folds
-    * into a materialized (day × event_type) aggregate table by
-    * re-summing PARTIAL aggregates. The merge input per batch is
-    * |rollup keys| + |batch keys| rows — days × types, never events —
-    * and value sums stay exact decimals end-to-end, so after any number
-    * of batches the table is bit-identical to a full recompute
-    * (StreamsSpec proves it over a 2-batch time-split replay). The
-    * staged-write-then-swap keeps the table readable mid-maintenance;
-    * at production scale the same shape lands on a transactional table
-    * format, with the partial-agg merge unchanged.
-    */
   /** Append-only streaming maintenance of a derived table: each
     * micro-batch is transformed and its rows landed as new parquet
     * part files — the right shape when batches partition the key space
     * (no cross-batch merge needed), e.g. the MinHash band index, where
     * a document's band rows depend on that document alone. Unlike the
     * merge sinks (rollup/MG/CM) there is no read-modify-write and so
-    * no staged swap — but the sink must still be IDEMPOTENT under
+    * no generation commit — but the sink must still be IDEMPOTENT under
     * foreachBatch's at-least-once redelivery: each batch writes its
     * own `batch=<id>` subdirectory in OVERWRITE mode, so a
     * failed-then-retried micro-batch replaces its previous partial
@@ -772,12 +700,17 @@ object Streams {
     df.write.mode("overwrite").parquet(s"$path/batch=$id"); ()
   }
 
-  /** Read an [[appendMaintain]]-maintained table: the union of all
-    * committed batch subdirectories, minus the synthetic `batch`
-    * partition column (state layout, not table schema).
+  /** Read a maintained table. A generation-layout dir resolves its
+    * pointer and scans that one generation ([[readGenMaintained]]); an
+    * [[appendMaintain]] table is the union of all committed batch
+    * subdirectories, minus the synthetic `batch` partition column
+    * (state layout, not table schema).
     */
   def readMaintained(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop("batch")
+    currentGenPath(path) match {
+      case Some(p) => spark.read.parquet(p)
+      case None => spark.read.parquet(path).drop("batch")
+    }
 
   /** [[readMaintained]] for a table whose schema EVOLVED across batches
     * (a redeployed pipeline widened its extract and kept appending):
@@ -792,74 +725,43 @@ object Streams {
   def readMaintainedEvolving(spark: SparkSession, path: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(path).drop("batch")
 
-  /** Offline compaction of an [[appendMaintain]]-maintained table: the
+  /** Horizon-aware compaction of an [[appendMaintain]] table: the
     * `batch=<id>` layout accretes one subdirectory (≥1 file) per
     * micro-batch — at production cadence that is the classic streaming
     * small-file problem, and scan planning degrades with file count
-    * long before data size matters. This rewrites ALL committed batch
-    * subdirs into ONE consolidated `batch=<maxId>` dir (so a restarted
-    * stream's next ids, maxId+1…, stay disjoint) behind the same
-    * staged-swap-with-recovery publish as the merge sinks: readers see
-    * either the old layout or the compacted one, never a partial.
-    * MUST run against a quiesced table (no active appendMaintain query
-    * — the offline-compaction contract): AvailableNow drains before
-    * returning, so between runs is always safe. [[readMaintained]]
-    * output is set-identical across compaction (StreamsSpec asserts),
-    * and the append idempotence contract survives — future batches
-    * overwrite their own fresh subdirs exactly as before.
-    */
-  def compactMaintained(spark: SparkSession, path: String): Unit = {
-    recoverState(path)
-    val dir = new java.io.File(path)
-    val batches = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-    if (batches.length <= 1) return
-    val maxId = batches.map(_.getName.stripPrefix("batch=").toLong).max
-    val staged = path + "_compact"
-    // clear the WHOLE staged root first: the consolidated write's
-    // overwrite target is the batch=<maxId> SUBDIR, so a prior staging
-    // attempt that crashed before the swap — after which more batches
-    // landed and maxId moved — would otherwise leave its stale
-    // batch=<oldMaxId> full copy alongside the new one, and stagedSwap
-    // would publish BOTH (silently duplicating every pre-crash row)
-    rmTree(new java.io.File(staged))
-    readMaintained(spark, path)
-      .write.mode("overwrite")
-      .parquet(new java.io.File(staged, s"batch=$maxId").getPath)
-    stagedSwap(staged, path)
-  }
-
-  /** Horizon-aware ONLINE compaction of an [[appendMaintain]] table —
-    * [[compactMaintained]] without the quiesced-table contract: safe to
+    * long before data size matters. This rewrites the batch subdirs
+    * with id ≤ `horizon` into ONE consolidated segment. It is safe to
     * run CONCURRENTLY with an active appendMaintain stream, because it
     * only ever touches batch subdirs with id ≤ `horizon` and the
-    * stream only ever (re)writes ids above it. `horizon` MUST be a
+    * stream only ever (re)writes ids above it; on a quiesced table
+    * `horizon = Long.MaxValue` compacts everything, and
+    * [[readMaintained]] output is set-identical across compaction
+    * (StreamsSpec asserts). `horizon` MUST be a
     * checkpoint-COMMITTED batch id (e.g. the previous run's last
     * progress): committed subdirs are immutable — a foreachBatch retry
     * only rewrites the CURRENT, uncommitted id — so the compaction's
     * inputs cannot change under it, and a retried append can never
     * resurrect a consumed subdir.
     *
-    * Publish protocol (no whole-root swap — that is what made the old
-    * contract necessary, a concurrent append's new subdir would vanish
-    * in the swap): the consolidated copy stages OUTSIDE the table with
-    * its source-subdir list riding INSIDE it as an underscore intent
-    * file (invisible to parquet, renames with the data); one atomic
-    * rename brings it in as `batch=-<maxAbs>` (negative = compacted
-    * segment — appendMaintain ids are checkpoint batchIds ≥ 0, so the
-    * namespaces never collide, and maxAbs strictly grows so successive
-    * compactions don't either); then each consumed source renames into
-    * an underscore-prefixed trash dir (ignored by readers) and the
-    * trash drops. Concurrent appends are never lost at ANY
-    * interleaving; a crash at any point is repaired by
+    * Publish protocol (no whole-root rename — a concurrent append's new
+    * subdir would vanish in it): the consolidated copy stages OUTSIDE
+    * the table with its source-subdir list riding INSIDE it as an
+    * underscore intent file (invisible to parquet, renames with the
+    * data); one atomic rename brings it in as `batch=-<maxAbs>`
+    * (negative = compacted segment — appendMaintain ids are checkpoint
+    * batchIds ≥ 0, so the namespaces never collide, and maxAbs strictly
+    * grows so successive compactions don't either); then each consumed
+    * source renames into an underscore-prefixed trash dir (ignored by
+    * readers) and the trash drops. Concurrent appends are never lost at
+    * ANY interleaving; a crash at any point is repaired by
     * [[recoverCompaction]] (replay the intent: retire surviving
     * sources, clear trash and staging) — run it before the next
     * compaction or read after an unclean stop. Local-FS honesty: a
     * reader overlapping the publish window can transiently see
     * pre-compaction rows twice (consolidated + not-yet-retired source)
-    * — bounded to the retire loop; at production scale this protocol
-    * is a transactional table format's REPLACE commit, same as the
-    * other sinks' disclosure.
+    * — bounded to the retire loop; at production scale this protocol is
+    * a transactional table format's REPLACE commit, same as the other
+    * sinks' disclosure.
     */
   def compactMaintainedBelow(spark: SparkSession, path: String,
       horizon: Long): Unit = {
@@ -922,9 +824,11 @@ object Streams {
     * retired (idempotent — the duplicate-visibility window ends here);
     * leftover trash and a staged-but-unpublished copy are dropped
     * (the intent rode the data, so an unpublished staging dir holds
-    * nothing the table needs).
+    * nothing the table needs). A `<path>_old` stranded by the retired
+    * quiesced compaction's rename-aside is restored first.
     */
   def recoverCompaction(path: String): Unit = {
+    recoverState(path)
     val dir = new java.io.File(path)
     Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory &&
@@ -934,10 +838,22 @@ object Streams {
     rmTree(new java.io.File(path + "_compact"))
   }
 
+  /** Incremental rollup maintenance as a streaming sink — the
+    * `l_rollup_merge` loop run CONTINUOUSLY: every micro-batch folds
+    * into a materialized (day × event_type) aggregate table by
+    * re-summing PARTIAL aggregates. The merge input per batch is
+    * |rollup keys| + |batch keys| rows — days × types, never events —
+    * and value sums stay exact decimals end-to-end, so after any number
+    * of batches the table is bit-identical to a full recompute
+    * (StreamsSpec proves it over a 2-batch time-split replay). The
+    * generation commit keeps the table readable mid-maintenance; at
+    * production scale the same shape lands on a transactional table
+    * format, with the partial-agg merge unchanged.
+    */
   def rollupMaintain(events: DataFrame, rollupPath: String,
       checkpoint: Option[String] = None): StreamingQuery =
     maintainWriter(events, checkpoint) { (batch, id) =>
-      mergeOnceGen(rollupPath, id) {
+      publishGen(rollupPath, id) { (prev, dir) =>
         val sp = batch.sparkSession
         val part = batch
           .groupBy(date_trunc("day", col("ts")).as("day"),
@@ -949,15 +865,13 @@ object Streams {
         // large-state sinks): the rollup table is |days × types| rows
         // but GROWS with retention, and the O(1) pointer flip makes
         // the commit cost independent of that growth
-        val merged = currentGenPath(rollupPath) match {
+        val merged = prev match {
           case None => part
           case Some(p) => sp.read.parquet(p).unionByName(part)
             .groupBy("day", "event_type")
             .agg(sum("n").as("n"), sum("sv").as("sv"))
         }
-        publishGen(rollupPath, id) { dir =>
-          merged.write.mode("overwrite").parquet(dir)
-        }
+        merged.write.mode("overwrite").parquet(dir)
       }
     }
 
@@ -966,31 +880,28 @@ object Streams {
     * forever): rewrite state keeping only rows matching `keep`, behind
     * the generation-layout pointer-flip publish, preserving the
     * exactly-once batch marker so the retry guard survives the
-    * rewrite. Offline like [[compactMaintained]] (quiesced-table
-    * contract). SEMANTIC contract: after vacuuming keys outside the
-    * retention window, the table equals the full recompute RESTRICTED
-    * to the window only while future batches never carry retired keys
-    * (the watermark discipline) — a late out-of-window event would
-    * re-open a retired group from zero, so pair the vacuum predicate
-    * with the source's watermark.
+    * rewrite. Offline (quiesced-table contract). SEMANTIC contract:
+    * after vacuuming keys outside the retention window, the table
+    * equals the full recompute RESTRICTED to the window only while
+    * future batches never carry retired keys (the watermark
+    * discipline) — a late out-of-window event would re-open a retired
+    * group from zero, so pair the vacuum predicate with the source's
+    * watermark.
     */
   def vacuumMaintained(spark: SparkSession, statePath: String,
       keep: org.apache.spark.sql.Column): Unit =
-    currentGenPath(statePath) match {
-      case None =>
-        // legacy or empty dir: loud on legacy state, no-op when empty
-        requireNotLegacy(statePath)
-      case Some(p) =>
-        // gen layout (r14): the rewrite lands as a fresh generation
-        // carrying the SAME batch marker — the exactly-once retry
-        // guard survives the vacuum — and the pointer flip is the
-        // commit, so a reader never sees a half-vacuumed table
-        val id = lastAppliedBatchGen(statePath).getOrElse(
+    // an empty dir is a no-op (legacy state already refused by
+    // commitGen); otherwise the rewrite lands as a fresh generation
+    // carrying the SAME batch marker — the exactly-once retry guard
+    // survives the vacuum — and the pointer flip is the commit, so a
+    // reader never sees a half-vacuumed table
+    commitGen(statePath) { prev =>
+      prev.map { p =>
+        val id = lastAppliedBatch(p).getOrElse(
           sys.error(s"committed generation $p carries no batch marker"))
-        val filtered = spark.read.parquet(p).filter(keep)
-        publishGen(statePath, id) { dir =>
-          filtered.write.mode("overwrite").parquet(dir)
-        }
+        (id, dir => spark.read.parquet(p).filter(keep)
+          .write.mode("overwrite").parquet(dir))
+      }
     }
 
   /** Serialized bloom sketch of `delta`'s join keys, for prefiltering
@@ -1051,7 +962,7 @@ object Streams {
     * `batch=<id>` overwrite subdir writes and the sink is idempotent
     * under foreachBatch retry BY CONSTRUCTION — the prior-state reads
     * EXCLUDE the current batch id, so a retried batch recomputes the
-    * identical view delta (no staged swap or marker needed; this is
+    * identical view delta (no generation commit or marker needed; this is
     * the append discipline, not the merge discipline). Per batch the
     * work is ΔA⋈B + A⋈ΔB + ΔA⋈ΔB — delta-proportional probes of the
     * accumulated sides, never a recomputation of the view, and the
@@ -1130,8 +1041,8 @@ object Streams {
     * IVM identity is a disjoint union for append-only inputs).
     *
     * Retry discipline — the two levels compose cleanly because their
-    * idempotence mechanisms nest: the whole body is mergeOnceGen-
-    * guarded on the AGG (committed last). A crash before the agg
+    * idempotence mechanisms nest: the whole body is marker-guarded
+    * ([[publishGen]]) on the AGG (committed last). A crash before the agg
     * commit re-runs level 1, whose `batch=<id>` overwrites and
     * current-id-excluding prior reads make the re-append a byte-exact
     * no-op, and level 2 then re-merges the identical delta against the
@@ -1156,7 +1067,7 @@ object Streams {
       basePath: String, id: Long, leftKey: String, rightKey: String,
       aggKeys: Seq[String], valueCol: String): Unit = {
     val aggPath = s"$basePath/agg"
-    mergeOnceGen(aggPath, id) {
+    publishGen(aggPath, id) { (prev, dir) =>
       ivmJoinBatch(dA, dB, basePath, id, leftKey, rightKey)
       val sp = dA.sparkSession
       val delta = sp.read.parquet(s"$basePath/view/batch=$id")
@@ -1165,16 +1076,14 @@ object Streams {
         .agg(count(lit(1)).as("n"),
           sum(col(valueCol).cast("decimal(18,2)"))
             .cast("decimal(22,2)").as("sv"))
-      val merged = currentGenPath(aggPath) match {
+      val merged = prev match {
         case None => part
         case Some(p) => sp.read.parquet(p).unionByName(part)
           .groupBy(kc: _*)
           .agg(sum("n").as("n"),
             sum("sv").cast("decimal(22,2)").as("sv"))
       }
-      publishGen(aggPath, id) { dir =>
-        merged.write.mode("overwrite").parquet(dir)
-      }
+      merged.write.mode("overwrite").parquet(dir)
     }
   }
 
@@ -1284,7 +1193,7 @@ object Streams {
     * and the merge is countMaintain's re-sum (n=0 rows dropped;
     * negative residuals RETAINED so out-of-order delete-before-insert
     * nets correctly once the insert lands). Exactly-once: the view
-    * append is a batchId-keyed overwrite computed from the PRE-swap
+    * append is a batchId-keyed overwrite computed from the PRE-commit
     * counts and both writes sit inside the counts marker guard, so a
     * crash between them replays to the identical bytes and a
     * fully-committed batch is skipped whole.
@@ -1303,12 +1212,12 @@ object Streams {
       id: Long, keys: Seq[String], signCol: String): Unit = {
     val cPath = s"$basePath/counts"
     val vPath = s"$basePath/view"
-    mergeOnceGen(cPath, id) {
+    publishGen(cPath, id) { (prevGen, dir) =>
       val sp = batch.sparkSession
       val kc = keys.map(col)
       val d = batch.groupBy(kc: _*)
         .agg(sum(col(signCol).cast("long")).as("dn"))
-      val prev = currentGenPath(cPath) match {
+      val prev = prevGen match {
         case Some(p) => sp.read.parquet(p)
         case None => sp.createDataFrame(
           sp.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -1333,9 +1242,7 @@ object Streams {
       // counts publish through the generation layout (r14); the view
       // log keeps its idempotent batch=<id> append — the count state
       // is the key-space-sized artifact the pointer flip protects
-      publishGen(cPath, id) { dir =>
-        merged.write.mode("overwrite").parquet(dir)
-      }
+      merged.write.mode("overwrite").parquet(dir)
     }
   }
 
@@ -1366,7 +1273,7 @@ object Streams {
   def scd2Maintain(events: DataFrame, statePath: String,
       checkpoint: Option[String] = None): StreamingQuery =
     maintainWriter(events, checkpoint) { (batch, id) =>
-      mergeOnceGen(statePath, id) {
+      publishGen(statePath, id) { (prev, dir) =>
         import org.apache.spark.sql.expressions.Window
         val sp = batch.sparkSession
         val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1374,7 +1281,7 @@ object Streams {
           .withColumn("prev", lag("event_type", 1).over(w))
           .filter(col("prev").isNull || col("prev") =!= col("event_type"))
           .drop("prev")
-        val merged = currentGenPath(statePath) match {
+        val merged = prev match {
           case None => bch
           case Some(p) =>
             val st = sp.read.parquet(p)
@@ -1390,9 +1297,7 @@ object Streams {
               .select("user_id", "event_type", "ts", "event_id")
             st.unionByName(keep)
         }
-        publishGen(statePath, id) { dir =>
-          merged.write.mode("overwrite").parquet(dir)
-        }
+        merged.write.mode("overwrite").parquet(dir)
       }
     }
 
@@ -1419,8 +1324,8 @@ object Streams {
     * dir (`gen=N/marks`, `gen=N/log`) committed by [[publishGen]]'s
     * single pointer flip — the multi-artifact commit is atomic, so no
     * reader or retry can ever observe marks that absorbed a batch
-    * whose log did not (the window the old sequential staged-swaps
-    * left open). `events` appends stay outside the generation dirs
+    * whose log did not (the window two sequential commits would leave
+    * open). `events` appends stay outside the generation dirs
     * (idempotent by construction, and rewriting the bronze table per
     * batch would be O(history)).
     *
@@ -1436,8 +1341,8 @@ object Streams {
     * that is exact in every case). Classification costs one join
     * against the |users|-row marks table — delta-proportional.
     *
-    * Retry safety: the body is mergeOnceGen-guarded on the generation
-    * marker; a crash-retry before the pointer flipped re-runs the
+    * Retry safety: the body is guarded by the generation marker
+    * ([[publishGen]]); a crash-retry before the pointer flipped re-runs the
     * whole body — the events re-append overwrites its own subdir, and
     * marks+log recompute from the still-current PREVIOUS generation
     * (the half-written orphan gen is invisible and gets re-overwritten).
@@ -1459,21 +1364,22 @@ object Streams {
     import org.apache.spark.sql.expressions.Window
     val sp = batch.sparkSession
     val eventsPath = s"$basePath/events"
-    // pre-r14 scd2Late state had top-level marks/log dirs and no
-    // pointer — publishGen's top-level-parquet legacy check cannot see
-    // those SUBDIRS, so guard here or the upgrade silently restarts
-    // the log from empty while `events` keeps the full history
-    require(currentGen(basePath).isDefined ||
-      !new java.io.File(basePath, "log").isDirectory,
-      s"$basePath holds pre-generation scd2Late state (top-level " +
-        "marks/log, no pointer) — merging would silently restart the " +
-        "log; move marks/ and log/ under a gen=0 dir with the log's " +
-        "batch marker at the gen root and write '0' to _graft_current, " +
-        "or delete the dir to genuinely restart accumulation")
-    mergeOnceGen(basePath, id) {
+    publishGen(basePath, id) { (genPath, dir) =>
+      // pre-r14 scd2Late state had top-level marks/log dirs and no
+      // pointer — commitGen's top-level-parquet legacy check cannot
+      // see those SUBDIRS, so guard here or the upgrade silently
+      // restarts the log from empty while `events` keeps the full
+      // history
+      require(genPath.isDefined ||
+        !new java.io.File(basePath, "log").isDirectory,
+        s"$basePath holds pre-generation scd2Late state (top-level " +
+          "marks/log, no pointer) — merging would silently restart the " +
+          "log; move marks/ and log/ under a gen=0 dir with the log's " +
+          "batch marker at the gen root and write '0' to " +
+          "_graft_current, or delete the dir to genuinely restart " +
+          "accumulation")
       val b = batch.select("user_id", "event_type", "ts", "event_id")
       appendBatch(b, eventsPath, id)
-      val genPath = currentGenPath(basePath)
       val priorMarks = genPath.map(p => sp.read.parquet(s"$p/marks"))
       val bAgg = b.groupBy("user_id").agg(
         min(struct(col("ts"), col("event_id"))).as("bmin"),
@@ -1529,11 +1435,9 @@ object Streams {
       }
       // ONE atomic commit for both artifacts: marks and log land in
       // the same generation dir and become visible via publishGen's
-      // single pointer rename
-      publishGen(basePath, id) { dir =>
-        marksMerged.write.mode("overwrite").parquet(s"$dir/marks")
-        merged.write.mode("overwrite").parquet(s"$dir/log")
-      }
+      // single pointer flip
+      marksMerged.write.mode("overwrite").parquet(s"$dir/marks")
+      merged.write.mode("overwrite").parquet(s"$dir/log")
     }
   }
 
@@ -1556,19 +1460,17 @@ object Streams {
       modstamp: String, tiebreak: Seq[String] = Nil,
       checkpoint: Option[String] = None): StreamingQuery =
     maintainWriter(stream, checkpoint) { (batch, id) =>
-      mergeOnceGen(statePath, id) {
+      publishGen(statePath, id) { (prev, dir) =>
         val sp = batch.sparkSession
         val part = graft.etl.Load.latestByKey(batch, key, modstamp,
           tiebreak)
-        val merged = currentGenPath(statePath) match {
+        val merged = prev match {
           case None => part
           case Some(p) => graft.etl.Load.latestByKey(
             sp.read.parquet(p).unionByName(part),
             key, modstamp, tiebreak)
         }
-        publishGen(statePath, id) { dir =>
-          merged.write.mode("overwrite").parquet(dir)
-        }
+        merged.write.mode("overwrite").parquet(dir)
       }
     }
 
@@ -1592,7 +1494,7 @@ object Streams {
   def rollupSignedMaintain(events: DataFrame, rollupPath: String,
       checkpoint: Option[String] = None): StreamingQuery =
     maintainWriter(events, checkpoint) { (batch, id) =>
-      mergeOnceGen(rollupPath, id) {
+      publishGen(rollupPath, id) { (prev, dir) =>
         val sp = batch.sparkSession
         val part = batch
           .groupBy(date_trunc("day", col("ts")).as("day"),
@@ -1610,16 +1512,14 @@ object Streams {
         // rather than silently discarding the mismatched sum.
         val dead = col("n") === 0 &&
           col("sv") === lit(0).cast("decimal(22,4)")
-        val merged = currentGenPath(rollupPath) match {
+        val merged = prev match {
           case None => part.filter(!dead)
           case Some(p) => sp.read.parquet(p).unionByName(part)
             .groupBy("day", "event_type")
             .agg(sum("n").as("n"), sum("sv").as("sv"))
             .filter(!dead)
         }
-        publishGen(rollupPath, id) { dir =>
-          merged.write.mode("overwrite").parquet(dir)
-        }
+        merged.write.mode("overwrite").parquet(dir)
       }
     }
 
@@ -1662,7 +1562,7 @@ object Streams {
   /** One [[minmaxMaintain]] batch merge, factored for the retry spec. */
   private[graft] def minmaxBatch(batch: DataFrame, statePath: String,
       groupCols: Seq[String], valueCol: String, rowKeyCol: String,
-      k: Int, id: Long): Unit = mergeOnceGen(statePath, id) {
+      k: Int, id: Long): Unit = publishGen(statePath, id) { (prevGen, dir) =>
     import org.apache.spark.sql.expressions.Window
     val sp = batch.sparkSession
     val g = groupCols.map(col)
@@ -1671,8 +1571,7 @@ object Streams {
         :+ col(rowKeyCol).cast("long").as("rk"): _*)
     val del = batch.filter(col("sign") === -1)
       .select(g :+ col(rowKeyCol).cast("long").as("rk"): _*)
-    val prev: Option[DataFrame] =
-      currentGenPath(statePath).map(p => sp.read.parquet(p))
+    val prev: Option[DataFrame] = prevGen.map(p => sp.read.parquet(p))
     def prevExpl(side: String): DataFrame = prev match {
       case Some(p) => p.select(g :+ explode(col(side)).as("s"): _*)
         .select(g :+ col("s.v").as("v") :+ col("s.rk").as("rk"): _*)
@@ -1743,10 +1642,8 @@ object Streams {
         "window (≥ k survivor deletions since the last refresh) or " +
         "went count-negative — refusing to publish an unknowable " +
         "MIN/MAX; raise k or refresh the view")
-    publishGen(statePath, id) { dir =>
-      st.filter(col("n") > 0)
-        .write.mode("overwrite").parquet(dir)
-    }
+    st.filter(col("n") > 0)
+      .write.mode("overwrite").parquet(dir)
   }
 
   /** Streaming key-frequency maintenance: a (keyCol, cnt) table merged
@@ -1755,14 +1652,14 @@ object Streams {
     * segment hashes) and incremental IDF (Text.t_tfidf_maintained
     * counts per-word document frequency). Same discipline as
     * rollupMaintain: per-batch partial counts (|batch vocab| rows after
-    * map-side combine), re-sum merge against the stored table, staged
-    * swap with recovery. `prep` shapes each micro-batch into countable
-    * rows BEFORE the count (e.g. explode to segments, or distinct
-    * (doc_id, word) pairs so each doc contributes a word at most once —
-    * valid whenever batches partition the doc space). The maintained
-    * table is |vocabulary|-sized and lives entirely in DataFrames —
-    * never driver state — so the sink scales to corpus-sized
-    * vocabularies. */
+    * map-side combine), re-sum merge against the stored table, one
+    * generation commit ([[publishGen]]). `prep` shapes each
+    * micro-batch into countable rows BEFORE the count (e.g. explode
+    * to segments, or distinct (doc_id, word) pairs so each doc
+    * contributes a word at most once — valid whenever batches
+    * partition the doc space). The maintained table is
+    * |vocabulary|-sized and lives entirely in DataFrames — never
+    * driver state — so the sink scales to corpus-sized vocabularies. */
   def countMaintain(stream: DataFrame, keyCol: String, statePath: String,
       checkpoint: Option[String] = None)(
       prep: DataFrame => DataFrame = identity): StreamingQuery =
@@ -1775,21 +1672,20 @@ object Streams {
     * leave the counts unchanged (StreamsSpec asserts).
     */
   private[graft] def countBatch(batch: DataFrame, keyCol: String,
-      statePath: String, id: Long): Unit = mergeOnceGen(statePath, id) {
-    val sp = batch.sparkSession
-    val part = batch.groupBy(keyCol).agg(count(lit(1)).as("cnt"))
-    // generation-layout publish (r13): the count table is
-    // VOCABULARY-sized — exactly the state size where an O(1)
-    // pointer flip beats a dir-rename double-materialization
-    val merged = currentGenPath(statePath) match {
-      case None => part
-      case Some(p) => sp.read.parquet(p).unionByName(part)
-        .groupBy(keyCol).agg(sum("cnt").as("cnt"))
-    }
-    publishGen(statePath, id) { dir =>
+      statePath: String, id: Long): Unit =
+    publishGen(statePath, id) { (prev, dir) =>
+      val sp = batch.sparkSession
+      val part = batch.groupBy(keyCol).agg(count(lit(1)).as("cnt"))
+      // generation-layout publish (r13): the count table is
+      // VOCABULARY-sized — exactly the state size where an O(1)
+      // pointer flip beats a dir-rename double-materialization
+      val merged = prev match {
+        case None => part
+        case Some(p) => sp.read.parquet(p).unionByName(part)
+          .groupBy(keyCol).agg(sum("cnt").as("cnt"))
+      }
       merged.write.mode("overwrite").parquet(dir)
     }
-  }
 
   /** Generic grouped ADDITIVE-statistics maintenance: state =
     * (keys..., sum columns...) merged across micro-batches by exact
@@ -1817,19 +1713,17 @@ object Streams {
   /** One [[sumsMaintain]] batch merge, factored for the retry spec. */
   private[graft] def sumsBatch(part: DataFrame, keys: Seq[String],
       sums: Seq[String], statePath: String, id: Long): Unit =
-    mergeOnceGen(statePath, id) {
+    publishGen(statePath, id) { (prev, dir) =>
       val sp = part.sparkSession
       def agg(df: DataFrame): DataFrame =
         df.groupBy(keys.map(col): _*)
           .agg(sum(sums.head).as(sums.head),
             sums.tail.map(c => sum(c).as(c)): _*)
-      val merged = currentGenPath(statePath) match {
+      val merged = prev match {
         case None => agg(part)
         case Some(p) => agg(sp.read.parquet(p).unionByName(part))
       }
-      publishGen(statePath, id) { dir =>
-        merged.write.mode("overwrite").parquet(dir)
-      }
+      merged.write.mode("overwrite").parquet(dir)
     }
 
   /** Streaming heavy-hitters: a Misra-Gries summary of a key column
@@ -1851,41 +1745,41 @@ object Streams {
       statePath: String, k: Int,
       checkpoint: Option[String] = None): StreamingQuery =
     maintainWriter(events, checkpoint) { (batch, id) =>
-      mergeOnce(statePath, id) {
-        val sp = batch.sparkSession
-        import sp.implicits._
-        val row = batch.agg(
-          graft.functions.HeavyHitters.mgSketchCol(col(keyCol), k)
-            .as("mg"),
-          count(lit(1)).as("n")).head()
-        val batchSketch = Option(row.getMap[String, Long](0))
-          .map(_.toMap).getOrElse(Map.empty[String, Long])
-        val batchN = row.getLong(1)
-        val cur = new java.io.File(statePath)
-        val (prevSketch, prevN) =
-          if (!cur.exists()) (Map.empty[String, Long], 0L)
-          else {
-            val stored = sp.read.parquet(statePath)
-            // the on-disk format changed from (key, est) rows with a
-            // __n__ sentinel to a single (n, mg-map) row — surface a
-            // clear remediation instead of an opaque encoder error
-            require(stored.columns.toSet == Set("n", "mg"),
-              s"heavy-hitters state at $statePath has columns " +
-                s"${stored.columns.mkString("(", ", ", ")")} — this is " +
-                "the pre-(n, mg) legacy layout (or not MG state at " +
-                "all); delete the statePath to restart accumulation")
-            val st = stored.as[(Long, Map[String, Long])].head()
-            (st._2, st._1)
-          }
-        val merged = graft.functions.HeavyHitters
-          .mergeSummaries(prevSketch, batchSketch, k)
-        val staged = statePath + s"_stage$id"
-        Seq((prevN + batchN, merged))
-          .toDF("n", "mg")
-          .coalesce(1).write.mode("overwrite").parquet(staged)
-        markBatch(staged, id)
-        stagedSwap(staged, statePath)
+      heavyHittersBatch(batch, keyCol, statePath, k, id)
+    }
+
+  /** One [[heavyHittersMaintain]] batch merge, factored for the retry
+    * and crash specs. */
+  private[graft] def heavyHittersBatch(batch: DataFrame, keyCol: String,
+      statePath: String, k: Int, id: Long): Unit =
+    publishGen(statePath, id) { (prev, dir) =>
+      val sp = batch.sparkSession
+      import sp.implicits._
+      val row = batch.agg(
+        graft.functions.HeavyHitters.mgSketchCol(col(keyCol), k).as("mg"),
+        count(lit(1)).as("n")).head()
+      val batchSketch = Option(row.getMap[String, Long](0))
+        .map(_.toMap).getOrElse(Map.empty[String, Long])
+      val batchN = row.getLong(1)
+      val (prevSketch, prevN) = prev match {
+        case None => (Map.empty[String, Long], 0L)
+        case Some(p) =>
+          val stored = sp.read.parquet(p)
+          // the on-disk format changed from (key, est) rows with a
+          // __n__ sentinel to a single (n, mg-map) row — surface a
+          // clear remediation instead of an opaque encoder error
+          require(stored.columns.toSet == Set("n", "mg"),
+            s"heavy-hitters state at $statePath has columns " +
+              s"${stored.columns.mkString("(", ", ", ")")} — this is " +
+              "the pre-(n, mg) legacy layout (or not MG state at " +
+              "all); delete the statePath to restart accumulation")
+          val st = stored.as[(Long, Map[String, Long])].head()
+          (st._2, st._1)
       }
+      val merged = graft.functions.HeavyHitters
+        .mergeSummaries(prevSketch, batchSketch, k)
+      Seq((prevN + batchN, merged)).toDF("n", "mg")
+        .coalesce(1).write.mode("overwrite").parquet(dir)
     }
 
   /** Streaming count-min: the CM grid maintained across micro-batches.
@@ -1901,34 +1795,35 @@ object Streams {
       statePath: String, width: Int,
       checkpoint: Option[String] = None): StreamingQuery =
     maintainWriter(events, checkpoint) { (batch, id) =>
-      mergeOnce(statePath, id) {
-        val sp = batch.sparkSession
-        import sp.implicits._
-        val row = batch.agg(
-          graft.functions.HeavyHitters.cmSketchCol(col(keyCol), width)
-            .as("cm"),
-          count(lit(1)).as("n")).head()
-        val batchGrid = row.getSeq[Long](0).toArray
-        val batchN = row.getLong(1)
-        val cur = new java.io.File(statePath)
-        val (grid, n) =
-          if (!cur.exists()) (batchGrid, batchN)
-          else {
-            val st = sp.read.parquet(statePath)
-              .as[(Long, Array[Long])].head()
-            val g = st._2
-            require(g.length == batchGrid.length,
-              "count-min width/depth changed mid-stream")
-            var i = 0
-            while (i < g.length) { g(i) += batchGrid(i); i += 1 }
-            (g, st._1 + batchN)
-          }
-        val staged = statePath + s"_stage$id"
-        Seq((n, grid)).toDF("n", "grid")
-          .coalesce(1).write.mode("overwrite").parquet(staged)
-        markBatch(staged, id)
-        stagedSwap(staged, statePath)
+      countMinBatch(batch, keyCol, statePath, width, id)
+    }
+
+  /** One [[countMinMaintain]] batch merge, factored for the retry and
+    * crash specs. */
+  private[graft] def countMinBatch(batch: DataFrame, keyCol: String,
+      statePath: String, width: Int, id: Long): Unit =
+    publishGen(statePath, id) { (prev, dir) =>
+      val sp = batch.sparkSession
+      import sp.implicits._
+      val row = batch.agg(
+        graft.functions.HeavyHitters.cmSketchCol(col(keyCol), width)
+          .as("cm"),
+        count(lit(1)).as("n")).head()
+      val batchGrid = row.getSeq[Long](0).toArray
+      val batchN = row.getLong(1)
+      val (grid, n) = prev match {
+        case None => (batchGrid, batchN)
+        case Some(p) =>
+          val st = sp.read.parquet(p).as[(Long, Array[Long])].head()
+          val g = st._2
+          require(g.length == batchGrid.length,
+            "count-min width/depth changed mid-stream")
+          var i = 0
+          while (i < g.length) { g(i) += batchGrid(i); i += 1 }
+          (g, st._1 + batchN)
       }
+      Seq((n, grid)).toDF("n", "grid")
+        .coalesce(1).write.mode("overwrite").parquet(dir)
     }
 
   /** Streaming top-k-per-group maintenance — the continuously-current
@@ -1953,7 +1848,7 @@ object Streams {
   /** One [[topkMaintain]] batch merge, factored for the retry spec. */
   private[graft] def topkBatch(batch: DataFrame, statePath: String,
       groupCol: String, k: Int, order: Seq[Column],
-      id: Long): Unit = mergeOnceGen(statePath, id) {
+      id: Long): Unit = publishGen(statePath, id) { (prev, dir) =>
     import org.apache.spark.sql.expressions.Window
     val sp = batch.sparkSession
     def topOf(df: DataFrame): DataFrame =
@@ -1961,13 +1856,11 @@ object Streams {
           Window.partitionBy(groupCol).orderBy(order: _*)))
         .filter(col("__rn") <= k).drop("__rn")
     val part = topOf(batch)
-    val merged = currentGenPath(statePath) match {
+    val merged = prev match {
       case None => part
       case Some(p) => topOf(sp.read.parquet(p).unionByName(part))
     }
-    publishGen(statePath, id) { dir =>
-      merged.write.mode("overwrite").parquet(dir)
-    }
+    merged.write.mode("overwrite").parquet(dir)
   }
 
   /** Streaming distinct-cardinality maintenance: a Datasketches HLL
@@ -1977,12 +1870,13 @@ object Streams {
     * merge is the HLL UNION, not a re-sum. Each batch sketches
     * DISTRIBUTED (`hll_sketch_agg`: per-partition sketches, one KB
     * final merge); maintenance unions two KB blobs — O(2^lgK)
-    * regardless of stream size — through the same staged-swap +
-    * exactly-once marker discipline. State = one (n, hll binary) row;
-    * the union estimate carries the same relative-error guarantee as a
-    * one-shot sketch over the whole prefix (mergeability is the
-    * datasketches design point), which is what the registered verdict
-    * checks against the exact distinct count.
+    * regardless of stream size — through the same generation commit
+    * and exactly-once marker as the other merge sinks. State = one
+    * (n, hll binary) row; the union estimate carries the same
+    * relative-error guarantee as a one-shot sketch over the whole
+    * prefix (mergeability is the datasketches design point), which is
+    * what the registered verdict checks against the exact distinct
+    * count.
     */
   def hllMaintain(events: DataFrame, keyCol: String, statePath: String,
       lgConfigK: Int = 12,
@@ -1994,7 +1888,7 @@ object Streams {
   /** One [[hllMaintain]] batch merge, factored for the retry spec. */
   private[graft] def hllBatch(batch: DataFrame, keyCol: String,
       statePath: String, lgConfigK: Int, id: Long): Unit =
-    mergeOnce(statePath, id) {
+    publishGen(statePath, id) { (prev, dir) =>
       val sp = batch.sparkSession
       import sp.implicits._
       val row = batch.agg(
@@ -2002,24 +1896,19 @@ object Streams {
         count(lit(1)).as("n")).head()
       val batchSketch = row.getAs[Array[Byte]](0)
       val batchN = row.getLong(1)
-      val cur = new java.io.File(statePath)
-      val (merged, n) =
-        if (!cur.exists()) (batchSketch, batchN)
-        else {
-          val st = sp.read.parquet(statePath)
-            .as[(Long, Array[Byte])].head()
+      val (merged, n) = prev match {
+        case None => (batchSketch, batchN)
+        case Some(p) =>
+          val st = sp.read.parquet(p).as[(Long, Array[Byte])].head()
           // the union runs engine-side (same datasketches build both
           // times) over two KB blobs — one 1-row job, never a rescan
           val u = Seq((st._2, batchSketch)).toDF("a", "b")
             .select(hll_union(col("a"), col("b")).as("u"))
             .head().getAs[Array[Byte]](0)
           (u, st._1 + batchN)
-        }
-      val staged = statePath + s"_stage$id"
+      }
       Seq((n, merged)).toDF("n", "hll")
-        .coalesce(1).write.mode("overwrite").parquet(staged)
-      markBatch(staged, id)
-      stagedSwap(staged, statePath)
+        .coalesce(1).write.mode("overwrite").parquet(dir)
     }
 
   /** PER-KEY distinct-cardinality maintenance — the GROUP BY form of
@@ -2044,13 +1933,13 @@ object Streams {
   /** One [[hllByKeyMaintain]] batch merge, factored for the retry spec. */
   private[graft] def hllByKeyBatch(batch: DataFrame, keyCol: String,
       valCol: String, statePath: String, lgConfigK: Int,
-      id: Long): Unit = mergeOnceGen(statePath, id) {
+      id: Long): Unit = publishGen(statePath, id) { (prev, dir) =>
     val sp = batch.sparkSession
     val part = batch
       .groupBy(col(keyCol).cast("string").as("key"))
       .agg(hll_sketch_agg(col(valCol), lit(lgConfigK)).as("bh"),
         count(lit(1)).as("bn"))
-    val merged = currentGenPath(statePath) match {
+    val merged = prev match {
       case None => part.select(col("key"), col("bh").as("hll"),
         col("bn").as("n"))
       case Some(p) =>
@@ -2064,9 +1953,7 @@ object Streams {
             (coalesce(col("pn"), lit(0L)) + coalesce(col("bn"), lit(0L)))
               .as("n"))
     }
-    publishGen(statePath, id) { dir =>
-      merged.write.mode("overwrite").parquet(dir)
-    }
+    merged.write.mode("overwrite").parquet(dir)
   }
 
   /** Streaming quantile maintenance: a per-key mergeable quantile
@@ -2096,11 +1983,11 @@ object Streams {
 
   /** One [[quantileMaintain]] batch merge, factored out so the retry
     * path is directly testable: calling it twice with the same id must
-    * leave the state unchanged (the mergeOnce marker guard).
+    * leave the state unchanged (the [[publishGen]] marker guard).
     */
   private[graft] def quantileBatch(batch: DataFrame, keyCol: String,
       valueCol: String, statePath: String, k: Int,
-      id: Long): Unit = mergeOnceGen(statePath, id) {
+      id: Long): Unit = publishGen(statePath, id) { (prevGen, dir) =>
     val sp = batch.sparkSession
     import sp.implicits._
     import graft.functions.{QSketch, QuantileSketch}
@@ -2110,7 +1997,7 @@ object Streams {
       .agg(QuantileSketch.qsketchCol(col(valueCol).cast("double"), k)
         .as("qs"))
       .as[(String, QSketch)]
-    val merged = currentGenPath(statePath) match {
+    val merged = prevGen match {
       case None => part
       case Some(p) =>
         val prev = sp.read.parquet(p)
@@ -2121,18 +2008,14 @@ object Streams {
             (key, it.map(_._2).reduce(QuantileSketch.merge))
           }
     }
-    publishGen(statePath, id) { dir =>
-      merged.toDF("key", "qs")
-        .write.mode("overwrite").parquet(dir)
-    }
+    merged.toDF("key", "qs").write.mode("overwrite").parquet(dir)
   }
 
-  // ---- Generation-pointer state layout (ROADMAP r13 #6) ----
+  // ---- Generation-pointer state layout: the one commit protocol ----
   //
-  // The staged-swap publish renames the whole state dir twice per
-  // batch and briefly double-materializes it; on an object store
-  // (no atomic dir rename) that is copy-sized. The generation layout
-  // makes publishing O(1) AT ANY STATE SIZE: state lives in
+  // Every maintained merge table commits here, and publishing is O(1)
+  // AT ANY STATE SIZE, with no dir renames (on an object store a
+  // rename is copy-sized): state lives in
   // `statePath/gen=N/` subdirs, and the only mutation that commits a
   // batch is publishing a new value of the `_graft_current` pointer
   // through the pluggable [[GenPointerStore]]: the publisher reads the
@@ -2142,7 +2025,7 @@ object Streams {
   // rename is not atomic, the protocol needs only the store's native
   // conditional PUT; state files themselves are written once and never
   // renamed. A failed condition means a concurrent publisher committed
-  // since the read — publishGen refuses LOUDLY instead of silently
+  // since the read — commitGen refuses LOUDLY instead of silently
   // orphaning the winner's generation (the lost-update rejection
   // GenPointerSpec races against a fake object store) — and because
   // every attempt writes into a publisher-unique `gen=N-<nonce>` dir
@@ -2152,15 +2035,16 @@ object Streams {
   // was loud but the data-plane interleave was not). The default
   // binding is [[PosixGenPointer]] (pointer file + advisory-locked
   // compare-and-set). Each gen dir carries its own batch marker, so
-  // the exactly-once retry guard reads through the pointer. Crash
+  // the exactly-once retry guard reads through the SAME pointer read
+  // that names the merge's previous generation and the flip's If-Match
+  // token ([[commitGen]]). Crash
   // windows: before the flip, the old pointer stands, the retry
   // publishes a fresh uniquely-named gen, and the crashed attempt's
   // dir is unreferenced garbage; after the flip, the new state is live
   // and any stale gens are garbage. GC keeps the current AND previous
   // generation NUMBER (a reader that resolved the pointer just before
-  // a flip still has its files — the grace window stagedSwap never
-  // had) and deletes older ones — including crash/loser orphans whose
-  // number has aged out — best-effort.
+  // a flip still has its files) and deletes older ones — including
+  // crash/loser orphans whose number has aged out — best-effort.
 
   private def pointerOf(statePath: String): GenPointerStore =
     GenPointerStore.forPath(statePath)
@@ -2178,7 +2062,7 @@ object Streams {
   def readGenMaintained(spark: SparkSession, statePath: String): DataFrame =
     spark.read.parquet(currentGenPath(statePath).getOrElse(
       sys.error(s"no committed generation under $statePath — if this " +
-        "dir holds pre-generation staged-swap state, run " +
+        "dir holds pre-generation state, run " +
         "Streams.migrateToGenLayout(path) once")))
 
   /** Read ONE named artifact of a multi-artifact generation (e.g.
@@ -2191,7 +2075,7 @@ object Streams {
     spark.read.parquet(currentGenPath(statePath).map(p => s"$p/$artifact")
       .getOrElse(sys.error(
         s"no committed generation under $statePath — if this dir holds " +
-          "pre-generation staged-swap state, migrate it to the " +
+          "pre-generation state, migrate it to the " +
           "generation layout first")))
 
   /** Batch marker of the CURRENT generation — [[lastAppliedBatch]]
@@ -2199,28 +2083,26 @@ object Streams {
   private[graft] def lastAppliedBatchGen(statePath: String): Option[Long] =
     currentGenPath(statePath).flatMap(lastAppliedBatch)
 
-  private def mergeOnceGen(statePath: String, id: Long)(
-      body: => Unit): Unit =
-    if (!lastAppliedBatchGen(statePath).exists(_ >= id)) body
-
-  /** A state dir that predates the generation layout: data files at
-    * the top level with no pointer. Treating it as empty would be
-    * SILENT STATE LOSS on upgrade — refuse loudly instead (the HH
-    * legacy-layout precedent) and point at [[migrateToGenLayout]]. */
+  /** A pointer-less state dir that predates the generation layout:
+    * data files at the top level, or only the `<path>_old` copy a crash
+    * stranded mid-rename. Treating it as empty would be SILENT STATE
+    * LOSS on upgrade — refuse loudly instead (the HH legacy-layout
+    * precedent) and point at [[migrateToGenLayout]]. Callers have
+    * already read the pointer and found none. */
   private def requireNotLegacy(statePath: String): Unit = {
-    val dir = new java.io.File(statePath)
-    if (dir.isDirectory &&
-        pointerOf(statePath).read(statePath).isEmpty) {
-      val files = Option(dir.listFiles()).getOrElse(Array.empty)
-      require(!files.exists(f => f.getName.endsWith(".parquet")),
-        s"$statePath holds pre-generation-layout state (top-level " +
-          "parquet, no pointer) — merging would silently restart " +
-          "from empty; run Streams.migrateToGenLayout(path) once, " +
-          "or delete the dir to genuinely restart accumulation")
-    }
+    val files = Option(new java.io.File(statePath).listFiles())
+      .getOrElse(Array.empty)
+    require(!files.exists(f => f.getName.endsWith(".parquet")) &&
+      !new java.io.File(statePath + "_old").exists(),
+      s"$statePath holds pre-generation-layout state (top-level " +
+        "parquet or a stranded _old, no pointer) — merging would " +
+        "silently restart from empty; run " +
+        "Streams.migrateToGenLayout(path) once, or delete the dir to " +
+        "genuinely restart accumulation")
   }
 
-  /** One-time upgrade of a staged-swap-era state dir to the
+  /** One-time upgrade of a pre-generation (rename-aside era) state dir
+    * to the
     * generation layout: the existing top-level state becomes gen=0
     * (batch marker carried along if present) and the pointer commits
     * it. Idempotent — a dir already carrying a pointer is left
@@ -2253,8 +2135,8 @@ object Streams {
     * commits every few seconds) raise it with -Dgraft.gen.keep=N —
     * disk cost is N×|state|, read cost is unchanged (readers scan one
     * generation). Values below 2 are refused: keep=1 would delete the
-    * generation a just-resolved reader is scanning, reintroducing the
-    * stagedSwap race the layout exists to close. */
+    * generation a just-resolved reader is scanning — the reader race
+    * the layout exists to close. */
   private[graft] def genKeep: Int = {
     val k = Integer.getInteger("graft.gen.keep", 2).intValue()
     require(k >= 2, s"graft.gen.keep=$k — must be >= 2 (the current " +
@@ -2262,51 +2144,87 @@ object Streams {
     k
   }
 
-  /** Commit one batch under the generation layout: `write` lands the
-    * new state into a PUBLISHER-UNIQUE next-gen dir (`gen=N-<nonce>`
-    * — so a concurrent publisher racing the same generation number,
-    * or a retry after a crash, physically cannot write into a dir
-    * another attempt produced; the r18-advice data-plane interleave
-    * is closed by construction, not by the pointer check), the batch
-    * marker lands inside it, and the CONDITIONAL PUT of the pointer —
-    * If-Match on the version token this publish resolved, committing
-    * this attempt's dir LABEL — is the single atomic commit point. A
-    * failed condition (a concurrent publisher committed since the
-    * read) refuses loudly: the uniquely-named orphan gen dir is
-    * garbage, never state — no pointer value ever names it — and the
-    * caller knows its batch did NOT commit. Then GC generations whose
-    * numeric prefix falls beyond the [[genKeep]] retention depth
-    * (which also sweeps crash/loser orphans once the cutoff passes
-    * their generation number). */
-  private[graft] def publishGen(statePath: String, id: Long)(
-      write: String => Unit): Unit = {
+  /** THE commit of the generation layout — every maintained-state
+    * write goes through here ([[publishGen]] for merges,
+    * [[vacuumMaintained]] for the retention rewrite). It reads the
+    * pointer ONCE, and that one read is all three inputs of the commit:
+    * `plan` gets the committed generation's dir (None = empty state) —
+    * from which it reads the exactly-once marker and the previous
+    * state — and the flip is a CONDITIONAL PUT If-Match that read's
+    * version token. So a publisher that committed anywhere after the
+    * read makes the flip fail loudly: this commit can never merge onto
+    * a generation older than the one it replaces (the lost update a
+    * second pointer read would reopen — GenPointerSpec interleaves a
+    * concurrent commit after every read a commit makes).
+    *
+    * `plan` returns None to skip, or the batch marker to record plus
+    * `write`, which lands the new state into a PUBLISHER-UNIQUE
+    * next-gen dir (`gen=N-<nonce>` — so a concurrent publisher racing
+    * the same generation number, or a retry after a crash, physically
+    * cannot write into a dir another attempt produced). The batch
+    * marker lands inside it, and the pointer flip — committing this
+    * attempt's dir LABEL — is the single atomic commit point. A failed
+    * condition refuses loudly: the orphan gen dir is garbage, never
+    * state — no pointer value ever names it — and the caller knows its
+    * batch did NOT commit. Then GC generations whose numeric prefix
+    * falls beyond the [[genKeep]] retention depth (which also sweeps
+    * crash/loser orphans once the cutoff passes their generation
+    * number). */
+  private def commitGen(statePath: String)(
+      plan: Option[String] => Option[(Long, String => Unit)]): Unit = {
     val keep = genKeep // validate the knob BEFORE any state mutation
-    requireNotLegacy(statePath)
     val store = pointerOf(statePath)
     val cur = store.read(statePath)
-    val next = cur.map(c => GenPointerStore.genOf(c._1) + 1).getOrElse(0L)
-    val nonce = java.lang.Long.toHexString(
-      java.util.concurrent.ThreadLocalRandom.current().nextLong())
-    val label = s"$next-$nonce"
-    val dir = s"$statePath/gen=$label"
-    write(dir)
-    markBatch(dir, id)
-    require(store.putIf(statePath, label, cur.map(_._2)),
-      s"generation pointer flip under $statePath lost a race: " +
-        "another publisher committed after this batch resolved the " +
-        "pointer — this batch's write is an uncommitted orphan " +
-        "(two concurrent maintainers on one state dir)")
-    val cutoff = next - (keep - 1)
-    Option(new java.io.File(statePath).listFiles())
-      .getOrElse(Array.empty)
-      .filter { f =>
-        f.getName.startsWith("gen=") &&
-          scala.util.Try(
-            GenPointerStore.genOf(f.getName.stripPrefix("gen=")))
-            .toOption.exists(_ < cutoff)
-      }
-      .foreach(rmTree)
+    if (cur.isEmpty) requireNotLegacy(statePath)
+    plan(cur.map(c => s"$statePath/gen=${c._1}")).foreach {
+      case (id, write) =>
+        val next =
+          cur.map(c => GenPointerStore.genOf(c._1) + 1).getOrElse(0L)
+        val nonce = java.lang.Long.toHexString(
+          java.util.concurrent.ThreadLocalRandom.current().nextLong())
+        val label = s"$next-$nonce"
+        val dir = s"$statePath/gen=$label"
+        write(dir)
+        markBatch(dir, id)
+        require(store.putIf(statePath, label, cur.map(_._2)),
+          s"generation pointer flip under $statePath lost a race: " +
+            "another publisher committed after this batch resolved the " +
+            "pointer — this batch's write is an uncommitted orphan " +
+            "(two concurrent maintainers on one state dir)")
+        val cutoff = next - (keep - 1)
+        Option(new java.io.File(statePath).listFiles())
+          .getOrElse(Array.empty)
+          .filter { f =>
+            f.getName.startsWith("gen=") &&
+              scala.util.Try(
+                GenPointerStore.genOf(f.getName.stripPrefix("gen=")))
+                .toOption.exists(_ < cutoff)
+          }
+          .foreach(rmTree)
+    }
   }
+
+  /** Merge one batch `id` into generation-layout state, exactly once
+    * under foreachBatch's at-least-once redelivery: a crash AFTER the
+    * flip but BEFORE the streaming checkpoint recorded the batch
+    * redelivers rows the state already includes, and a re-sum merge
+    * would double-count them. `merge(prev, dir)` runs only when the
+    * committed generation's marker is below `id`; it reads the
+    * previous state from `prev` (None = first batch) and writes the
+    * merged state into `dir`. A crash before the flip leaves the
+    * previous marker, so the retry re-merges (correct); a crash after
+    * leaves this id, so the retry skips (correct — StreamsSpec drives
+    * both). BatchIds are monotone within ONE checkpoint lineage, which
+    * is the scope of the guarantee: the maintained state and its
+    * checkpoint must live and die together — restarting with a fresh
+    * checkpoint against old state restarts ids at 0, so pair a fresh
+    * statePath with any fresh checkpoint. */
+  private[graft] def publishGen(statePath: String, id: Long)(
+      merge: (Option[String], String) => Unit): Unit =
+    commitGen(statePath) { prev =>
+      if (prev.flatMap(lastAppliedBatch).exists(_ >= id)) None
+      else Some((id, dir => merge(prev, dir)))
+    }
 
   /** Streaming t-digest maintenance: [[quantileMaintain]]'s discipline
     * with [[graft.functions.TDigest]] state — the OTHER mergeable
@@ -2317,12 +2235,6 @@ object Streams {
     * the same verdict pattern is what makes the TDigestSpec
     * rank-error-per-byte head-to-head honest: same replay, same merge
     * discipline, same exactly-once marker.
-    *
-    * This sink is the generation-layout PIONEER: it publishes through
-    * [[publishGen]] (pointer flip, no data renames) instead of
-    * [[stagedSwap]], and its reader is [[readGenMaintained]]. The
-    * other merge sinks migrate mechanically — same mergeOnce guard,
-    * same marker, only the publish step changes.
     */
   def tdigestMaintain(events: DataFrame, keyCol: String,
       valueCol: String, statePath: String, delta: Int,
@@ -2334,7 +2246,7 @@ object Streams {
   /** One [[tdigestMaintain]] batch merge, factored for the retry spec. */
   private[graft] def tdigestBatch(batch: DataFrame, keyCol: String,
       valueCol: String, statePath: String, delta: Int,
-      id: Long): Unit = mergeOnceGen(statePath, id) {
+      id: Long): Unit = publishGen(statePath, id) { (prevGen, dir) =>
     val sp = batch.sparkSession
     import sp.implicits._
     import graft.functions.{TDig, TDigest}
@@ -2344,7 +2256,7 @@ object Streams {
       .agg(TDigest.tdigestCol(col(valueCol).cast("double"), delta)
         .as("td"))
       .as[(String, TDig)]
-    val merged = currentGenPath(statePath) match {
+    val merged = prevGen match {
       case None => part
       case Some(p) =>
         val prev = sp.read.parquet(p)
@@ -2355,9 +2267,7 @@ object Streams {
             (key, it.map(_._2).reduce(TDigest.merge))
           }
     }
-    publishGen(statePath, id) { dir =>
-      merged.toDF("key", "td").write.mode("overwrite").parquet(dir)
-    }
+    merged.toDF("key", "td").write.mode("overwrite").parquet(dir)
   }
 
   /** t-digest maintenance under DELETIONS: signed micro-batches split
@@ -2382,7 +2292,7 @@ object Streams {
     * retry spec. */
   private[graft] def tdigestSignedBatch(batch: DataFrame, keyCol: String,
       valueCol: String, statePath: String, delta: Int,
-      id: Long): Unit = mergeOnceGen(statePath, id) {
+      id: Long): Unit = publishGen(statePath, id) { (prevGen, dir) =>
     val sp = batch.sparkSession
     import sp.implicits._
     import graft.functions.{TDig, TDigest}
@@ -2395,7 +2305,7 @@ object Streams {
       .map { case (k, t) => (k, tag, t) }
     val parts = sketch(batch.filter(col("sign") === 1), "i")
       .union(sketch(batch.filter(col("sign") === -1), "d"))
-    val prevRows = currentGenPath(statePath) match {
+    val prevRows = prevGen match {
       case None => sp.emptyDataset[(String, String, TDig)]
       case Some(p) => sp.read.parquet(p)
         .select("key", "ti", "td").as[(String, TDig, TDig)]
@@ -2410,12 +2320,14 @@ object Streams {
         }.reduceOption(TDigest.merge).getOrElse(TDigest.empty(delta))
         (key, of("i"), of("d"))
       }
-    publishGen(statePath, id) { dir =>
-      merged.toDF("key", "ti", "td")
-        .write.mode("overwrite").parquet(dir)
-    }
+    merged.toDF("key", "ti", "td").write.mode("overwrite").parquet(dir)
   }
 
+  /** Run a streaming query to completion over the files currently present
+    * (Trigger.AvailableNow — the batch-parity mode), writing to an
+    * in-memory table. Returns the drained query. This is the "bulk job"
+    * lifecycle: start → InProgress → JobComplete.
+    */
   def runAvailableNow(df: DataFrame, name: String,
       outputMode: String = "append",
       timeoutMs: Long = 600000): StreamingQuery = {

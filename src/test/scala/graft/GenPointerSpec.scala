@@ -37,6 +37,33 @@ final class FakeObjectStore extends GenPointerStore {
     read(statePath).map(c => c._1.takeWhile(_.isDigit).toLong).get
 }
 
+/** A pointer-store wrapper that counts `read`s and, once armed, runs a
+  * concurrent commit right after the N-th one — the caller still gets
+  * the value read BEFORE that commit, which is exactly a publisher
+  * being overtaken between two of its own steps. Single-threaded: the
+  * interleaved commit runs inline and its own reads do not re-fire. */
+final class InterleavingStore(inner: GenPointerStore) extends GenPointerStore {
+  var reads = 0
+  private var fireAt = 0
+  private var concurrent: () => Unit = () => ()
+
+  /** Reset the count; after the `n`-th read from now, run `commit`
+    * once (n = 0: never). */
+  def arm(n: Int)(commit: => Unit): Unit = {
+    reads = 0; fireAt = n; concurrent = () => commit
+  }
+
+  def read(statePath: String): Option[(String, String)] = {
+    val r = inner.read(statePath)
+    reads += 1
+    if (reads == fireAt) { fireAt = 0; concurrent() }
+    r
+  }
+
+  def putIf(statePath: String, label: String,
+      expect: Option[String]): Boolean = inner.putIf(statePath, label, expect)
+}
+
 /** The gen layout's object-store contract: commits go through ONE
   * conditional PUT of the pointer, lost updates are rejected (not
   * silently absorbed), and a maintained table stays byte-identical to
@@ -78,7 +105,8 @@ class GenPointerSpec extends SparkTestBase {
     val store = new FakeObjectStore
     GenPointerStore.bind(statePath, store)
     try {
-      def writeMarkerFileOnly(tag: String): String => Unit = dir => {
+      def writeMarkerFileOnly(tag: String)(
+          prev: Option[String], dir: String): Unit = {
         new java.io.File(dir).mkdirs()
         java.nio.file.Files.write(
           new java.io.File(dir, s"$tag.txt").toPath,
@@ -93,8 +121,8 @@ class GenPointerSpec extends SparkTestBase {
       // conditional flip must fail loudly — its generation is an
       // uncommitted orphan, never silently "committed over" B's.
       val e = intercept[IllegalArgumentException] {
-        Streams.publishGen(statePath, 1L) { dir =>
-          writeMarkerFileOnly("a")(dir)
+        Streams.publishGen(statePath, 1L) { (prev, dir) =>
+          writeMarkerFileOnly("a")(prev, dir)
           Streams.publishGen(statePath, 1L)(writeMarkerFileOnly("b"))
         }
       }
@@ -158,6 +186,53 @@ class GenPointerSpec extends SparkTestBase {
         .sorted.toSeq
       assert(gens(posixPath) == gens(storePath))
     } finally GenPointerStore.unbind(storePath)
+  }
+
+  test("lost-update window: a commit that lands after ANY of a merge's " +
+      "pointer reads is either counted or refused — never silently " +
+      "dropped") {
+    // The commit's reads of the pointer are all its inputs: the
+    // exactly-once marker, the previous generation it merges onto, and
+    // the If-Match token of the flip. If those came from DIFFERENT
+    // reads, a publisher committing between them would have its batch
+    // merged away while the flip still succeeds on the fresh token. So
+    // interleave a concurrent commit (batch 1) after EVERY read the
+    // victim's commit (batch 2) makes: each outcome must either count
+    // both batches, or refuse the victim loudly so its retry does.
+    import spark.implicits._
+    val b0 = Seq("a").toDF("k")
+    val b1 = Seq("b", "b").toDF("k")
+    val b2 = Seq("c").toDF("k")
+    def fresh(): (String, InterleavingStore) = {
+      val p = tmpDir("genstore_lost") + "/st"
+      val store = new InterleavingStore(new FakeObjectStore)
+      GenPointerStore.bind(p, store)
+      Streams.countBatch(b0, "k", p, 0L)
+      (p, store)
+    }
+    def state(p: String) = Streams.readGenMaintained(spark, p)
+      .as[(String, Long)].collect().toMap
+    val (probe, probeStore) = fresh()
+    val readsPerCommit = try {
+      probeStore.arm(0)(())
+      Streams.countBatch(b2, "k", probe, 2L)
+      probeStore.reads
+    } finally GenPointerStore.unbind(probe)
+    assert(readsPerCommit >= 1)
+    for (n <- 1 to readsPerCommit) {
+      val (p, store) = fresh()
+      try {
+        store.arm(n)(Streams.countBatch(b1, "k", p, 1L))
+        val refused = try { Streams.countBatch(b2, "k", p, 2L); None }
+        catch { case e: IllegalArgumentException => Some(e.getMessage) }
+        refused.foreach { msg =>
+          assert(msg.contains("lost a race"), s"read $n: $msg")
+          Streams.countBatch(b2, "k", p, 2L) // the foreachBatch retry
+        }
+        assert(state(p) == Map("a" -> 1L, "b" -> 2L, "c" -> 1L),
+          s"a commit after read $n of $readsPerCommit was lost")
+      } finally GenPointerStore.unbind(p)
+    }
   }
 
   test("list-after-put: a reader of a just-flipped pointer sees the " +
@@ -250,12 +325,12 @@ class GenPointerSpec extends SparkTestBase {
       // builder A resolves the (absent) pointer; DURING its artifact
       // writes, builder B completes the same cold build and flips
       // first. A's conditional flip must fail loudly — the
-      // single-publisher ASSUMPTION maintainedDir documented is an
-      // ENFORCED guarantee under the generation layout.
+      // single-publisher ASSUMPTION a marker-file build would rest on
+      // is an ENFORCED guarantee under the generation layout.
       val e = intercept[IllegalArgumentException] {
-        Streams.publishGen(statePath, 0L) { g =>
+        Streams.publishGen(statePath, 0L) { (_, g) =>
           dists.write.mode("overwrite").parquet(s"$g/dists")
-          Streams.publishGen(statePath, 0L) { g2 =>
+          Streams.publishGen(statePath, 0L) { (_, g2) =>
             dists.write.mode("overwrite").parquet(s"$g2/dists")
           }
         }

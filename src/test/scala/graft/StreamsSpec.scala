@@ -23,6 +23,11 @@ class StreamsSpec extends SparkTestBase {
     (raw, div, 1000L * div)
   }
 
+  private def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
+    f.delete(); ()
+  }
+
   test("soqlExtract: raw SOQL text drives a streaming incremental " +
       "extract equal to the batch translation; query shapes refuse") {
     // the reference's poll-loop extract as one streaming declaration:
@@ -242,36 +247,21 @@ class StreamsSpec extends SparkTestBase {
     val (raw, tsDiv, msUnits) = rawEvents
     val tsSorted = raw.select("ts").orderBy("ts").collect().map(_.getLong(0))
     val cut = (tsSorted(tsSorted.length / 2) / msUnits) * msUnits
-    val tmp = java.nio.file.Files.createTempDirectory("hh_stream")
-    def writeOne(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = tmp.resolve(s"stage_$name")
-      df.coalesce(1).write.parquet(stage.toString)
-      val it = java.nio.file.Files.list(stage).iterator()
-      var p: java.nio.file.Path = null
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getFileName.toString.endsWith(".parquet")) p = f
-      }
-      java.nio.file.Files.copy(p, tmp.resolve(name))
-    }
-    writeOne(raw.filter(col("ts") < cut), "a_events.parquet")
-    writeOne(raw.filter(col("ts") >= cut), "b_events.parquet")
     val keyed = (df: org.apache.spark.sql.DataFrame) => df.select(
       when(col("event_id") % 10 < 5,
         concat(lit("hot"), (col("event_id") % 7).cast("string")))
       .otherwise(concat(lit("cold"), col("event_id").cast("string")))
       .as("k"))
-    val stream = keyed(spark.readStream.schema(etl.Tables.eventsRaw)
-      .option("maxFilesPerTrigger", 1)
-      .option("pathGlobFilter", "*_events.parquet")
-      .parquet(tmp.toString))
-    val statePath = tmp.resolve("hh_state").toString
+    val (base, events) = ops.Replay.twoBatchStream(spark, "spec_hh_stream",
+      dir, etl.Tables.eventsRaw, "events",
+      raw.filter(col("ts") < cut), raw.filter(col("ts") >= cut))
+    val statePath = new java.io.File(base, "hh_state").getPath
     val k = 50
-    val q = Streams.heavyHittersMaintain(stream, "k", statePath, k)
+    val q = Streams.heavyHittersMaintain(keyed(events), "k", statePath, k)
     assert(q.awaitTermination(180000), "foreachBatch query must terminate")
     assert(q.recentProgress.map(_.batchId).distinct.length >= 2,
       "replay must span two micro-batches")
-    val (stateN, sketch) = spark.read.parquet(statePath)
+    val (stateN, sketch) = Streams.readGenMaintained(spark, statePath)
       .as[(Long, Map[String, Long])].head()
     val truth = keyed(raw).groupBy("k").agg(count(lit(1)).as("c"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -294,33 +284,18 @@ class StreamsSpec extends SparkTestBase {
     val (raw, tsDiv, msUnits) = rawEvents
     val tsSorted = raw.select("ts").orderBy("ts").collect().map(_.getLong(0))
     val cut = (tsSorted(tsSorted.length / 2) / msUnits) * msUnits
-    val tmp = java.nio.file.Files.createTempDirectory("cm_stream")
-    def writeOne(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = tmp.resolve(s"stage_$name")
-      df.coalesce(1).write.parquet(stage.toString)
-      val it = java.nio.file.Files.list(stage).iterator()
-      var p: java.nio.file.Path = null
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getFileName.toString.endsWith(".parquet")) p = f
-      }
-      java.nio.file.Files.copy(p, tmp.resolve(name))
-    }
-    writeOne(raw.filter(col("ts") < cut), "a_events.parquet")
-    writeOne(raw.filter(col("ts") >= cut), "b_events.parquet")
     val keyed = (df: org.apache.spark.sql.DataFrame) => df.select(
       concat(lit("u"), (col("event_id") % 97).cast("string")).as("k"))
-    val stream = keyed(spark.readStream.schema(etl.Tables.eventsRaw)
-      .option("maxFilesPerTrigger", 1)
-      .option("pathGlobFilter", "*_events.parquet")
-      .parquet(tmp.toString))
-    val statePath = tmp.resolve("cm_state").toString
+    val (base, events) = ops.Replay.twoBatchStream(spark, "spec_cm_stream",
+      dir, etl.Tables.eventsRaw, "events",
+      raw.filter(col("ts") < cut), raw.filter(col("ts") >= cut))
+    val statePath = new java.io.File(base, "cm_state").getPath
     val width = 256
-    val q = Streams.countMinMaintain(stream, "k", statePath, width)
+    val q = Streams.countMinMaintain(keyed(events), "k", statePath, width)
     assert(q.awaitTermination(180000), "foreachBatch query must terminate")
     assert(q.recentProgress.map(_.batchId).distinct.length >= 2,
       "replay must span two micro-batches")
-    val (n, grid) = spark.read.parquet(statePath)
+    val (n, grid) = Streams.readGenMaintained(spark, statePath)
       .as[(Long, Array[Long])].head()
     // elementwise-sum mergeability: the maintained grid must EQUAL the
     // one-shot batch sketch — bit for bit, not just within guarantee
@@ -340,74 +315,102 @@ class StreamsSpec extends SparkTestBase {
     }
   }
 
-  test("maintenance state survives a crash between stagedSwap's renames") {
-    // Simulates the exact crash window ADVICE flagged: state was renamed
-    // ASIDE (cur -> cur_old) but the staged version never made it into
-    // place. The next run must recover `_old` and keep accumulating —
-    // without recoverState the restarted batch merges from empty and the
-    // subsequent swap deletes the only surviving copy. Count-min is the
-    // sharpest probe: its merge is elementwise sum, so survival is
-    // asserted bit-for-bit against the one-shot batch sketch over BOTH
-    // batches — any state loss shifts every hot counter.
+  test("countMinMaintain on one persistent checkpoint: a stranded " +
+      "staged-swap _old migrates, a pre-flip orphan generation is " +
+      "ignored, and a post-flip redelivery is skipped") {
+    // Every crash window of the state's life on ONE checkpoint lineage
+    // (a→batch 0, b→batch 1), so the exactly-once marker is exercised
+    // across real restarts. Count-min is the sharpest probe: its merge
+    // is elementwise sum, so the final grid must equal the one-shot
+    // sketch over both halves bit for bit — a lost or doubled batch
+    // shifts every hot counter.
     import spark.implicits._
-    val (raw, tsDiv, msUnits) = rawEvents
+    val (raw, _, msUnits) = rawEvents
     val tsSorted = raw.select("ts").orderBy("ts").collect().map(_.getLong(0))
     val cut = (tsSorted(tsSorted.length / 2) / msUnits) * msUnits
-    val tmp = java.nio.file.Files.createTempDirectory("crash_stream")
-    // ONE source dir + ONE persistent checkpoint: the restart after the
-    // simulated crash resumes the SAME batchId lineage (a→batch 0,
-    // b→batch 1), exactly as a production redeploy would — so this also
-    // exercises the mergeOnce marker across a real restart (a fresh
-    // lineage per drain would restart ids at 0 and the retry guard
-    // would rightly skip the second batch)
-    def landFile(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = tmp.resolve(s"stage_$name")
-      df.coalesce(1).write.parquet(stage.toString)
-      val it = java.nio.file.Files.list(stage).iterator()
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getFileName.toString.endsWith(".parquet"))
-          java.nio.file.Files.copy(f, tmp.resolve(name))
-      }
-    }
+    val base = ops.Replay.scratchDir("spec_cm_crash", dir)
+    // the source dir holds only landed files: a restarted file source
+    // re-lists it, and must not see the state's gen=N dirs
+    val src = new java.io.File(base, "src")
+    src.mkdirs()
     val keyed = (df: org.apache.spark.sql.DataFrame) => df.select(
       concat(lit("u"), (col("event_id") % 97).cast("string")).as("k"))
-    val statePath = tmp.resolve("cm_state").toString
-    val chk = tmp.resolve("chk").toString
-    def drain(): Unit = {
+    val statePath = new java.io.File(base, "cm_state").getPath
+    val chk = new java.io.File(base, "chk").getPath
+    def drain(): Seq[Long] = {
       val stream = keyed(spark.readStream.schema(etl.Tables.eventsRaw)
         .option("pathGlobFilter", "*_events.parquet")
-        .parquet(tmp.toString))
+        .parquet(src.getPath))
       val q = Streams.countMinMaintain(stream, "k", statePath, 256,
         checkpoint = Some(chk))
       assert(q.awaitTermination(180000), "foreachBatch query must terminate")
+      q.exception.foreach(e => throw e)
+      q.recentProgress.map(_.batchId).toSeq
     }
-    landFile(raw.filter(col("ts") < cut), "a_events.parquet")
-    drain()
-    // crash simulation: batch a's state went aside, new state never landed
-    val curF = new java.io.File(statePath)
-    assert(curF.renameTo(new java.io.File(statePath + "_old")))
-    landFile(raw.filter(col("ts") >= cut), "b_events.parquet")
-    drain()
-    val (n, grid) = spark.read.parquet(statePath)
+    def state() = Streams.readGenMaintained(spark, statePath)
       .as[(Long, Array[Long])].head()
-    val batchRow = keyed(raw).agg(
-      graft.functions.HeavyHitters.cmSketchCol(col("k"), 256),
-      count(lit(1))).head()
-    val batchGrid: Array[Long] = batchRow.getSeq[Long](0).toArray
-    assert(grid.sameElements(batchGrid),
-      "batch-a state was lost across the simulated crash")
-    assert(n == batchRow.getLong(1))
-    assert(!new java.io.File(statePath + "_old").exists(),
-      "recovered _old copy must be consumed, not left to be re-merged")
-    assert(Streams.lastAppliedBatch(statePath).contains(1L),
-      "restart must have continued the batchId lineage (a=0, b=1)")
+    def oneShot(df: org.apache.spark.sql.DataFrame): (Long, Array[Long]) = {
+      val r = keyed(df).agg(
+        graft.functions.HeavyHitters.cmSketchCol(col("k"), 256),
+        count(lit(1))).head()
+      (r.getLong(1), r.getSeq[Long](0).toArray)
+    }
+    ops.Replay.writeOneFile(raw.filter(col("ts") < cut), src,
+      "a_events.parquet")
+    drain()
+    // (1) upgrade from the retired staged-swap layout: rewrite batch
+    // a's committed state the way that publish left it — (n, grid)
+    // parquet and the batch marker at the dir's top level — stranded
+    // as `_old` by a crash between its two renames
+    val old = new java.io.File(statePath + "_old")
+    assert(new java.io.File(Streams.currentGenPath(statePath).get)
+      .renameTo(old))
+    rmTree(new java.io.File(statePath))
+    // without migration the merge must refuse, not restart from empty
+    val refusal = intercept[IllegalArgumentException] {
+      Streams.countMinBatch(keyed(raw), "k", statePath, 256, 1L)
+    }
+    assert(refusal.getMessage.contains("migrateToGenLayout"),
+      s"wrong failure: ${refusal.getMessage}")
+    Streams.migrateToGenLayout(statePath)
+    assert(!old.exists(), "migration left the stranded _old behind")
+    assert(Streams.lastAppliedBatchGen(statePath).contains(0L),
+      "migration dropped the batch marker")
+    val (nA, gridA) = oneShot(raw.filter(col("ts") < cut))
+    assert(state()._1 == nA && state()._2.sameElements(gridA),
+      "migration did not carry batch a's state forward")
+    // (2) crash BEFORE the flip: batch b's attempt half-wrote its
+    // generation (a poisoned grid, no marker) and died. The pointer
+    // never named it, so the restart merges b onto gen 0 exactly once.
+    val orphan = s"$statePath/gen=1-0dead"
+    Seq((999L, Array.fill(gridA.length)(7L))).toDF("n", "grid")
+      .write.parquet(orphan)
+    ops.Replay.writeOneFile(raw.filter(col("ts") >= cut), src,
+      "b_events.parquet")
+    assert(drain().contains(1L), "batch b must run as batch 1")
+    val committed = Streams.currentGenPath(statePath).get
+    assert(committed != orphan, "the pointer resolved the orphan")
+    val (nAll, gridAll) = oneShot(raw)
+    assert(state()._2.sameElements(gridAll),
+      "batch b did not merge exactly once onto the committed state")
+    assert(state()._1 == nAll)
+    assert(Streams.lastAppliedBatchGen(statePath).contains(1L))
+    // (3) crash AFTER the flip, before the checkpoint recorded batch 1:
+    // drop its commit-log entry so the restart redelivers it — the
+    // marker must skip it (no new generation, grid unchanged)
+    Seq("1", ".1.crc").foreach(f =>
+      new java.io.File(s"$chk/commits/$f").delete())
+    assert(drain().contains(1L), "batch 1 was not redelivered")
+    assert(Streams.currentGenPath(statePath).contains(committed),
+      "the redelivered batch committed a new generation")
+    assert(state()._2.sameElements(gridAll) && state()._1 == nAll,
+      "the redelivered batch merged twice")
   }
 
   test("merge sinks skip a redelivered batch — exactly-once under " +
       "foreachBatch retry") {
-    // The redelivery window mergeOnce closes: a crash AFTER the staged
-    // swap committed but BEFORE the checkpoint recorded the batch makes
+    // The redelivery window the batch marker closes: a crash AFTER the
+    // pointer flip but BEFORE the checkpoint recorded the batch makes
     // foreachBatch re-run the same (batch, id) — and a blind re-sum
     // merge double-counts every row in it. Driven through the factored
     // batch body so the retry is byte-exact: same frame, same id.
@@ -428,6 +431,26 @@ class StreamsSpec extends SparkTestBase {
     Streams.countBatch(Seq(22L).toDF("h"), "h", statePath, 1L)
     assert(state() == Map(11L -> 2L, 22L -> 2L))
     assert(Streams.lastAppliedBatchGen(statePath).contains(1L))
+  }
+
+  test("readMaintained resolves the generation pointer: one generation, " +
+      "no synthetic gen column; append tables still union their batches") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("read_maint")
+    val statePath = tmp.resolve("cnt").toString
+    Streams.countBatch(Seq(1L, 1L).toDF("h"), "h", statePath, 0L)
+    Streams.countBatch(Seq(1L).toDF("h"), "h", statePath, 1L)
+    // two generations are retained on disk (graft.gen.keep = 2); a
+    // reader must see only the committed one
+    val gen = Streams.readMaintained(spark, statePath)
+    assert(gen.columns.toSeq == Seq("h", "cnt"), gen.columns.mkString(","))
+    assert(gen.as[(Long, Long)].collect().toSeq == Seq((1L, 3L)))
+    val appendPath = tmp.resolve("log").toString
+    Streams.appendBatch(Seq(1L, 2L).toDF("x"), appendPath, 0L)
+    Streams.appendBatch(Seq(3L).toDF("x"), appendPath, 1L)
+    val log = Streams.readMaintained(spark, appendPath)
+    assert(log.columns.toSeq == Seq("x"))
+    assert(log.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
   }
 
   test("appendMaintain over a 2-batch replay equals the batch-built bands") {
@@ -481,23 +504,23 @@ class StreamsSpec extends SparkTestBase {
     assert(afterRetry.exceptAll(batch).count() == 0,
       "a retried batch commit changed the maintained contents")
     // ---- compaction: the small-file lever for the batch=<id> layout.
-    // Rewrites all committed batch subdirs into ONE consolidated
-    // batch=<maxId> dir; contents must be SET-IDENTICAL across the
-    // compaction and the layout must collapse to a single subdir whose
-    // id preserves the lineage ordering (future ids stay disjoint).
-    Streams.compactMaintained(spark, idxPath)
+    // The quiesced case (horizon = every id) rewrites all committed
+    // batch subdirs into ONE consolidated segment; contents must be
+    // SET-IDENTICAL across the compaction, and the segment's negative
+    // id keeps it disjoint from every future (non-negative) batch id.
+    Streams.compactMaintainedBelow(spark, idxPath, Long.MaxValue)
     val dirs = new java.io.File(idxPath).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("batch="))
     assert(dirs.length == 1, s"compaction left ${dirs.length} batch dirs")
-    assert(dirs.head.getName == "batch=1",
-      "consolidated dir must carry the max committed id")
+    assert(dirs.head.getName == "batch=-1",
+      "consolidated segment must carry the max committed id, negated")
     val compacted = Streams.readMaintained(spark, idxPath)
     assert(compacted.exceptAll(batch).count() == 0 &&
       batch.exceptAll(compacted).count() == 0,
       "compaction changed the maintained contents")
     // idempotent: a second compaction of an already-compact table is a
     // no-op (the <=1 early return), not a failure or a rewrite
-    Streams.compactMaintained(spark, idxPath)
+    Streams.compactMaintainedBelow(spark, idxPath, Long.MaxValue)
     assert(Streams.readMaintained(spark, idxPath).count() == batch.count())
   }
 
@@ -836,15 +859,19 @@ class StreamsSpec extends SparkTestBase {
 
   test("legacy heavy-hitters state layout fails with a clear message") {
     // the state format changed from (key, est) rows + __n__ sentinel to
-    // one (n, mg) row; an old statePath must produce an actionable
-    // error naming the path and remediation, not an opaque encoder
-    // analysis failure
+    // one (n, mg) row, and then moved under the generation pointer; an
+    // old statePath must produce an actionable error naming the
+    // remediation, not an opaque encoder analysis failure — first the
+    // layout migration, then (once migrated) the column format
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("hh_legacy")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       tmp.resolve("events.parquet"))
-    val statePath = tmp.resolve("hh_state").toString
+    // state outside the source dir: the second stream re-lists the
+    // source, and must not see the migrated gen=0 dir
+    val statePath = java.nio.file.Files.createTempDirectory("hh_legacy_st")
+      .resolve("hh_state").toString
     Seq(("hot0", 5L), ("__n__", 7L)).toDF("key", "est")
       .coalesce(1).write.parquet(statePath)
     val stream = spark.readStream.schema(etl.Tables.eventsRaw)
@@ -852,15 +879,23 @@ class StreamsSpec extends SparkTestBase {
       .parquet(tmp.toString)
       .select(concat(lit("u"), (col("event_id") % 97).cast("string"))
         .as("k"))
-    val q = Streams.heavyHittersMaintain(stream, "k", statePath, 50)
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q.awaitTermination(180000)
-    }
     def messages(t: Throwable): Seq[String] =
       if (t == null) Seq.empty
       else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(e).exists(_.contains("legacy layout")),
-      s"expected the legacy-layout remediation message, got: $e")
+    def refusal(): Seq[String] = {
+      val q = Streams.heavyHittersMaintain(stream, "k", statePath, 50)
+      messages(intercept[
+        org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.awaitTermination(180000)
+      })
+    }
+    val preGen = refusal()
+    assert(preGen.exists(_.contains("migrateToGenLayout")),
+      s"expected the layout-migration remediation, got: $preGen")
+    Streams.migrateToGenLayout(statePath)
+    val migrated = refusal()
+    assert(migrated.exists(_.contains("legacy layout")),
+      s"expected the legacy-layout remediation message, got: $migrated")
   }
 
   test("dropDuplicatesWithinWatermark suppresses re-delivered events") {
@@ -1444,7 +1479,7 @@ class StreamsSpec extends SparkTestBase {
     val b2 = (201 to 600).map(i => s"k$i").toDF("k")
     Streams.hllBatch(b1, "k", statePath, 12, 0L)
     Streams.hllBatch(b2, "k", statePath, 12, 1L)
-    def state() = spark.read.parquet(statePath)
+    def state() = Streams.readGenMaintained(spark, statePath)
       .select(col("n"), hll_sketch_estimate(col("hll")).as("est"))
       .as[(Long, Long)].head()
     val (n, est) = state()
@@ -1456,7 +1491,7 @@ class StreamsSpec extends SparkTestBase {
     // double-count — the marker protects both)
     Streams.hllBatch(b2, "k", statePath, 12, 1L)
     assert(state() == ((n, est)), "retried batch changed the HLL state")
-    assert(Streams.lastAppliedBatch(statePath).contains(1L))
+    assert(Streams.lastAppliedBatchGen(statePath).contains(1L))
   }
 
   test("gen GC depth knob: -Dgraft.gen.keep=3 keeps a slow reader's " +
