@@ -71,13 +71,6 @@ object Load {
       .drop("__rn")
   }
 
-  /** Emit CREATE TABLE DDL for a DataFrame's schema in a dialect — the
-    * load-side artifact the reference's CLI produces (main.rs:77-79).
-    */
-  def ddlFor(table: String, df: DataFrame)(
-      implicit g: graft.schema.SqlGenerator): String =
-    g.createTable(table, df.schema)
-
   /** Write a table hive-partitioned by a column (one directory per
     * value). The OTHER 100 TB lever next to bucketing: a time/tenant
     * filter then prunes whole partitions at PLANNING time — the scan

@@ -11,6 +11,8 @@ import org.apache.spark.sql.types._
   * before reading. We mirror that discipline — every scan carries an explicit
   * `StructType`, so at 100 TB the reader never pays an inference pass and the
   * parquet scan prunes columns/predicates against a known schema.
+  * Maintained state keeps the same rule: `Streams.readState` freezes a
+  * committed generation's schema from its own footer.
   */
 object Tables {
 

@@ -733,7 +733,7 @@ object Dedup {
         // reads gen=0 while the write lands in the (uniquely named)
         // gen=1 dir, and localCheckpoint gives the commit real size
         // stats
-        val merged = s.read.parquet(s"${prev.get}/bands")
+        val merged = st.readState(s, s"${prev.get}/bands")
           .unionByName(bands1).localCheckpoint()
         merged.write.mode("overwrite").parquet(s"$g/bands")
       }

@@ -1897,7 +1897,7 @@ object Extras {
       // marker (1) makes a rerun skip it; a concurrent publisher
       // fails the pointer flip loudly.
       st.publishGen(statePath, 1L) { (prev, g) =>
-        def prevArt(name: String) = s.read.parquet(s"${prev.get}/$name")
+        def prevArt(name: String) = st.readState(s, s"${prev.get}/$name")
         val freshT1 = ssspPairCounts(
           ev.filter(col("ts") >= timestamp_micros(lit(hb1)) &&
             col("ts") < timestamp_micros(lit(cut2))))
@@ -3771,12 +3771,15 @@ object Extras {
 
   /** The g_modularity oracle — shared verbatim by
     * g_modularity_maintained (the CDC-maintained sums must reproduce
-    * the batch fold bit-for-bit). */
+    * the batch fold bit-for-bit). The shared CTEs are MATERIALIZED:
+    * inlined, DuckDB re-expands the pair self-join in every round and
+    * fold, and spilled past 18 GB of temp disk at sf0.1; the rows are
+    * unchanged. */
   private val modularityOracleSql: String = {
     val rounds = (1 to 3).map { i =>
       s"""v$i AS (SELECT e.u, l.lab, SUM(e.w) AS wsum
          |       FROM edges e JOIN l${i - 1} l ON e.v = l.u GROUP BY 1, 2),
-         |l$i AS (SELECT u, lab FROM (
+         |l$i AS MATERIALIZED (SELECT u, lab FROM (
          |         SELECT u, lab, row_number() OVER (PARTITION BY u
          |           ORDER BY wsum DESC, lab ASC) AS rn FROM v$i)
          |       WHERE rn = 1)""".stripMargin
@@ -3795,15 +3798,15 @@ object Extras {
          |      FROM edges e JOIN l$i lu ON e.u = lu.u
          |      JOIN l$i lv ON e.v = lv.u AND lu.lab = lv.lab
          |      GROUP BY 1) w ON c.lab = w.lab, wt""".stripMargin
-    s"""WITH act AS (
+    s"""WITH act AS MATERIALIZED (
        |  SELECT DISTINCT user_id, date_trunc('hour', ts) AS h
        |  FROM events),
-       |pairs AS (
+       |pairs AS MATERIALIZED (
        |  SELECT a.user_id AS u, b.user_id AS v, COUNT(*) AS w
        |  FROM act a JOIN act b USING (h)
        |  WHERE a.user_id < b.user_id
        |  GROUP BY 1, 2 HAVING COUNT(*) >= 3),
-       |edges AS (SELECT u, v, w FROM pairs
+       |edges AS MATERIALIZED (SELECT u, v, w FROM pairs
        |          UNION ALL SELECT v, u, w FROM pairs),
        |l0 AS (SELECT DISTINCT u, u AS lab FROM edges),
        |$rounds,

@@ -1396,7 +1396,7 @@ object Text {
         }
       }
       st.publishGen(statePath, 1L) { (prev, g) =>
-        def prevArt(name: String) = s.read.parquet(s"${prev.get}/$name")
+        def prevArt(name: String) = st.readState(s, s"${prev.get}/$name")
         val (post1, mdl1, stats1) = parts(docs.filter(
           col("doc_id") >= cut1 && col("doc_id") < cut2))
         // materialize the merged artifacts BEFORE publishing: the

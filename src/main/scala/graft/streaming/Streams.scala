@@ -64,18 +64,6 @@ object Streams {
       .agg(count("*").as("n"))
       .select(col("w.start").as("ws"), col("n"))
 
-  /** Session windows (30-minute gap) per user under watermark — twin of
-    * "e_session".
-    */
-  def sessionized(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(session_window(col("ts"), "30 minutes").as("w"),
-        col("user_id"))
-      .agg(count("*").as("n_events"))
-      .select(col("user_id"), col("w.start").as("session_start"),
-        col("w.end").as("session_end"), col("n_events"))
-
   /** Stateful exactly-once-per-key dedup bounded by the watermark — the
     * streaming version of exact dedup (state is GC'd once event-time
     * passes the watermark, so state size is bounded at any scale).
@@ -708,8 +696,8 @@ object Streams {
     */
   def readMaintained(spark: SparkSession, path: String): DataFrame =
     currentGenPath(path) match {
-      case Some(p) => spark.read.parquet(p)
-      case None => spark.read.parquet(path).drop("batch")
+      case Some(p) => readState(spark, p)
+      case None => readAppend(spark, path).drop("batch")
     }
 
   /** [[readMaintained]] for a table whose schema EVOLVED across batches
@@ -776,7 +764,7 @@ object Streams {
     val staged = new java.io.File(path + "_compact")
     rmTree(staged)
     val data = new java.io.File(staged, "data")
-    spark.read.parquet(batches.map(_.getPath).toIndexedSeq: _*)
+    readAppend(spark, batches.map(_.getPath).toIndexedSeq: _*)
       .write.mode("overwrite").parquet(data.getPath)
     java.nio.file.Files.write(
       new java.io.File(data, CompactSources).toPath,
@@ -867,7 +855,7 @@ object Streams {
         // the commit cost independent of that growth
         val merged = prev match {
           case None => part
-          case Some(p) => sp.read.parquet(p).unionByName(part)
+          case Some(p) => readState(sp, p).unionByName(part)
             .groupBy("day", "event_type")
             .agg(sum("n").as("n"), sum("sv").as("sv"))
         }
@@ -899,7 +887,7 @@ object Streams {
       prev.map { p =>
         val id = lastAppliedBatch(p).getOrElse(
           sys.error(s"committed generation $p carries no batch marker"))
-        (id, dir => spark.read.parquet(p).filter(keep)
+        (id, dir => readState(spark, p).filter(keep)
           .write.mode("overwrite").parquet(dir))
       }
     }
@@ -983,6 +971,16 @@ object Streams {
         leftKey, rightKey, residual)
     }
 
+  /** An IVM base table's rows from every batch but `id` (empty, with
+    * `schema`, before its first batch): the current-id-excluding prior
+    * read that makes the append-layout IVM sinks retry-exact. */
+  private def priorBatches(sp: SparkSession, path: String, id: Long,
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    if (new java.io.File(path).exists())
+      readAppend(sp, path).where(col("batch") =!= id).drop("batch")
+    else sp.createDataFrame(
+      sp.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+
   /** One [[ivmJoinMaintain]] batch commit, factored out so the
     * retry-exactness claim is directly testable: calling it twice with
     * the same (deltas, id) must leave all three tables unchanged
@@ -996,17 +994,11 @@ object Streams {
       residual: (DataFrame, DataFrame) => Column =
         (_, _) => lit(true)): Unit = {
     val sp = dA.sparkSession
-    def prevOf(path: String,
-        schema: org.apache.spark.sql.types.StructType): DataFrame =
-      if (new java.io.File(path).exists())
-        sp.read.parquet(path).where(col("batch") =!= id).drop("batch")
-      else sp.createDataFrame(
-        sp.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     val aPath = s"$basePath/left"
     val bPath = s"$basePath/right"
     val jPath = s"$basePath/view"
-    val aPrev = prevOf(aPath, dA.schema)
-    val bPrev = prevOf(bPath, dB.schema)
+    val aPrev = priorBatches(sp, aPath, id, dA.schema)
+    val bPrev = priorBatches(sp, bPath, id, dB.schema)
     // the join is equi on (leftKey, rightKey) with an optional RESIDUAL
     // predicate — band/interval conditions ride on top of the equi
     // exchange (the IVM identity Δ(A⋈θB) = ΔA⋈θB ∪ A⋈θΔB ∪ ΔA⋈θΔB
@@ -1070,7 +1062,7 @@ object Streams {
     publishGen(aggPath, id) { (prev, dir) =>
       ivmJoinBatch(dA, dB, basePath, id, leftKey, rightKey)
       val sp = dA.sparkSession
-      val delta = sp.read.parquet(s"$basePath/view/batch=$id")
+      val delta = readAppend(sp, s"$basePath/view/batch=$id")
       val kc = aggKeys.map(col)
       val part = delta.groupBy(kc: _*)
         .agg(count(lit(1)).as("n"),
@@ -1078,7 +1070,7 @@ object Streams {
             .cast("decimal(22,2)").as("sv"))
       val merged = prev match {
         case None => part
-        case Some(p) => sp.read.parquet(p).unionByName(part)
+        case Some(p) => readState(sp, p).unionByName(part)
           .groupBy(kc: _*)
           .agg(sum("n").as("n"),
             sum("sv").cast("decimal(22,2)").as("sv"))
@@ -1130,17 +1122,11 @@ object Streams {
       basePath: String, id: Long,
       leftKey: String, rightKey: String): Unit = {
     val sp = dA.sparkSession
-    def prevOf(path: String,
-        schema: org.apache.spark.sql.types.StructType): DataFrame =
-      if (new java.io.File(path).exists())
-        sp.read.parquet(path).where(col("batch") =!= id).drop("batch")
-      else sp.createDataFrame(
-        sp.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     val aPath = s"$basePath/left"
     val bPath = s"$basePath/right"
     val vPath = s"$basePath/view"
-    val aPrev = prevOf(aPath, dA.schema)
-    val bPrev = prevOf(bPath, dB.schema)
+    val aPrev = priorBatches(sp, aPath, id, dA.schema)
+    val bPrev = priorBatches(sp, bPath, id, dB.schema)
     def j(l: DataFrame, r: DataFrame) =
       l.join(r, l(leftKey) === r(rightKey))
     // null-padding must be SHAPE-IDENTICAL between the insert and its
@@ -1218,7 +1204,7 @@ object Streams {
       val d = batch.groupBy(kc: _*)
         .agg(sum(col(signCol).cast("long")).as("dn"))
       val prev = prevGen match {
-        case Some(p) => sp.read.parquet(p)
+        case Some(p) => readState(sp, p)
         case None => sp.createDataFrame(
           sp.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType(d.schema.fields.map(f =>
@@ -1284,7 +1270,7 @@ object Streams {
         val merged = prev match {
           case None => bch
           case Some(p) =>
-            val st = sp.read.parquet(p)
+            val st = readState(sp, p)
             val wl = Window.partitionBy("user_id")
               .orderBy(desc("ts"), desc("event_id"))
             val open = st.withColumn("rn", row_number().over(wl))
@@ -1380,7 +1366,7 @@ object Streams {
           "accumulation")
       val b = batch.select("user_id", "event_type", "ts", "event_id")
       appendBatch(b, eventsPath, id)
-      val priorMarks = genPath.map(p => sp.read.parquet(s"$p/marks"))
+      val priorMarks = genPath.map(p => readState(sp, s"$p/marks"))
       val bAgg = b.groupBy("user_id").agg(
         min(struct(col("ts"), col("event_id"))).as("bmin"),
         max(struct(col("ts"), col("event_id"))).as("bmax"))
@@ -1411,7 +1397,7 @@ object Streams {
       val merged = genPath match {
         case None => changes(b)
         case Some(p) =>
-          val st = sp.read.parquet(s"$p/log")
+          val st = readState(sp, s"$p/log")
           // in-order users: the scd2Maintain fast path
           val ib = b.join(lateUsers, Seq("user_id"), "left_anti")
           val wl = Window.partitionBy("user_id")
@@ -1427,7 +1413,7 @@ object Streams {
             .select("user_id", "event_type", "ts", "event_id")
           // late users: targeted rewrite over their FULL history (the
           // current batch is already appended, so one scan sees all)
-          val hist = sp.read.parquet(eventsPath).drop("batch")
+          val hist = readAppend(sp, eventsPath).drop("batch")
             .join(lateUsers, Seq("user_id"), "left_semi")
           st.join(lateUsers, Seq("user_id"), "left_anti")
             .unionByName(inKeep)
@@ -1467,7 +1453,7 @@ object Streams {
         val merged = prev match {
           case None => part
           case Some(p) => graft.etl.Load.latestByKey(
-            sp.read.parquet(p).unionByName(part),
+            readState(sp, p).unionByName(part),
             key, modstamp, tiebreak)
         }
         merged.write.mode("overwrite").parquet(dir)
@@ -1514,7 +1500,7 @@ object Streams {
           col("sv") === lit(0).cast("decimal(22,4)")
         val merged = prev match {
           case None => part.filter(!dead)
-          case Some(p) => sp.read.parquet(p).unionByName(part)
+          case Some(p) => readState(sp, p).unionByName(part)
             .groupBy("day", "event_type")
             .agg(sum("n").as("n"), sum("sv").as("sv"))
             .filter(!dead)
@@ -1571,7 +1557,7 @@ object Streams {
         :+ col(rowKeyCol).cast("long").as("rk"): _*)
     val del = batch.filter(col("sign") === -1)
       .select(g :+ col(rowKeyCol).cast("long").as("rk"): _*)
-    val prev: Option[DataFrame] = prevGen.map(p => sp.read.parquet(p))
+    val prev: Option[DataFrame] = prevGen.map(p => readState(sp, p))
     def prevExpl(side: String): DataFrame = prev match {
       case Some(p) => p.select(g :+ explode(col(side)).as("s"): _*)
         .select(g :+ col("s.v").as("v") :+ col("s.rk").as("rk"): _*)
@@ -1681,7 +1667,7 @@ object Streams {
       // pointer flip beats a dir-rename double-materialization
       val merged = prev match {
         case None => part
-        case Some(p) => sp.read.parquet(p).unionByName(part)
+        case Some(p) => readState(sp, p).unionByName(part)
           .groupBy(keyCol).agg(sum("cnt").as("cnt"))
       }
       merged.write.mode("overwrite").parquet(dir)
@@ -1721,7 +1707,7 @@ object Streams {
             sums.tail.map(c => sum(c).as(c)): _*)
       val merged = prev match {
         case None => agg(part)
-        case Some(p) => agg(sp.read.parquet(p).unionByName(part))
+        case Some(p) => agg(readState(sp, p).unionByName(part))
       }
       merged.write.mode("overwrite").parquet(dir)
     }
@@ -1764,7 +1750,7 @@ object Streams {
       val (prevSketch, prevN) = prev match {
         case None => (Map.empty[String, Long], 0L)
         case Some(p) =>
-          val stored = sp.read.parquet(p)
+          val stored = readState(sp, p)
           // the on-disk format changed from (key, est) rows with a
           // __n__ sentinel to a single (n, mg-map) row — surface a
           // clear remediation instead of an opaque encoder error
@@ -1814,7 +1800,7 @@ object Streams {
       val (grid, n) = prev match {
         case None => (batchGrid, batchN)
         case Some(p) =>
-          val st = sp.read.parquet(p).as[(Long, Array[Long])].head()
+          val st = readState(sp, p).as[(Long, Array[Long])].head()
           val g = st._2
           require(g.length == batchGrid.length,
             "count-min width/depth changed mid-stream")
@@ -1858,7 +1844,7 @@ object Streams {
     val part = topOf(batch)
     val merged = prev match {
       case None => part
-      case Some(p) => topOf(sp.read.parquet(p).unionByName(part))
+      case Some(p) => topOf(readState(sp, p).unionByName(part))
     }
     merged.write.mode("overwrite").parquet(dir)
   }
@@ -1899,7 +1885,7 @@ object Streams {
       val (merged, n) = prev match {
         case None => (batchSketch, batchN)
         case Some(p) =>
-          val st = sp.read.parquet(p).as[(Long, Array[Byte])].head()
+          val st = readState(sp, p).as[(Long, Array[Byte])].head()
           // the union runs engine-side (same datasketches build both
           // times) over two KB blobs — one 1-row job, never a rescan
           val u = Seq((st._2, batchSketch)).toDF("a", "b")
@@ -1943,7 +1929,7 @@ object Streams {
       case None => part.select(col("key"), col("bh").as("hll"),
         col("bn").as("n"))
       case Some(p) =>
-        sp.read.parquet(p)
+        readState(sp, p)
           .select(col("key"), col("hll").as("ph"), col("n").as("pn"))
           .join(part, Seq("key"), "full_outer")
           .select(col("key"),
@@ -2000,7 +1986,7 @@ object Streams {
     val merged = prevGen match {
       case None => part
       case Some(p) =>
-        val prev = sp.read.parquet(p)
+        val prev = readState(sp, p)
           .select("key", "qs").as[(String, QSketch)]
         prev.union(part)
           .groupByKey(_._1)
@@ -2045,6 +2031,12 @@ object Streams {
   // generation NUMBER (a reader that resolved the pointer just before
   // a flip still has its files) and deletes older ones — including
   // crash/loser orphans whose number has aged out — best-effort.
+  //
+  // Every read of a committed generation — a merge's previous state,
+  // the registry readers, the vacuum — freezes its schema from one
+  // footer ([[readState]]) instead of running Spark's schema-inference
+  // job: the never-infer rule graft.etl.Tables keeps for input tables
+  // holds for maintained state too.
 
   private def pointerOf(statePath: String): GenPointerStore =
     GenPointerStore.forPath(statePath)
@@ -2057,10 +2049,55 @@ object Streams {
     pointerOf(statePath).read(statePath)
       .map(c => s"$statePath/gen=${c._1}")
 
+  /** Spark's row-schema key in the key-value metadata of every parquet
+    * footer it writes (ParquetReadSupport.SPARK_METADATA_KEY). */
+  private val SparkRowSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Read one committed generation dir, or one artifact dir of it, with
+    * the schema frozen from its own footer. A bare `read.parquet(dir)`
+    * runs schema inference as a Spark job of its own, even for a
+    * one-file dir; here the driver lists the dir, opens ONE footer and
+    * takes the row schema Spark wrote under [[SparkRowSchemaKey]]. Every
+    * file of a generation comes from one write, so that is the schema
+    * Spark's inference (which reads one footer too) returns. A dir with
+    * no data file, or a footer without Spark's key (state not written
+    * by Spark), falls back to the bare read: its result or error is
+    * unchanged. */
+  private[graft] def readState(spark: SparkSession,
+      genDir: String): DataFrame = {
+    import org.apache.spark.sql.types.{DataType, StructType}
+    val conf = spark.sessionState.newHadoopConf()
+    val dir = new org.apache.hadoop.fs.Path(genDir)
+    val frozen = scala.util.Try {
+      dir.getFileSystem(conf).listStatus(dir).find { f =>
+        val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.flatMap { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+        val kv = try r.getFooter.getFileMetaData.getKeyValueMetaData
+          finally r.close()
+        Option(kv.get(SparkRowSchemaKey)).map(DataType.fromJson)
+      }
+    }.toOption.flatten
+    frozen match {
+      case Some(s: StructType) => spark.read.schema(s).parquet(genDir)
+      case _ => spark.read.parquet(genDir)
+    }
+  }
+
+  /** Read an append-layout table (`batch=<id>` subdirs, or some of
+    * them) by schema inference: its batches come from separate writes,
+    * so no one footer speaks for the table. With [[readState]] and
+    * [[readMaintainedEvolving]], the only schema-inferring reads of
+    * maintained state (PlanAuditSpec scans for any other). */
+  private def readAppend(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.parquet(paths: _*)
+
   /** Read a generation-layout maintained table: resolve the pointer,
     * scan that generation only. */
   def readGenMaintained(spark: SparkSession, statePath: String): DataFrame =
-    spark.read.parquet(currentGenPath(statePath).getOrElse(
+    readState(spark, currentGenPath(statePath).getOrElse(
       sys.error(s"no committed generation under $statePath — if this " +
         "dir holds pre-generation state, run " +
         "Streams.migrateToGenLayout(path) once")))
@@ -2072,7 +2109,7 @@ object Streams {
     * come from the same atomic commit. */
   def readGenArtifact(spark: SparkSession, statePath: String,
       artifact: String): DataFrame =
-    spark.read.parquet(currentGenPath(statePath).map(p => s"$p/$artifact")
+    readState(spark, currentGenPath(statePath).map(p => s"$p/$artifact")
       .getOrElse(sys.error(
         s"no committed generation under $statePath — if this dir holds " +
           "pre-generation state, migrate it to the " +
@@ -2259,7 +2296,7 @@ object Streams {
     val merged = prevGen match {
       case None => part
       case Some(p) =>
-        val prev = sp.read.parquet(p)
+        val prev = readState(sp, p)
           .select("key", "td").as[(String, TDig)]
         prev.union(part)
           .groupByKey(_._1)
@@ -2307,7 +2344,7 @@ object Streams {
       .union(sketch(batch.filter(col("sign") === -1), "d"))
     val prevRows = prevGen match {
       case None => sp.emptyDataset[(String, String, TDig)]
-      case Some(p) => sp.read.parquet(p)
+      case Some(p) => readState(sp, p)
         .select("key", "ti", "td").as[(String, TDig, TDig)]
         .flatMap { case (k, ti, td) => Seq((k, "i", ti), (k, "d", td)) }
     }

@@ -359,4 +359,60 @@ class GenPointerSpec extends SparkTestBase {
     assert(!PosixGenPointer.putIf(statePath, "2", None))
     assert(PosixGenPointer.read(statePath).get._1 == "1-cafe")
   }
+
+  /** Spark jobs `body` starts, attributed by job group; a marker job
+    * after it flushes the listener bus (delivery is in order). */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = "footer-job-guard"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val endSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == group + "-end" => endSeen.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      body
+      sc.setJobGroup(group + "-end", "marker")
+      spark.range(1).collect()
+      assert(endSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a committed generation is read with its footer schema: no " +
+      "schema-inference job on a read or on a merge's prev read") {
+    import spark.implicits._
+    val statePath = tmpDir("footer_jobs") + "/cnt"
+    Streams.countBatch(Seq(1L, 2L, 2L).toDF("h"), "h", statePath, 0L)
+    // warm-up: code generation and the first listing are not measured
+    Streams.readGenMaintained(spark, statePath).collect()
+    Streams.countBatch(Seq(1L).toDF("h"), "h", statePath, 1L)
+    val read = jobsOf(Streams.readGenMaintained(spark, statePath).collect())
+    val merge = jobsOf(
+      Streams.countBatch(Seq(2L, 3L).toDF("h"), "h", statePath, 2L))
+    info(s"generation read: $read jobs; countBatch merge: $merge jobs")
+    assert(read == 1, s"a generation read ran $read jobs")
+    assert(merge == 3, s"a countBatch merge ran $merge jobs")
+    assert(Streams.readGenMaintained(spark, statePath).as[(Long, Long)]
+      .collect().toMap == Map(1L -> 2L, 2L -> 3L, 3L -> 1L))
+    // a footer Spark did not write (DuckDB's) keeps its inference job
+    val duck = java.nio.file.Files.createTempDirectory("footer_jobs_duck")
+    java.nio.file.Files.copy(
+      getClass.getResourceAsStream("/graft/duckdb_state.parquet"),
+      duck.resolve("part-0.parquet"))
+    Streams.readState(spark, duck.toString).collect()
+    assert(jobsOf(Streams.readState(spark, duck.toString).collect()) == 2,
+      "a DuckDB-written dir must fall back to schema inference")
+  }
 }

@@ -1020,4 +1020,28 @@ class PlanAuditSpec extends SparkTestBase {
     assert(p.linesIterator.count(_.contains("hashpartitioning(ng")) == 1,
       "only the benchmark distinct may shuffle on ng")
   }
+
+  test("Streams: maintained state is read with a frozen schema — no " +
+      "schema-inferring parquet read outside readState, readAppend and " +
+      "readMaintainedEvolving") {
+    // a bare read of a generation dir runs a schema-inference job per
+    // call; this source audit keeps a new sink from bringing it back
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/streaming/Streams.scala")),
+      java.nio.charset.StandardCharsets.UTF_8)
+    val inferring = """\.read(\s*\.option\([^)]*\))*\s*\.parquet\(""".r
+    val defs = """\bdef\s+(\w+)""".r
+    val sites = inferring.findAllMatchIn(src).map { m =>
+      val before = src.substring(0, m.start)
+      (defs.findAllMatchIn(before).map(_.group(1)).toSeq.lastOption
+        .getOrElse("<top>"), before.count(_ == '\n') + 1)
+    }.toList
+    val allowed = Set("readState", "readAppend", "readMaintainedEvolving")
+    val stray = sites.filterNot(s => allowed(s._1))
+    assert(stray.isEmpty, "schema-inferring parquet reads in Streams.scala " +
+      s"(enclosing def, line): $stray — read a committed generation " +
+      "through Streams.readState")
+    assert(sites.map(_._1).toSet == allowed,
+      s"the audit matched $sites; a renamed reader would pass vacuously")
+  }
 }

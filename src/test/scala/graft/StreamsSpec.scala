@@ -1778,4 +1778,114 @@ class StreamsSpec extends SparkTestBase {
     q.stop() // Aborted
     assert(!q.isActive)
   }
+
+  test("readState: every generation sink's footer schema equals the " +
+      "inferred one after a two-batch replay, zero-row state included; " +
+      "a footer Spark did not write falls back to inference") {
+    import org.apache.spark.sql.types._
+    val (raw, tsDiv, msUnits) = rawEvents
+    val tsSorted = raw.select("ts").orderBy("ts").collect().map(_.getLong(0))
+    val cut = (tsSorted(tsSorted.length / 2) / msUnits) * msUnits
+    def toTs(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("ts", expr(s"timestamp_micros(ts DIV $tsDiv)"))
+    val halves = Seq(raw.filter(col("ts") < cut), raw.filter(col("ts") >= cut))
+    // state outside the replay's source dir: each query re-lists it
+    val st = java.nio.file.Files.createTempDirectory("footer_parity")
+      .toString
+    def path(n: String) = s"$st/$n"
+    // the sinks with no factored batch body run as two-batch streams
+    val (_, events) = ops.Replay.twoBatchStream(spark, "spec_footer_parity",
+      dir, etl.Tables.eventsRaw, "events", halves(0), halves(1))
+    val ev = toTs(events)
+    def drain(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+      assert(q.awaitTermination(180000), "foreachBatch query must terminate")
+      assert(q.recentProgress.map(_.batchId).distinct.length >= 2,
+        "replay must span two micro-batches")
+    }
+    drain(Streams.rollupMaintain(ev, path("rollup")))
+    drain(Streams.rollupSignedMaintain(ev.withColumn("sign", lit(1)),
+      path("rollupSigned")))
+    drain(Streams.latestMaintain(ev, path("latest"), "user_id", "ts",
+      Seq("event_id")))
+    drain(Streams.scd2Maintain(ev, path("scd2")))
+    for ((half, i) <- halves.map(toTs).zipWithIndex) {
+      val id = i.toLong
+      val signed = half.withColumn("sign",
+        when(col("event_id") % 5 === 0, -1).otherwise(1))
+      Streams.countBatch(half, "event_type", path("count"), id)
+      Streams.sumsBatch(half.groupBy("event_type")
+          .agg(count(lit(1)).as("n"),
+            sum(col("value").cast("decimal(38,2)")).cast("decimal(38,2)")
+              .as("sv")),
+        Seq("event_type"), Seq("n", "sv"), path("sums"), id)
+      Streams.topkBatch(half, path("topk"), "event_type", 3,
+        Seq(col("value").desc, col("event_id").asc), id)
+      Streams.minmaxBatch(half.withColumn("sign", lit(1)), path("minmax"),
+        Seq("event_type"), "value", "event_id", 4, id)
+      Streams.heavyHittersBatch(half, "event_type", path("hh"), 5, id)
+      Streams.countMinBatch(half, "event_type", path("cm"), 64, id)
+      Streams.hllBatch(half, "user_id", path("hll"), 12, id)
+      Streams.hllByKeyBatch(half, "event_type", "user_id", path("hllByKey"),
+        12, id)
+      Streams.quantileBatch(half, "event_type", "value", path("quantile"),
+        32, id)
+      Streams.tdigestBatch(half, "event_type", "value", path("tdigest"), 50,
+        id)
+      Streams.tdigestSignedBatch(signed, "event_type", "value",
+        path("tdigestSigned"), 50, id)
+      Streams.ivmJoinAggBatch(half.select("event_id", "user_id", "value"),
+        half.select(col("event_id").as("eid"), col("event_type")),
+        path("ivm"), id, "event_id", "eid", Seq("event_type"), "value")
+      Streams.ivmDistinctBatch(half.withColumn("sign", lit(1)),
+        path("distinct"), id, Seq("event_type"), "sign")
+      Streams.scd2LateBatch(half, path("scd2Late"), id)
+    }
+    Streams.vacuumMaintained(spark, path("count"),
+      col("event_type") =!= "view")
+    // a merge that leaves zero rows: retract every row of both batches
+    Streams.ivmDistinctBatch(toTs(raw).withColumn("sign", lit(-1)),
+      path("distinct"), 2L, Seq("event_type"), "sign")
+    def gen(n: String) = Streams.currentGenPath(path(n)).getOrElse(
+      fail(s"$n committed no generation"))
+    val dirs = Seq("rollup", "rollupSigned", "latest", "scd2", "count",
+        "sums", "topk", "minmax", "hh", "cm", "hll", "hllByKey", "quantile",
+        "tdigest", "tdigestSigned", "ivm/agg", "distinct/counts")
+      .map(n => n -> gen(n)) ++
+      Seq("marks", "log").map(a => s"scd2Late/$a" -> s"${gen("scd2Late")}/$a")
+    for ((n, p) <- dirs) {
+      val frozen = Streams.readState(spark, p)
+      val inferred = spark.read.parquet(p)
+      assert(frozen.schema == inferred.schema,
+        s"$n: footer ${frozen.schema.simpleString} vs inferred " +
+          inferred.schema.simpleString)
+      assert(frozen.count() == inferred.count(), n)
+    }
+    assert(Streams.lastAppliedBatchGen(path("count")).contains(1L),
+      "the vacuum must carry the batch marker")
+    assert(Streams.readState(spark, gen("distinct/counts")).count() == 0)
+    def typeOf(n: String, c: String): DataType =
+      Streams.readState(spark, gen(n)).schema(c).dataType
+    assert(typeOf("sums", "sv") == DecimalType(38, 2))
+    assert(typeOf("tdigest", "td").isInstanceOf[StructType])
+    assert(typeOf("hh", "mg").isInstanceOf[MapType])
+    assert(typeOf("cm", "grid").isInstanceOf[ArrayType])
+    assert(typeOf("hll", "hll") == BinaryType)
+    // a DuckDB-written footer carries no Spark row schema: the reader
+    // must take the inferring path, not guess
+    val duck = java.nio.file.Files.createTempDirectory("footer_duck")
+    java.nio.file.Files.copy(
+      getClass.getResourceAsStream("/graft/duckdb_state.parquet"),
+      duck.resolve("part-0.parquet"))
+    val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(duck.resolve("part-0.parquet").toString),
+        new org.apache.hadoop.conf.Configuration()))
+    val kv = try rdr.getFooter.getFileMetaData.getKeyValueMetaData
+      finally rdr.close()
+    assert(!kv.containsKey("org.apache.spark.sql.parquet.row.metadata"))
+    val duckRead = Streams.readState(spark, duck.toString)
+    assert(duckRead.schema == spark.read.parquet(duck.toString).schema)
+    assert(duckRead.schema("sv").dataType == DecimalType(38, 2))
+    assert(duckRead.count() == 3)
+  }
 }
