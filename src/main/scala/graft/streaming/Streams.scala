@@ -546,10 +546,9 @@ object Streams {
     * sessions): at sf0.1 that was 32 near-empty tasks, 32 state-store
     * commits and 32 output files per exchange per micro-batch, pure
     * fixed overhead (~0.5-1 s per maintained row, measured r20).
-    * `spark.graft.replay.shuffle.partitions` (default 4) sizes the
-    * stream-lifetime override: a production deployment sets it to
-    * ceil(delta bytes / 256 MB) for its real tick volume, or <= 0 to
-    * disable the override entirely. The override is SCOPED to the
+    * [[DeltaShufflePartitions]] is the stream-lifetime override, sized
+    * for KB-MB ticks; ticks of more than a few hundred MB need
+    * ceil(delta bytes / 256 MB) instead. The override is SCOPED to the
     * streaming query: Structured Streaming clones the session inside
     * `start()` (the clone snapshots the conf for every micro-batch and
     * every foreachBatch body), so setting the conf around `start()`
@@ -561,14 +560,14 @@ object Streams {
   private[graft] def startScaledToDelta(s: SparkSession)(
       start: => StreamingQuery): StreamingQuery = {
     val key = "spark.sql.shuffle.partitions"
-    val n = s.conf.get("spark.graft.replay.shuffle.partitions", "4")
-    if (n.trim.toInt <= 0) start
-    else {
-      val old = s.conf.get(key)
-      s.conf.set(key, n.trim)
-      try start finally s.conf.set(key, old)
-    }
+    val old = s.conf.get(key)
+    s.conf.set(key, DeltaShufflePartitions.toString)
+    try start finally s.conf.set(key, old)
   }
+
+  /** Shuffle partitions of every maintenance stream's micro-batches
+    * ([[startScaledToDelta]]). */
+  private val DeltaShufflePartitions = 4
 
   /** foreachBatch writer shared by the maintenance sinks: AvailableNow
     * trigger, with an optional PERSISTENT checkpoint so a restarted run
@@ -586,23 +585,6 @@ object Streams {
     }
   }
 
-  /** Append-only streaming maintenance of a derived table: each
-    * micro-batch is transformed and its rows landed as new parquet
-    * part files — the right shape when batches partition the key space
-    * (no cross-batch merge needed), e.g. the MinHash band index, where
-    * a document's band rows depend on that document alone. Unlike the
-    * merge sinks (rollup/MG/CM) there is no read-modify-write and so
-    * no generation commit — but the sink must still be IDEMPOTENT under
-    * foreachBatch's at-least-once redelivery: each batch writes its
-    * own `batch=<id>` subdirectory in OVERWRITE mode, so a
-    * failed-then-retried micro-batch replaces its previous partial
-    * output instead of double-appending band rows (a blind
-    * mode("append") to the root would duplicate; for a deterministic
-    * `transform` the overwrite makes the retry exact). Readers use
-    * [[readMaintained]], which drops the synthetic `batch` partition
-    * column. At production scale the same shape is a transactional
-    * table format's idempotent append commit keyed by batchId.
-    */
   /** The reference's incremental-extract poll loop
     * (`client.query(soql)` re-issued with a `SystemModstamp >=
     * watermark` predicate, client.rs:199-205) as ONE Structured
@@ -636,15 +618,27 @@ object Streams {
       today = today, eventsBase = Some(stream))
   }
 
+  /** Append-only streaming maintenance of a derived table: each
+    * micro-batch is transformed and its rows landed as new parquet
+    * part files — the right shape when batches partition the key space
+    * (no cross-batch merge needed), e.g. the MinHash band index, where
+    * a document's band rows depend on that document alone. Unlike the
+    * merge sinks (rollup/MG/CM) there is no read-modify-write and so
+    * no generation commit — but the sink must still be IDEMPOTENT under
+    * foreachBatch's at-least-once redelivery: each batch writes its
+    * own `batch=<id>` subdirectory in OVERWRITE mode, so a
+    * failed-then-retried micro-batch replaces its previous partial
+    * output instead of double-appending band rows (a blind
+    * mode("append") to the root would duplicate; for a deterministic
+    * `transform` the overwrite makes the retry exact). Readers use
+    * [[readMaintained]], which drops the synthetic `batch` partition
+    * column. At production scale the same shape is a transactional
+    * table format's idempotent append commit keyed by batchId.
+    */
   def appendMaintain(stream: DataFrame, path: String)(
       transform: DataFrame => DataFrame): StreamingQuery =
-    startScaledToDelta(stream.sparkSession) {
-      stream.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          appendBatch(transform(batch), path, id)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
+    maintainWriter(stream, None) { (batch, id) =>
+      appendBatch(transform(batch), path, id)
     }
 
   /** [[appendMaintain]] for SEVERAL derived tables off ONE input pass:
@@ -667,16 +661,11 @@ object Streams {
     */
   def appendMaintainMulti(stream: DataFrame,
       sinks: Seq[(String, DataFrame => DataFrame)]): StreamingQuery =
-    startScaledToDelta(stream.sparkSession) {
-      stream.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val b = batch.localCheckpoint()
-          sinks.foreach { case (path, transform) =>
-            appendBatch(transform(b), path, id)
-          }
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
+    maintainWriter(stream, None) { (batch, id) =>
+      val b = batch.localCheckpoint()
+      sinks.foreach { case (path, transform) =>
+        appendBatch(transform(b), path, id)
+      }
     }
 
   /** One [[appendMaintain]] batch commit: overwrite of the
@@ -841,26 +830,14 @@ object Streams {
   def rollupMaintain(events: DataFrame, rollupPath: String,
       checkpoint: Option[String] = None): StreamingQuery =
     maintainWriter(events, checkpoint) { (batch, id) =>
-      publishGen(rollupPath, id) { (prev, dir) =>
-        val sp = batch.sparkSession
-        val part = batch
-          .groupBy(date_trunc("day", col("ts")).as("day"),
-            col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum(graft.ops.roundf(col("value"), 4).cast("decimal(22,4)"))
-              .as("sv"))
-        // generation-layout publish (r14 — the CDC family joins the
-        // large-state sinks): the rollup table is |days × types| rows
-        // but GROWS with retention, and the O(1) pointer flip makes
-        // the commit cost independent of that growth
-        val merged = prev match {
-          case None => part
-          case Some(p) => readState(sp, p).unionByName(part)
-            .groupBy("day", "event_type")
-            .agg(sum("n").as("n"), sum("sv").as("sv"))
-        }
-        merged.write.mode("overwrite").parquet(dir)
-      }
+      val part = batch
+        .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(graft.ops.roundf(col("value"), 4).cast("decimal(22,4)"))
+            .as("sv"))
+      mergeKeyed(rollupPath, id, part)(_.unionByName(part)
+        .groupBy("day", "event_type")
+        .agg(sum("n").as("n"), sum("sv").as("sv")))
     }
 
   /** Retention vacuum for a merge-maintained table — the RETIREMENT
@@ -1058,25 +1035,20 @@ object Streams {
   private[graft] def ivmJoinAggBatch(dA: DataFrame, dB: DataFrame,
       basePath: String, id: Long, leftKey: String, rightKey: String,
       aggKeys: Seq[String], valueCol: String): Unit = {
-    val aggPath = s"$basePath/agg"
-    publishGen(aggPath, id) { (prev, dir) =>
+    val kc = aggKeys.map(col)
+    // forced inside the agg's marker guard only: level 1 and the read
+    // of the one view delta it wrote run for an uncommitted batch
+    lazy val part = {
       ivmJoinBatch(dA, dB, basePath, id, leftKey, rightKey)
-      val sp = dA.sparkSession
-      val delta = readAppend(sp, s"$basePath/view/batch=$id")
-      val kc = aggKeys.map(col)
-      val part = delta.groupBy(kc: _*)
+      readState(dA.sparkSession, s"$basePath/view/batch=$id")
+        .groupBy(kc: _*)
         .agg(count(lit(1)).as("n"),
           sum(col(valueCol).cast("decimal(18,2)"))
             .cast("decimal(22,2)").as("sv"))
-      val merged = prev match {
-        case None => part
-        case Some(p) => readState(sp, p).unionByName(part)
-          .groupBy(kc: _*)
-          .agg(sum("n").as("n"),
-            sum("sv").cast("decimal(22,2)").as("sv"))
-      }
-      merged.write.mode("overwrite").parquet(dir)
     }
+    mergeKeyed(s"$basePath/agg", id, part)(_.unionByName(part)
+      .groupBy(kc: _*)
+      .agg(sum("n").as("n"), sum("sv").cast("decimal(22,2)").as("sv")))
   }
 
   /** Two-sided incremental view maintenance for a LEFT OUTER join —
@@ -1259,31 +1231,24 @@ object Streams {
   def scd2Maintain(events: DataFrame, statePath: String,
       checkpoint: Option[String] = None): StreamingQuery =
     maintainWriter(events, checkpoint) { (batch, id) =>
-      publishGen(statePath, id) { (prev, dir) =>
-        import org.apache.spark.sql.expressions.Window
-        val sp = batch.sparkSession
-        val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        val bch = batch.select("user_id", "event_type", "ts", "event_id")
-          .withColumn("prev", lag("event_type", 1).over(w))
-          .filter(col("prev").isNull || col("prev") =!= col("event_type"))
-          .drop("prev")
-        val merged = prev match {
-          case None => bch
-          case Some(p) =>
-            val st = readState(sp, p)
-            val wl = Window.partitionBy("user_id")
-              .orderBy(desc("ts"), desc("event_id"))
-            val open = st.withColumn("rn", row_number().over(wl))
-              .filter(col("rn") === 1)
-              .select(col("user_id"), col("event_type").as("cur_type"))
-            val keep = bch.withColumn("rn", row_number().over(w))
-              .join(open, Seq("user_id"), "left")
-              .filter(col("rn") =!= 1 || col("cur_type").isNull ||
-                col("cur_type") =!= col("event_type"))
-              .select("user_id", "event_type", "ts", "event_id")
-            st.unionByName(keep)
-        }
-        merged.write.mode("overwrite").parquet(dir)
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+      val bch = batch.select("user_id", "event_type", "ts", "event_id")
+        .withColumn("prev", lag("event_type", 1).over(w))
+        .filter(col("prev").isNull || col("prev") =!= col("event_type"))
+        .drop("prev")
+      mergeKeyed(statePath, id, bch) { st =>
+        val wl = Window.partitionBy("user_id")
+          .orderBy(desc("ts"), desc("event_id"))
+        val open = st.withColumn("rn", row_number().over(wl))
+          .filter(col("rn") === 1)
+          .select(col("user_id"), col("event_type").as("cur_type"))
+        val keep = bch.withColumn("rn", row_number().over(w))
+          .join(open, Seq("user_id"), "left")
+          .filter(col("rn") =!= 1 || col("cur_type").isNull ||
+            col("cur_type") =!= col("event_type"))
+          .select("user_id", "event_type", "ts", "event_id")
+        st.unionByName(keep)
       }
     }
 
@@ -1446,18 +1411,9 @@ object Streams {
       modstamp: String, tiebreak: Seq[String] = Nil,
       checkpoint: Option[String] = None): StreamingQuery =
     maintainWriter(stream, checkpoint) { (batch, id) =>
-      publishGen(statePath, id) { (prev, dir) =>
-        val sp = batch.sparkSession
-        val part = graft.etl.Load.latestByKey(batch, key, modstamp,
-          tiebreak)
-        val merged = prev match {
-          case None => part
-          case Some(p) => graft.etl.Load.latestByKey(
-            readState(sp, p).unionByName(part),
-            key, modstamp, tiebreak)
-        }
-        merged.write.mode("overwrite").parquet(dir)
-      }
+      val part = graft.etl.Load.latestByKey(batch, key, modstamp, tiebreak)
+      mergeKeyed(statePath, id, part)(st => graft.etl.Load.latestByKey(
+        st.unionByName(part), key, modstamp, tiebreak))
     }
 
   /** Retraction-capable rollup maintenance — [[rollupMaintain]] for
@@ -1480,33 +1436,25 @@ object Streams {
   def rollupSignedMaintain(events: DataFrame, rollupPath: String,
       checkpoint: Option[String] = None): StreamingQuery =
     maintainWriter(events, checkpoint) { (batch, id) =>
-      publishGen(rollupPath, id) { (prev, dir) =>
-        val sp = batch.sparkSession
-        val part = batch
-          .groupBy(date_trunc("day", col("ts")).as("day"),
-            col("event_type"))
-          .agg(sum(col("sign").cast("long")).as("n"),
-            sum((graft.ops.roundf(col("value"), 4) *
-              col("sign").cast("double")).cast("decimal(22,4)"))
-              .as("sv"))
-        // a group is dropped only when it nets to NOTHING: retract
-        // discipline says a retraction carries the old row verbatim, so
-        // n netting to 0 implies sv nets to 0 too. Keeping n=0 groups
-        // with a non-zero sv residual (instead of filtering on n alone)
-        // makes a contract-violating retraction SURFACE as a visible
-        // residual row — and hash-red against the net recompute —
-        // rather than silently discarding the mismatched sum.
-        val dead = col("n") === 0 &&
-          col("sv") === lit(0).cast("decimal(22,4)")
-        val merged = prev match {
-          case None => part.filter(!dead)
-          case Some(p) => readState(sp, p).unionByName(part)
-            .groupBy("day", "event_type")
-            .agg(sum("n").as("n"), sum("sv").as("sv"))
-            .filter(!dead)
-        }
-        merged.write.mode("overwrite").parquet(dir)
-      }
+      val part = batch
+        .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
+        .agg(sum(col("sign").cast("long")).as("n"),
+          sum((graft.ops.roundf(col("value"), 4) *
+            col("sign").cast("double")).cast("decimal(22,4)"))
+            .as("sv"))
+      // a group is dropped only when it nets to NOTHING: retract
+      // discipline says a retraction carries the old row verbatim, so
+      // n netting to 0 implies sv nets to 0 too. Keeping n=0 groups
+      // with a non-zero sv residual (instead of filtering on n alone)
+      // makes a contract-violating retraction SURFACE as a visible
+      // residual row — and hash-red against the net recompute —
+      // rather than silently discarding the mismatched sum.
+      val dead = col("n") === 0 &&
+        col("sv") === lit(0).cast("decimal(22,4)")
+      mergeKeyed(rollupPath, id, part.filter(!dead))(_.unionByName(part)
+        .groupBy("day", "event_type")
+        .agg(sum("n").as("n"), sum("sv").as("sv"))
+        .filter(!dead))
     }
 
   /** MIN/MAX view maintenance under deletions — the ONE aggregate
@@ -1658,20 +1606,11 @@ object Streams {
     * leave the counts unchanged (StreamsSpec asserts).
     */
   private[graft] def countBatch(batch: DataFrame, keyCol: String,
-      statePath: String, id: Long): Unit =
-    publishGen(statePath, id) { (prev, dir) =>
-      val sp = batch.sparkSession
-      val part = batch.groupBy(keyCol).agg(count(lit(1)).as("cnt"))
-      // generation-layout publish (r13): the count table is
-      // VOCABULARY-sized — exactly the state size where an O(1)
-      // pointer flip beats a dir-rename double-materialization
-      val merged = prev match {
-        case None => part
-        case Some(p) => readState(sp, p).unionByName(part)
-          .groupBy(keyCol).agg(sum("cnt").as("cnt"))
-      }
-      merged.write.mode("overwrite").parquet(dir)
-    }
+      statePath: String, id: Long): Unit = {
+    val part = batch.groupBy(keyCol).agg(count(lit(1)).as("cnt"))
+    mergeKeyed(statePath, id, part)(
+      _.unionByName(part).groupBy(keyCol).agg(sum("cnt").as("cnt")))
+  }
 
   /** Generic grouped ADDITIVE-statistics maintenance: state =
     * (keys..., sum columns...) merged across micro-batches by exact
@@ -1698,19 +1637,13 @@ object Streams {
 
   /** One [[sumsMaintain]] batch merge, factored for the retry spec. */
   private[graft] def sumsBatch(part: DataFrame, keys: Seq[String],
-      sums: Seq[String], statePath: String, id: Long): Unit =
-    publishGen(statePath, id) { (prev, dir) =>
-      val sp = part.sparkSession
-      def agg(df: DataFrame): DataFrame =
-        df.groupBy(keys.map(col): _*)
-          .agg(sum(sums.head).as(sums.head),
-            sums.tail.map(c => sum(c).as(c)): _*)
-      val merged = prev match {
-        case None => agg(part)
-        case Some(p) => agg(readState(sp, p).unionByName(part))
-      }
-      merged.write.mode("overwrite").parquet(dir)
-    }
+      sums: Seq[String], statePath: String, id: Long): Unit = {
+    def agg(df: DataFrame): DataFrame =
+      df.groupBy(keys.map(col): _*)
+        .agg(sum(sums.head).as(sums.head),
+          sums.tail.map(c => sum(c).as(c)): _*)
+    mergeKeyed(statePath, id, agg(part))(st => agg(st.unionByName(part)))
+  }
 
   /** Streaming heavy-hitters: a Misra-Gries summary of a key column
     * maintained across micro-batches — the trending-keys shape. Each
@@ -1738,35 +1671,11 @@ object Streams {
     * and crash specs. */
   private[graft] def heavyHittersBatch(batch: DataFrame, keyCol: String,
       statePath: String, k: Int, id: Long): Unit =
-    publishGen(statePath, id) { (prev, dir) =>
-      val sp = batch.sparkSession
-      import sp.implicits._
-      val row = batch.agg(
-        graft.functions.HeavyHitters.mgSketchCol(col(keyCol), k).as("mg"),
-        count(lit(1)).as("n")).head()
-      val batchSketch = Option(row.getMap[String, Long](0))
-        .map(_.toMap).getOrElse(Map.empty[String, Long])
-      val batchN = row.getLong(1)
-      val (prevSketch, prevN) = prev match {
-        case None => (Map.empty[String, Long], 0L)
-        case Some(p) =>
-          val stored = readState(sp, p)
-          // the on-disk format changed from (key, est) rows with a
-          // __n__ sentinel to a single (n, mg-map) row — surface a
-          // clear remediation instead of an opaque encoder error
-          require(stored.columns.toSet == Set("n", "mg"),
-            s"heavy-hitters state at $statePath has columns " +
-              s"${stored.columns.mkString("(", ", ", ")")} — this is " +
-              "the pre-(n, mg) legacy layout (or not MG state at " +
-              "all); delete the statePath to restart accumulation")
-          val st = stored.as[(Long, Map[String, Long])].head()
-          (st._2, st._1)
-      }
-      val merged = graft.functions.HeavyHitters
-        .mergeSummaries(prevSketch, batchSketch, k)
-      Seq((prevN + batchN, merged)).toDF("n", "mg")
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-    }
+    mergeSketch[Map[String, Long]](statePath, id, batch, "mg",
+      // a batch summary is an empty map, never a null one
+      coalesce(graft.functions.HeavyHitters.mgSketchCol(col(keyCol), k),
+        typedLit(Map.empty[String, Long])))(
+      graft.functions.HeavyHitters.mergeSummaries(_, _, k))
 
   /** Streaming count-min: the CM grid maintained across micro-batches.
     * CM's merge is an elementwise SUM, so unlike the MG summary the
@@ -1788,28 +1697,12 @@ object Streams {
     * crash specs. */
   private[graft] def countMinBatch(batch: DataFrame, keyCol: String,
       statePath: String, width: Int, id: Long): Unit =
-    publishGen(statePath, id) { (prev, dir) =>
-      val sp = batch.sparkSession
-      import sp.implicits._
-      val row = batch.agg(
-        graft.functions.HeavyHitters.cmSketchCol(col(keyCol), width)
-          .as("cm"),
-        count(lit(1)).as("n")).head()
-      val batchGrid = row.getSeq[Long](0).toArray
-      val batchN = row.getLong(1)
-      val (grid, n) = prev match {
-        case None => (batchGrid, batchN)
-        case Some(p) =>
-          val st = readState(sp, p).as[(Long, Array[Long])].head()
-          val g = st._2
-          require(g.length == batchGrid.length,
-            "count-min width/depth changed mid-stream")
-          var i = 0
-          while (i < g.length) { g(i) += batchGrid(i); i += 1 }
-          (g, st._1 + batchN)
-      }
-      Seq((n, grid)).toDF("n", "grid")
-        .coalesce(1).write.mode("overwrite").parquet(dir)
+    mergeSketch[Array[Long]](statePath, id, batch, "grid",
+      graft.functions.HeavyHitters.cmSketchCol(col(keyCol), width)) {
+      (g, b) =>
+        require(g.length == b.length,
+          "count-min width/depth changed mid-stream")
+        Array.tabulate(g.length)(i => g(i) + b(i))
     }
 
   /** Streaming top-k-per-group maintenance — the continuously-current
@@ -1833,20 +1726,14 @@ object Streams {
 
   /** One [[topkMaintain]] batch merge, factored for the retry spec. */
   private[graft] def topkBatch(batch: DataFrame, statePath: String,
-      groupCol: String, k: Int, order: Seq[Column],
-      id: Long): Unit = publishGen(statePath, id) { (prev, dir) =>
+      groupCol: String, k: Int, order: Seq[Column], id: Long): Unit = {
     import org.apache.spark.sql.expressions.Window
-    val sp = batch.sparkSession
     def topOf(df: DataFrame): DataFrame =
       df.withColumn("__rn", row_number().over(
           Window.partitionBy(groupCol).orderBy(order: _*)))
         .filter(col("__rn") <= k).drop("__rn")
     val part = topOf(batch)
-    val merged = prev match {
-      case None => part
-      case Some(p) => topOf(readState(sp, p).unionByName(part))
-    }
-    merged.write.mode("overwrite").parquet(dir)
+    mergeKeyed(statePath, id, part)(st => topOf(st.unionByName(part)))
   }
 
   /** Streaming distinct-cardinality maintenance: a Datasketches HLL
@@ -1873,29 +1760,17 @@ object Streams {
 
   /** One [[hllMaintain]] batch merge, factored for the retry spec. */
   private[graft] def hllBatch(batch: DataFrame, keyCol: String,
-      statePath: String, lgConfigK: Int, id: Long): Unit =
-    publishGen(statePath, id) { (prev, dir) =>
-      val sp = batch.sparkSession
-      import sp.implicits._
-      val row = batch.agg(
-        hll_sketch_agg(col(keyCol), lit(lgConfigK)).as("hll"),
-        count(lit(1)).as("n")).head()
-      val batchSketch = row.getAs[Array[Byte]](0)
-      val batchN = row.getLong(1)
-      val (merged, n) = prev match {
-        case None => (batchSketch, batchN)
-        case Some(p) =>
-          val st = readState(sp, p).as[(Long, Array[Byte])].head()
-          // the union runs engine-side (same datasketches build both
-          // times) over two KB blobs — one 1-row job, never a rescan
-          val u = Seq((st._2, batchSketch)).toDF("a", "b")
-            .select(hll_union(col("a"), col("b")).as("u"))
-            .head().getAs[Array[Byte]](0)
-          (u, st._1 + batchN)
-      }
-      Seq((n, merged)).toDF("n", "hll")
-        .coalesce(1).write.mode("overwrite").parquet(dir)
+      statePath: String, lgConfigK: Int, id: Long): Unit = {
+    val sp = batch.sparkSession
+    import sp.implicits._
+    mergeSketch[Array[Byte]](statePath, id, batch, "hll",
+      hll_sketch_agg(col(keyCol), lit(lgConfigK))) { (a, b) =>
+      // the union runs engine-side (same datasketches build both
+      // times) over two KB blobs — one 1-row job, never a rescan
+      Seq((a, b)).toDF("a", "b").select(hll_union(col("a"), col("b")))
+        .head().getAs[Array[Byte]](0)
     }
+  }
 
   /** PER-KEY distinct-cardinality maintenance — the GROUP BY form of
     * [[hllMaintain]]'s union argument: state is a (key, hll, n) table,
@@ -1919,27 +1794,22 @@ object Streams {
   /** One [[hllByKeyMaintain]] batch merge, factored for the retry spec. */
   private[graft] def hllByKeyBatch(batch: DataFrame, keyCol: String,
       valCol: String, statePath: String, lgConfigK: Int,
-      id: Long): Unit = publishGen(statePath, id) { (prev, dir) =>
-    val sp = batch.sparkSession
+      id: Long): Unit = {
     val part = batch
       .groupBy(col(keyCol).cast("string").as("key"))
       .agg(hll_sketch_agg(col(valCol), lit(lgConfigK)).as("bh"),
         count(lit(1)).as("bn"))
-    val merged = prev match {
-      case None => part.select(col("key"), col("bh").as("hll"),
-        col("bn").as("n"))
-      case Some(p) =>
-        readState(sp, p)
-          .select(col("key"), col("hll").as("ph"), col("n").as("pn"))
-          .join(part, Seq("key"), "full_outer")
-          .select(col("key"),
-            when(col("ph").isNull, col("bh"))
-              .when(col("bh").isNull, col("ph"))
-              .otherwise(hll_union(col("ph"), col("bh"))).as("hll"),
-            (coalesce(col("pn"), lit(0L)) + coalesce(col("bn"), lit(0L)))
-              .as("n"))
+    mergeKeyed(statePath, id,
+      part.select(col("key"), col("bh").as("hll"), col("bn").as("n"))) {
+      _.select(col("key"), col("hll").as("ph"), col("n").as("pn"))
+        .join(part, Seq("key"), "full_outer")
+        .select(col("key"),
+          when(col("ph").isNull, col("bh"))
+            .when(col("bh").isNull, col("ph"))
+            .otherwise(hll_union(col("ph"), col("bh"))).as("hll"),
+          (coalesce(col("pn"), lit(0L)) + coalesce(col("bn"), lit(0L)))
+            .as("n"))
     }
-    merged.write.mode("overwrite").parquet(dir)
   }
 
   /** Streaming quantile maintenance: a per-key mergeable quantile
@@ -1972,8 +1842,7 @@ object Streams {
     * leave the state unchanged (the [[publishGen]] marker guard).
     */
   private[graft] def quantileBatch(batch: DataFrame, keyCol: String,
-      valueCol: String, statePath: String, k: Int,
-      id: Long): Unit = publishGen(statePath, id) { (prevGen, dir) =>
+      valueCol: String, statePath: String, k: Int, id: Long): Unit = {
     val sp = batch.sparkSession
     import sp.implicits._
     import graft.functions.{QSketch, QuantileSketch}
@@ -1983,18 +1852,13 @@ object Streams {
       .agg(QuantileSketch.qsketchCol(col(valueCol).cast("double"), k)
         .as("qs"))
       .as[(String, QSketch)]
-    val merged = prevGen match {
-      case None => part
-      case Some(p) =>
-        val prev = readState(sp, p)
-          .select("key", "qs").as[(String, QSketch)]
-        prev.union(part)
-          .groupByKey(_._1)
-          .mapGroups { (key, it) =>
-            (key, it.map(_._2).reduce(QuantileSketch.merge))
-          }
-    }
-    merged.toDF("key", "qs").write.mode("overwrite").parquet(dir)
+    mergeKeyed(statePath, id, part.toDF("key", "qs"))(
+      _.select("key", "qs").as[(String, QSketch)].union(part)
+        .groupByKey(_._1)
+        .mapGroups { (key, it) =>
+          (key, it.map(_._2).reduce(QuantileSketch.merge))
+        }
+        .toDF("key", "qs"))
   }
 
   // ---- Generation-pointer state layout: the one commit protocol ----
@@ -2263,6 +2127,71 @@ object Streams {
       else Some((id, dir => merge(prev, dir)))
     }
 
+  // ---- The two merge shapes of the summary sinks ----
+  //
+  // Every mergeable-summary sink folds a per-batch partial into its
+  // committed state in one of two shapes. Each combinator owns the
+  // whole read-merge-write body over [[publishGen]]: the first-batch
+  // branch, the footer-schema read of the previous generation, the
+  // column check of that stored state, and the write of the new
+  // generation. A sink supplies only its partial and its merge.
+
+  /** Keyed fold: the new generation is `first` when none is committed,
+    * else `merge(stored)`, with `stored` the committed generation. Both
+    * are lazy DataFrames the sink builds from its batch partial, and
+    * `first`'s columns are the ones the sink writes. `first` is
+    * evaluated only for a batch the marker has not seen, so a sink may
+    * put guarded side effects in it ([[ivmJoinAggBatch]]'s level 1). */
+  private def mergeKeyed(statePath: String, id: Long, first: => DataFrame)(
+      merge: DataFrame => DataFrame): Unit =
+    publishGen(statePath, id) { (prev, dir) =>
+      val f = first
+      prev.fold(f) { p =>
+        merge(storedState(statePath, readState(f.sparkSession, p),
+          f.columns.toSeq))
+      }.write.mode("overwrite").parquet(dir)
+    }
+
+  /** One-row sketch: state is ONE `(n, <name>)` row — the rows the
+    * stream delivered and a mergeable summary of them. The batch's
+    * summary is `sketch` aggregated on the executors and collected with
+    * the batch's row count (one job); the first batch keeps it, a later
+    * one is folded into the stored summary on the driver by
+    * `merge(stored, batch)`. The new generation is that one row, in one
+    * file. */
+  private def mergeSketch[S: scala.reflect.runtime.universe.TypeTag](
+      statePath: String, id: Long, batch: DataFrame, name: String,
+      sketch: Column)(merge: (S, S) => S): Unit =
+    publishGen(statePath, id) { (prev, dir) =>
+      val sp = batch.sparkSession
+      import sp.implicits._
+      val (b, bn) = batch.agg(sketch.as(name), count(lit(1)).as("n"))
+        .as[(S, Long)].head()
+      val (n, merged) = prev.fold((bn, b)) { p =>
+        val (pn, stored) = storedState(statePath, readState(sp, p),
+          Seq("n", name)).select("n", name).as[(Long, S)].head()
+        (pn + bn, merge(stored, b))
+      }
+      Seq((n, merged)).toDF("n", name)
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+    }
+
+  /** `stored` when its columns are `writes` (in any order), else a
+    * refusal naming the state dir and both column lists: a merge into
+    * a legacy layout or another sink's state would otherwise fail as an
+    * opaque analysis error, or union columns that merely share names. */
+  private def storedState(statePath: String, stored: DataFrame,
+      writes: Seq[String]): DataFrame = {
+    def cols(c: Seq[String]) = c.mkString("(", ", ", ")")
+    require(stored.columns.toSet == writes.toSet,
+      s"maintained state at $statePath has columns " +
+        s"${cols(stored.columns.toSeq)} but this sink writes " +
+        s"${cols(writes)} — a legacy layout or another sink's state; " +
+        "point the sink at its own dir, or delete the statePath to " +
+        "restart accumulation")
+    stored
+  }
+
   /** Streaming t-digest maintenance: [[quantileMaintain]]'s discipline
     * with [[graft.functions.TDigest]] state — the OTHER mergeable
     * distribution summary (ROADMAP r13 #1): KLL gives uniform rank
@@ -2282,8 +2211,7 @@ object Streams {
 
   /** One [[tdigestMaintain]] batch merge, factored for the retry spec. */
   private[graft] def tdigestBatch(batch: DataFrame, keyCol: String,
-      valueCol: String, statePath: String, delta: Int,
-      id: Long): Unit = publishGen(statePath, id) { (prevGen, dir) =>
+      valueCol: String, statePath: String, delta: Int, id: Long): Unit = {
     val sp = batch.sparkSession
     import sp.implicits._
     import graft.functions.{TDig, TDigest}
@@ -2293,18 +2221,13 @@ object Streams {
       .agg(TDigest.tdigestCol(col(valueCol).cast("double"), delta)
         .as("td"))
       .as[(String, TDig)]
-    val merged = prevGen match {
-      case None => part
-      case Some(p) =>
-        val prev = readState(sp, p)
-          .select("key", "td").as[(String, TDig)]
-        prev.union(part)
-          .groupByKey(_._1)
-          .mapGroups { (key, it) =>
-            (key, it.map(_._2).reduce(TDigest.merge))
-          }
-    }
-    merged.toDF("key", "td").write.mode("overwrite").parquet(dir)
+    mergeKeyed(statePath, id, part.toDF("key", "td"))(
+      _.select("key", "td").as[(String, TDig)].union(part)
+        .groupByKey(_._1)
+        .mapGroups { (key, it) =>
+          (key, it.map(_._2).reduce(TDigest.merge))
+        }
+        .toDF("key", "td"))
   }
 
   /** t-digest maintenance under DELETIONS: signed micro-batches split
@@ -2328,8 +2251,7 @@ object Streams {
   /** One [[tdigestSignedMaintain]] batch merge, factored for the
     * retry spec. */
   private[graft] def tdigestSignedBatch(batch: DataFrame, keyCol: String,
-      valueCol: String, statePath: String, delta: Int,
-      id: Long): Unit = publishGen(statePath, id) { (prevGen, dir) =>
+      valueCol: String, statePath: String, delta: Int, id: Long): Unit = {
     val sp = batch.sparkSession
     import sp.implicits._
     import graft.functions.{TDig, TDigest}
@@ -2342,13 +2264,7 @@ object Streams {
       .map { case (k, t) => (k, tag, t) }
     val parts = sketch(batch.filter(col("sign") === 1), "i")
       .union(sketch(batch.filter(col("sign") === -1), "d"))
-    val prevRows = prevGen match {
-      case None => sp.emptyDataset[(String, String, TDig)]
-      case Some(p) => readState(sp, p)
-        .select("key", "ti", "td").as[(String, TDig, TDig)]
-        .flatMap { case (k, ti, td) => Seq((k, "i", ti), (k, "d", td)) }
-    }
-    val merged = parts.union(prevRows)
+    def fold(rows: Dataset[(String, String, TDig)]): DataFrame = rows
       .groupByKey(_._1)
       .mapGroups { (key, it) =>
         val rows = it.toSeq
@@ -2357,7 +2273,10 @@ object Streams {
         }.reduceOption(TDigest.merge).getOrElse(TDigest.empty(delta))
         (key, of("i"), of("d"))
       }
-    merged.toDF("key", "ti", "td").write.mode("overwrite").parquet(dir)
+      .toDF("key", "ti", "td")
+    mergeKeyed(statePath, id, fold(parts))(st => fold(parts.union(
+      st.select("key", "ti", "td").as[(String, TDig, TDig)]
+        .flatMap { case (k, ti, td) => Seq((k, "i", ti), (k, "d", td)) })))
   }
 
   /** Run a streaming query to completion over the files currently present

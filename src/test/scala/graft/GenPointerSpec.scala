@@ -360,36 +360,6 @@ class GenPointerSpec extends SparkTestBase {
     assert(PosixGenPointer.read(statePath).get._1 == "1-cafe")
   }
 
-  /** Spark jobs `body` starts, attributed by job group; a marker job
-    * after it flushes the listener bus (delivery is in order). */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val group = "footer-job-guard"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val endSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(g) if g == group + "-end" => endSeen.countDown()
-          case _ =>
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      body
-      sc.setJobGroup(group + "-end", "marker")
-      spark.range(1).collect()
-      assert(endSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("a committed generation is read with its footer schema: no " +
       "schema-inference job on a read or on a merge's prev read") {
     import spark.implicits._

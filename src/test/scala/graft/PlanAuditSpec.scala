@@ -1043,5 +1043,42 @@ class PlanAuditSpec extends SparkTestBase {
       "through Streams.readState")
     assert(sites.map(_._1).toSet == allowed,
       s"the audit matched $sites; a renamed reader would pass vacuously")
+    // readAppend infers, so it is kept to the multi-batch append roots
+    // and the compaction input; a one-write dir goes through readState
+    val appendCallers = """(?<!def )\breadAppend\(""".r
+      .findAllMatchIn(src).map(m => memberOf(src, m.start)).toSet
+    assert(appendCallers == Set("readMaintained", "compactMaintainedBelow",
+      "priorBatches", "scd2LateBatch"),
+      s"readAppend callers in Streams.scala: $appendCallers")
+  }
+
+  /** The member of `object Streams` whose body holds offset `at`: the
+    * last def before it at member indentation (nested defs sit deeper). */
+  private def memberOf(src: String, at: Int): String =
+    """(?m)^  (?:private(?:\[\w+\])? )?def\s+(\w+)""".r
+      .findAllMatchIn(src.substring(0, at)).map(_.group(1)).toSeq
+      .lastOption.getOrElse("<top>")
+
+  test("Streams: maintained state is written only by the two merge " +
+      "combinators and the named bespoke sinks") {
+    // every summary sink's read-merge-write body is mergeKeyed or
+    // mergeSketch; a new sink with a hand-written overwrite of its
+    // generation dir fails here. The other writers: the append-layout
+    // batch, compaction, the retention rewrite, and the three sinks
+    // with side effects or second artifacts inside the marker guard.
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/streaming/Streams.scala")),
+      java.nio.charset.StandardCharsets.UTF_8)
+    val writers = """\.write\s*\.mode\("overwrite"\)\s*\.parquet\(""".r
+      .findAllMatchIn(src).map(m => memberOf(src, m.start)).toList
+    val allowed = Set("mergeKeyed", "mergeSketch", "minmaxBatch",
+      "scd2LateBatch", "ivmDistinctBatch", "appendBatch",
+      "compactMaintainedBelow", "vacuumMaintained")
+    val stray = writers.filterNot(allowed)
+    assert(stray.isEmpty, s"overwrite writes in Streams.scala outside the " +
+      s"merge combinators: $stray — fold the sink into mergeKeyed or " +
+      "mergeSketch")
+    assert(writers.toSet == allowed,
+      s"the audit matched $writers; a renamed writer would pass vacuously")
   }
 }

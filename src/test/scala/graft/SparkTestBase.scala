@@ -8,6 +8,44 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   override def afterAll(): Unit = () // session reused across suites
+
+  /** Spark jobs whose local properties satisfy `pick`, started while
+    * `body` runs; a marker job after it flushes the listener bus
+    * (delivery is in order). */
+  def jobsWhere(pick: java.util.Properties => Boolean)(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = "job-count-end"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val endSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).foreach { p =>
+          if (p.getProperty("spark.jobGroup.id") == marker) endSeen.countDown()
+          else if (pick(p)) jobs.incrementAndGet()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(marker, "marker")
+      spark.range(1).collect()
+      assert(endSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** Spark jobs `body` starts from this thread, attributed by job group. */
+  def jobsOf(body: => Unit): Int = {
+    val group = "measured-jobs"
+    jobsWhere(_.getProperty("spark.jobGroup.id") == group) {
+      spark.sparkContext.setJobGroup(group, "measured")
+      try body finally spark.sparkContext.clearJobGroup()
+    }
+  }
 }
 
 object SparkTestBase {

@@ -1852,7 +1852,8 @@ class StreamsSpec extends SparkTestBase {
         "tdigest", "tdigestSigned", "ivm/agg", "distinct/counts")
       .map(n => n -> gen(n)) ++
       Seq("marks", "log").map(a => s"scd2Late/$a" -> s"${gen("scd2Late")}/$a")
-    for ((n, p) <- dirs) {
+    for ((n, p) <- dirs :+
+        ("ivm/view/batch=1" -> path("ivm/view/batch=1"))) {
       val frozen = Streams.readState(spark, p)
       val inferred = spark.read.parquet(p)
       assert(frozen.schema == inferred.schema,
@@ -1887,5 +1888,154 @@ class StreamsSpec extends SparkTestBase {
     assert(duckRead.schema == spark.read.parquet(duck.toString).schema)
     assert(duckRead.schema("sv").dataType == DecimalType(38, 2))
     assert(duckRead.count() == 3)
+  }
+
+  test("merge combinator sinks: batch 0 then batch 1; a redelivered " +
+      "batch 1 leaves the pointer and the rows unchanged; a merge into " +
+      "existing state runs no more jobs than before the combinators") {
+    // One table over every sink that commits through the keyed-fold or
+    // the one-row-sketch combinator. The four sinks with no factored
+    // batch body run as two-batch streams on a persistent checkpoint;
+    // their redelivery drops commits/1 and restarts, as a crash after
+    // the pointer flip would. Job bounds: measured per merge into
+    // existing state before the combinators existed, except ivmJoinAgg
+    // (20 then): its view delta is now read with its footer schema,
+    // which drops Spark's schema-inference job.
+    import org.apache.spark.sql.DataFrame
+    val (raw, tsDiv, msUnits) = rawEvents
+    val tsSorted = raw.select("ts").orderBy("ts").collect().map(_.getLong(0))
+    val cut = (tsSorted(tsSorted.length / 2) / msUnits) * msUnits
+    def toTs(df: DataFrame) =
+      df.withColumn("ts", expr(s"timestamp_micros(ts DIV $tsDiv)"))
+    val halves = Seq(raw.filter(col("ts") < cut), raw.filter(col("ts") >= cut))
+      .map(toTs)
+    // state and checkpoints outside the replay's source dir: a
+    // restarted file source re-lists it
+    val st = java.nio.file.Files.createTempDirectory("combinator_sinks")
+      .toString
+    def rows(statePath: String): Seq[String] =
+      Streams.readGenMaintained(spark, statePath).toJSON.collect().sorted
+        .toSeq
+    def unchangedOnRetry(name: String, statePath: String)(
+        retry: => Unit): Unit = {
+      val ptr = Streams.currentGenPath(statePath)
+      val before = rows(statePath)
+      retry
+      assert(Streams.currentGenPath(statePath) == ptr,
+        s"$name: the redelivered batch committed a new generation")
+      assert(rows(statePath) == before, s"$name: the redelivered batch " +
+        "changed the rows")
+      assert(Streams.lastAppliedBatchGen(statePath).contains(1L), name)
+    }
+    val measured = Seq.newBuilder[(String, Int, Int)]
+    // (name, jobs per merge before the combinators, state subdir, apply)
+    val direct: Seq[(String, Int, String, (DataFrame, String, Long) => Unit)] =
+      Seq(
+        ("count", 3, "", (b, p, id) =>
+          Streams.countBatch(b, "event_type", p, id)),
+        ("sums", 3, "", (b, p, id) => Streams.sumsBatch(
+          b.groupBy("event_type").agg(count(lit(1)).as("n"),
+            sum(col("value").cast("decimal(38,2)")).cast("decimal(38,2)")
+              .as("sv")),
+          Seq("event_type"), Seq("n", "sv"), p, id)),
+        ("topk", 3, "", (b, p, id) => Streams.topkBatch(b, p, "event_type",
+          3, Seq(col("value").desc, col("event_id").asc), id)),
+        ("hllByKey", 3, "", (b, p, id) => Streams.hllByKeyBatch(b,
+          "event_type", "user_id", p, 12, id)),
+        ("quantile", 3, "", (b, p, id) => Streams.quantileBatch(b,
+          "event_type", "value", p, 32, id)),
+        ("tdigest", 3, "", (b, p, id) => Streams.tdigestBatch(b,
+          "event_type", "value", p, 50, id)),
+        ("tdigestSigned", 4, "", (b, p, id) => Streams.tdigestSignedBatch(
+          b.withColumn("sign",
+            when(col("event_id") % 5 === 0, -1).otherwise(1)),
+          "event_type", "value", p, 50, id)),
+        ("ivmJoinAgg", 19, "/agg", (b, p, id) => Streams.ivmJoinAggBatch(
+          b.select("event_id", "user_id", "value"),
+          b.select(col("event_id").as("eid"), col("event_type")),
+          p, id, "event_id", "eid", Seq("event_type"), "value")),
+        ("hh", 4, "", (b, p, id) => Streams.heavyHittersBatch(b,
+          "event_type", p, 5, id)),
+        ("cm", 4, "", (b, p, id) => Streams.countMinBatch(b, "event_type",
+          p, 64, id)),
+        ("hll", 4, "", (b, p, id) => Streams.hllBatch(b, "user_id", p, 12,
+          id)))
+    for ((name, bound, sub, apply) <- direct) {
+      val base = s"$st/$name"
+      val statePath = base + sub
+      apply(halves(0), base, 0L)
+      val jobs = jobsOf(apply(halves(1), base, 1L))
+      measured += ((name, jobs, bound))
+      unchangedOnRetry(name, statePath)(apply(halves(1), base, 1L))
+    }
+    val (_, events) = ops.Replay.twoBatchStream(spark, "spec_combinators",
+      dir, etl.Tables.eventsRaw, "events", raw.filter(col("ts") < cut),
+      raw.filter(col("ts") >= cut))
+    val ev = toTs(events)
+    val streamed: Seq[(String, Int,
+        (String, String) => org.apache.spark.sql.streaming.StreamingQuery)] =
+      Seq(
+        ("rollup", 3, (p, chk) => Streams.rollupMaintain(ev, p, Some(chk))),
+        ("rollupSigned", 3, (p, chk) => Streams.rollupSignedMaintain(
+          ev.withColumn("sign", lit(1)), p, Some(chk))),
+        ("latest", 3, (p, chk) => Streams.latestMaintain(ev, p, "user_id",
+          "ts", Seq("event_id"), Some(chk))),
+        ("scd2", 4, (p, chk) => Streams.scd2Maintain(ev, p, Some(chk))))
+    for ((name, bound, start) <- streamed) {
+      val statePath = s"$st/$name"
+      val chk = s"$st/${name}_chk"
+      def drain(): Seq[Long] = {
+        val q = start(statePath, chk)
+        assert(q.awaitTermination(180000), s"$name: query must terminate")
+        q.exception.foreach(e => throw e)
+        q.recentProgress.map(_.batchId).toSeq
+      }
+      var ids = Seq.empty[Long]
+      val jobs = jobsWhere(_.getProperty("streaming.sql.batchId") == "1") {
+        ids = drain()
+      }
+      assert(ids.contains(0L) && ids.contains(1L),
+        s"$name: the replay must run batches 0 and 1, ran $ids")
+      measured += ((name, jobs, bound))
+      unchangedOnRetry(name, statePath) {
+        Seq("1", ".1.crc").foreach(f =>
+          new java.io.File(s"$chk/commits/$f").delete())
+        assert(drain().contains(1L), s"$name: batch 1 was not redelivered")
+      }
+    }
+    val all = measured.result()
+    info(all.map { case (n, j, b) => s"$n $j/$b" }.mkString(", "))
+    val over = all.filter { case (_, j, b) => j > b }
+    assert(over.isEmpty, s"jobs per merge above the bound: $over")
+  }
+
+  test("a sink merging into another sink's state fails with a named " +
+      "cause: count-min over HLL state, sums over count state") {
+    // Both merge shapes check the stored generation's columns against
+    // the ones the sink writes before any typed decode or union —
+    // otherwise the failure is an opaque analysis error far from the
+    // misconfigured statePath.
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("foreign_state")
+    val keys = Seq("a", "b", "a").toDF("k")
+    val hll = tmp.resolve("hll").toString
+    Streams.hllBatch(keys, "k", hll, 12, 0L)
+    val cm = intercept[IllegalArgumentException] {
+      Streams.countMinBatch(keys, "k", hll, 64, 1L)
+    }.getMessage
+    for (part <- Seq(hll, "(n, hll)", "(n, grid)", "legacy layout",
+        "delete the statePath"))
+      assert(cm.contains(part), s"'$part' missing from: $cm")
+    val cnt = tmp.resolve("cnt").toString
+    Streams.countBatch(keys, "k", cnt, 0L)
+    val sums = intercept[IllegalArgumentException] {
+      Streams.sumsBatch(keys.groupBy("k").agg(count(lit(1)).as("n")),
+        Seq("k"), Seq("n"), cnt, 1L)
+    }.getMessage
+    for (part <- Seq(cnt, "(k, cnt)", "(k, n)", "delete the statePath"))
+      assert(sums.contains(part), s"'$part' missing from: $sums")
+    // a refused merge commits nothing
+    assert(Streams.lastAppliedBatchGen(hll).contains(0L))
+    assert(Streams.lastAppliedBatchGen(cnt).contains(0L))
   }
 }
