@@ -94,12 +94,13 @@ object Dedup {
     * reaches 2^r hops in r rounds, so even a 100 TB-corpus path component
     * converges in O(log n) rounds, and the fixpoint check makes
     * under-convergence impossible rather than merely unlikely. Each round
-    * eagerly localCheckpoints its result — the self-join on `hop` would
-    * otherwise DOUBLE the logical plan per round (exponential analysis /
-    * stack cost); checkpointing truncates lineage to a materialized RDD so
-    * both plan size and recompute stay O(1) per round. On a real cluster,
-    * swap localCheckpoint for reliable `checkpoint` (HDFS-backed) if
-    * executor loss during the loop must be survivable.
+    * localCheckpoints its result ([[Fixpoint.settle]]) — the self-join on
+    * `hop` would otherwise DOUBLE the logical plan per round (exponential
+    * analysis / stack cost); checkpointing truncates lineage to a
+    * materialized RDD so both plan size and recompute stay O(1) per
+    * round. On a real cluster, swap localCheckpoint for reliable
+    * `checkpoint` (HDFS-backed) if executor loss during the loop must be
+    * survivable.
     */
   def connectedComponents(pairs: DataFrame,
       reliable: Boolean = false): DataFrame = {
@@ -110,13 +111,6 @@ object Dedup {
     // clusters. Caller must have set sc.setCheckpointDir.
     def ckpt(df: DataFrame): DataFrame =
       if (reliable) df.checkpoint() else df.localCheckpoint()
-    // r20: LAZY variant for the frame whose first (and materializing)
-    // reader is the change-count join — folds the old (checkpoint job,
-    // count job) pair into one driver job per round. Only for frames
-    // with a SINGLE materializing reader: a lazy checkpoint read twice
-    // inside one job could compute partitions twice (hopC stays eager).
-    def ckptLazy(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint(false)
     // both orientations from ONE pass over `pairs` (explode, not
     // union-of-two-branches — the union form evaluated the whole
     // upstream candidate+verify pipeline twice on first materialization)
@@ -125,12 +119,11 @@ object Dedup {
         struct(col("b").as("a"), col("a").as("b")))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = ckpt(edges.select(col("a").as("node")).distinct()
+    val labels0 = ckpt(edges.select(col("a").as("node")).distinct()
       .withColumn("lbl", col("node")))
-    var changed = 1L
-    var round = 0
-    while (changed > 0) {
-      val roundStart = System.nanoTime()
+    // no cap: pointer doubling converges in O(log diameter) rounds
+    val (labels, _) = Fixpoint.run("cc", Int.MaxValue,
+        "connected components did not converge")(labels0, 1L) { labels =>
       val nb = edges.join(labels, edges("b") === labels("node"))
         .groupBy(edges("a").as("node")).agg(min(col("lbl")).as("nlbl"))
       val hop = labels.as("l")
@@ -140,32 +133,27 @@ object Dedup {
             .as("lbl"))
       val hopC = ckpt(hop) // read twice below; checkpoint, don't recompute
       // pointer doubling: follow lbl → lbl-of-lbl (labels are node ids,
-      // so every lbl has a row in `hop`)
-      val dbl = ckptLazy(hopC.as("x")
+      // so every lbl has a row in `hop`). `dbl` is checkpointed lazily:
+      // its one materializing reader is the change count against the
+      // previous labels (hopC, read twice, stays eager)
+      val (dbl, changed) = Fixpoint.settle(hopC.as("x")
         .join(hopC.select(col("node").as("pn"), col("lbl").as("plbl"))
           .as("p"), col("x.lbl") === col("p.pn"), "left")
         .select(col("x.node").as("node"),
           least(col("x.lbl"), coalesce(col("plbl"), col("x.lbl")))
-            .as("lbl")))
-      changed = dbl.as("n")
+            .as("lbl")),
+        if (reliable) _.checkpoint() else _.localCheckpoint(false))(_.as("n")
         .join(labels.select(col("node"), col("lbl").as("old")).as("o"),
           "node")
-        .filter(col("n.lbl") =!= col("old")).count()
-      // `changed` was the last reader of the previous round's labels and
+        .filter(col("n.lbl") =!= col("old")))
+      // the count was the last reader of the previous round's labels and
       // of hop — release their checkpointed RDDs now, or block-manager
       // storage grows by one labels-sized RDD per round per session
       org.apache.spark.sql.graftshim.CheckpointCleanup
         .unpersistCheckpoint(labels)
       org.apache.spark.sql.graftshim.CheckpointCleanup
         .unpersistCheckpoint(hopC)
-      labels = dbl
-      round += 1
-      // per-round attribution: a slow bench pass is now diagnosable from
-      // the log alone (CPU steal shows as one slow round with normal
-      // changed-counts; plan regrowth would show as rounds getting
-      // monotonically slower)
-      System.err.println(f"[cc] round=$round changed=$changed " +
-        f"wall=${(System.nanoTime() - roundStart) / 1e9}%.2fs")
+      (dbl, changed)
     }
     edges.unpersist()
     labels

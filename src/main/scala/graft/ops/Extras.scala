@@ -233,30 +233,18 @@ object Extras {
     * GraphIncrSpec can drive it on controlled graphs. */
   private[graft] def ssspBfs(edges: DataFrame, seeds: DataFrame,
       maxRounds: Int = SsspMaxRounds): DataFrame = {
-    var dist = seeds.localCheckpoint()
-    var frontier = dist
-    var rounds = 0
-    var fsize = frontier.count()
-    while (fsize > 0 && rounds < maxRounds) {
-      // r20: LAZY checkpoint, materialized by the frontier count —
-      // 3 driver jobs per round (checkpoint, union-checkpoint, count)
-      // become 2; the union copy still reads both caches.
-      val next = frontier.join(edges, "u")
+    val dist0 = seeds.localCheckpoint()
+    Fixpoint.run("g_sssp", maxRounds,
+        s"BFS frontier still alive after $maxRounds rounds — " +
+          "refusing to return truncated distances")(
+        (dist0, dist0), dist0.count()) { case (dist, frontier) =>
+      val (next, fsize) = Fixpoint.settle(frontier.join(edges, "u")
         .select(col("lm"), col("v").as("u"),
           (col("dist") + lit(1)).as("dist"))
         .distinct()
-        .join(dist.select("lm", "u"), Seq("lm", "u"), "left_anti")
-        .localCheckpoint(false)
-      fsize = next.count()
-      dist = dist.unionByName(next).localCheckpoint()
-      frontier = next
-      rounds += 1
-      System.err.println(s"[g_sssp] round=$rounds frontier=$fsize")
-    }
-    require(fsize == 0,
-      s"BFS frontier still alive after $maxRounds rounds — " +
-        "refusing to return truncated distances")
-    dist
+        .join(dist.select("lm", "u"), Seq("lm", "u"), "left_anti"))()
+      ((dist.unionByName(next).localCheckpoint(), next), fsize)
+    }._1._1
   }
 
   /** Min-merge relaxation to a fixpoint from maintained upper bounds —
@@ -278,19 +266,19 @@ object Extras {
     // row-for-row identical to the collapsed-state formulation
     // (GraphIncrSpec pins the frontier sizes). One min-collapse at
     // the very end lands the settled table.
-    var frontier = frontier0.localCheckpoint()
-    var stateU = state0.unionByName(frontier).localCheckpoint()
-    var rounds = 0
-    var fsize = frontier.count()
+    val frontier = frontier0.localCheckpoint()
+    val f0 = frontier.count()
     val sizes = Seq.newBuilder[Long]
-    if (fsize > 0) sizes += fsize
-    while (fsize > 0 && rounds < SsspMaxRounds) {
-      val rt0 = System.nanoTime()
+    if (f0 > 0) sizes += f0
+    val ((stateU, _), _) = Fixpoint.run("g_sssp_incr", SsspMaxRounds,
+        s"improvement cascade still alive after $SsspMaxRounds rounds")(
+        (state0.unionByName(frontier).localCheckpoint(), frontier), f0) {
+        case (stateU, frontier) =>
       // one fused aggregation: raw propagations join the state union
       // directly (same key ⇒ same match set, so min-collapsing dist
       // and __sd AFTER the join is row-for-row the collapsed-cand
       // formulation, one exchange cheaper)
-      val next = frontier.join(edges, "u")
+      val (next, fsize) = Fixpoint.settle(frontier.join(edges, "u")
         .select(col("lm"), col("v").as("u"),
           (col("dist") + lit(1)).as("dist"))
         .join(stateU.withColumnRenamed("dist", "__sd"),
@@ -298,25 +286,15 @@ object Extras {
         .groupBy("lm", "u")
         .agg(min("dist").as("dist"), min("__sd").as("__sd"))
         .filter(col("__sd").isNull || col("dist") < col("__sd"))
-        .select("lm", "u", "dist")
-        // r20: lazy — the count below materializes it (the ssspBfs
-        // 3-jobs-to-2 fold)
-        .localCheckpoint(false)
-      fsize = next.count()
+        .select("lm", "u", "dist"))()
+      if (fsize > 0) sizes += fsize
       // materialized (no-shuffle) union, the ssspBfs discipline: a
       // single checkpointed frame carries REAL size stats, so the next
       // round's improving join stays adaptively broadcastable instead
       // of defaulting to a sort-merge exchange on an unknown-size
       // union view
-      stateU = stateU.unionByName(next).localCheckpoint()
-      frontier = next
-      if (fsize > 0) sizes += fsize
-      rounds += 1
-      System.err.println(s"[g_sssp_incr] round=$rounds improved=$fsize" +
-        f" (${(System.nanoTime() - rt0) / 1e9}%.2f s)")
+      ((stateU.unionByName(next).localCheckpoint(), next), fsize)
     }
-    require(fsize == 0,
-      s"improvement cascade still alive after $SsspMaxRounds rounds")
     (stateU.groupBy("lm", "u").agg(min("dist").as("dist")),
       sizes.result())
   }
@@ -564,27 +542,59 @@ object Extras {
     * past LpaMaxRounds fails LOUDLY rather than returning a
     * non-converged labeling.
     */
-  private def lpaFixpoint(edges: DataFrame, seed: DataFrame): DataFrame = {
-    var lab = seed.localCheckpoint()
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < LpaMaxRounds) {
-      // r20: LAZY checkpoint — the change-count join below is the
-      // materializing action, folding the old (checkpoint job, count
-      // job) round structure into ONE job per round; the argmax still
-      // materializes exactly once into the same cache, and the next
-      // round's vote join reads it there.
-      val next = lpaArgmax(lpaVotes(edges, lab)).localCheckpoint(false)
-      changed = next.as("n")
+  private[graft] def lpaFixpoint(edges: DataFrame,
+      seed: DataFrame): DataFrame =
+    Fixpoint.run("g_labelprop_conv", LpaMaxRounds,
+        s"LPA did not converge within $LpaMaxRounds rounds " +
+          "(oscillating graph?) — refusing to return a non-fixpoint")(
+        seed.localCheckpoint(), 1L) { lab =>
+      Fixpoint.settle(lpaArgmax(lpaVotes(edges, lab)))(_.as("n")
         .join(lab.select(col("u"), col("lab").as("prev")), "u")
-        .filter(col("lab") =!= col("prev")).count()
-      lab = next
-      rounds += 1
-    }
-    require(changed == 0,
-      s"LPA did not converge within $LpaMaxRounds rounds " +
-        "(oscillating graph?) — refusing to return a non-fixpoint")
-    lab
+        .filter(col("lab") =!= col("prev")))
+    }._1
+
+  /** g_labelprop_incr's loop: LPA from the (u, lab) labeling `lab0`
+    * where only `frontier0` votes in round one, then only the neighbors
+    * of the nodes the last round relabeled (its delta). */
+  private[graft] def lpaFrontier(edges: DataFrame, lab0: DataFrame,
+      frontier0: DataFrame): DataFrame = {
+    val frontier = frontier0.localCheckpoint()
+    Fixpoint.run("g_labelprop_incr", LpaMaxRounds,
+        s"incremental LPA did not converge within $LpaMaxRounds rounds " +
+          "(oscillating frontier?) — refusing to return a non-fixpoint")(
+        (lab0, frontier), frontier.count()) { case (lab, affected) =>
+      val (delta, fsize) = Fixpoint.settle(lpaArgmax(lpaVotes(
+          edges.join(affected, Seq("u"), "left_semi"), lab))
+        .withColumnRenamed("lab", "nl")
+        .join(lab, "u")
+        .filter(col("nl") =!= col("lab"))
+        .select(col("u"), col("nl")))()
+      val next =
+        if (fsize == 0) lab
+        else lab.join(delta, Seq("u"), "left")
+          .select(col("u"), coalesce(col("nl"), col("lab")).as("lab"))
+          .localCheckpoint()
+      ((next, edges.join(delta.select(col("u").as("v")), Seq("v"),
+        "left_semi").select("u").distinct()), fsize)
+    }._1._1
+  }
+
+  /** g_kcore's peel of a symmetric (u, v) edge list: the KcoreK-core
+    * as (u, deg), deg the within-core degree. */
+  private[graft] def kcorePeel(edges: DataFrame): DataFrame = {
+    val nodes = edges.select("u").distinct().localCheckpoint()
+    Fixpoint.run("g_kcore", KcoreMaxRounds,
+        s"k-core peel did not converge within $KcoreMaxRounds rounds " +
+          "— refusing to return a non-fixpoint")(
+        (nodes, nodes.count()), 1L) { case (core, n0) =>
+      val alive = core.select("u")
+      val (deg, n) = Fixpoint.settle(edges
+        .join(alive, "u")
+        .join(alive.select(col("u").as("v")), "v")
+        .groupBy("u").agg(count(lit(1)).as("deg"))
+        .filter(col("deg") >= KcoreK))()
+      ((deg, n), n0 - n)
+    }._1._1
   }
 
   /** The five OLS sufficient statistics per return flag — shared by
@@ -1460,7 +1470,7 @@ object Extras {
         s"$vanished old w>=3 edges vanished under new data " +
           "(capHourBand displacement in the cut-straddling hour) — " +
           "frontier-restricted maintenance does not apply; rebuild")
-      var lab = edges.select(col("u")).distinct()
+      val lab = edges.select(col("u")).distinct()
         .join(prev.select(col("u"), col("lab").as("plab")),
           Seq("u"), "left")
         .select(col("u"), coalesce(col("plab"), col("u")).as("lab"))
@@ -1474,36 +1484,9 @@ object Extras {
       // in round one; still delta-proportional (bounded by the fresh
       // slice's pairs, never the graph).
       val fpairs = touched.filter(col("w") >= 3)
-      var frontier = fpairs.select("u")
-        .unionByName(fpairs.select(col("v").as("u")))
-        .distinct().localCheckpoint()
-      var fsize = frontier.count()
-      var rounds = 0
-      while (fsize > 0 && rounds < LpaMaxRounds) {
-        val affected =
-          if (rounds == 0) frontier
-          else edges.join(frontier.withColumnRenamed("u", "v"),
-              Seq("v"), "left_semi")
-            .select("u").distinct()
-        val delta = lpaArgmax(lpaVotes(
-            edges.join(affected, Seq("u"), "left_semi"), lab))
-          .withColumnRenamed("lab", "nl")
-          .join(lab, "u")
-          .filter(col("nl") =!= col("lab"))
-          .select(col("u"), col("nl"))
-          .localCheckpoint()
-        fsize = delta.count()
-        if (fsize > 0)
-          lab = lab.join(delta, Seq("u"), "left")
-            .select(col("u"), coalesce(col("nl"), col("lab")).as("lab"))
-            .localCheckpoint()
-        frontier = delta.select("u")
-        rounds += 1
-      }
-      require(fsize == 0,
-        s"incremental LPA did not converge within $LpaMaxRounds rounds " +
-          "(oscillating frontier?) — refusing to return a non-fixpoint")
-      lab.select(col("u").as("user_id"), col("lab").as("label"))
+      lpaFrontier(edges, lab, fpairs.select("u")
+          .unionByName(fpairs.select(col("v").as("u"))).distinct())
+        .select(col("u").as("user_id"), col("lab").as("label"))
         .orderBy("user_id")
     }),
 
@@ -1608,8 +1591,8 @@ object Extras {
     // k-core decomposition (k=3) by iterative peeling — the fifth
     // graph primitive: repeatedly remove nodes whose degree within the
     // surviving subgraph falls below k, to a require-checked fixpoint
-    // (the d_clusters / g_labelprop_conv / v_kmeans_conv discipline:
-    // one driver count per round, per-round localCheckpoint so lineage
+    // ([[kcorePeel]] on [[Fixpoint]], like every convergent loop: one
+    // driver count per round, per-round localCheckpoint so lineage
     // stays O(1), loud failure past the cap). Per round the work is
     // two alive-set semi-joins + one partial-agg'd degree count — the
     // peel never rescans removed structure, and the alive set only
@@ -1622,32 +1605,8 @@ object Extras {
       // r20 (ADVICE #1): the inline w≥KcoreW build was exactly
       // ssspEdges (same cap, same threshold, same symmetrization,
       // checkpointed) — shared builder, audited cap shape.
-      val edges = ssspEdges(t(s, d, "events"))
-      var alive = edges.select("u").distinct().localCheckpoint()
-      var deg: DataFrame = null
-      var prevN = alive.count()
-      var rounds = 0
-      var changed = 1L
-      while (changed > 0 && rounds < KcoreMaxRounds) {
-        // r20: lazy checkpoint, materialized by the survivor count —
-        // one driver job per round instead of two
-        deg = edges
-          .join(alive, "u")
-          .join(alive.select(col("u").as("v")), "v")
-          .groupBy("u").agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= KcoreK)
-          .localCheckpoint(false)
-        val n = deg.count()
-        changed = prevN - n
-        prevN = n
-        alive = deg.select("u")
-        rounds += 1
-        System.err.println(s"[g_kcore] round=$rounds survivors=$n")
-      }
-      require(changed == 0,
-        s"k-core peel did not converge within $KcoreMaxRounds rounds " +
-          "— refusing to return a non-fixpoint")
-      deg.select(col("u").as("user_id"), col("deg").as("core_deg"))
+      kcorePeel(ssspEdges(t(s, d, "events")))
+        .select(col("u").as("user_id"), col("deg").as("core_deg"))
         .orderBy("user_id")
     }),
 

@@ -218,25 +218,14 @@ object Vectors {
     * the n·M·K-fold PQ paths (pqEncode/pqCodebooksK), not this one.
     */
   private[graft] def kmeansLoop(e: DataFrame,
-      tag: String): (Centroids, Int) = {
-    val cap = KmeansMaxRounds
-    var cent = labelSeeds(e)
-    var rounds = 0
-    var moved = -1
-    while (moved != 0 && rounds < cap) {
+      tag: String): (Centroids, Int) =
+    Fixpoint.run(tag, KmeansMaxRounds,
+        s"k-means did not converge within $KmeansMaxRounds rounds " +
+          "(oscillating fixture?) — refusing to return a non-fixpoint")(
+        labelSeeds(e), 1L) { cent =>
       val next = lloydStep(e, cent)
-      moved = next.moved(cent)
-      cent = next
-      rounds += 1
-      // the d_clusters attribution discipline: per-round progress on
-      // stderr so convergence behavior is visible in any run log
-      System.err.println(s"[$tag] round=$rounds moved=$moved")
+      (next, next.moved(cent).toLong)
     }
-    require(moved == 0,
-      s"k-means did not converge within $cap rounds (oscillating " +
-        "fixture?) — refusing to return a non-fixpoint")
-    (cent, rounds)
-  }
 
   /** The converged assignment (vec_id, cluster), lazily projected. */
   private def kmeansFixpoint(e: DataFrame, tag: String): DataFrame =

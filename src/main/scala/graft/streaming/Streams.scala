@@ -815,6 +815,11 @@ object Streams {
     rmTree(new java.io.File(path + "_compact"))
   }
 
+  /** The type of the maintained rollups' `sv`: what Spark's re-sum of
+    * a decimal(38,4) column yields, so the first batch's partial is
+    * written with the type every later generation has. */
+  private val RollupSum = "decimal(38,4)"
+
   /** Incremental rollup maintenance as a streaming sink — the
     * `l_rollup_merge` loop run CONTINUOUSLY: every micro-batch folds
     * into a materialized (day × event_type) aggregate table by
@@ -834,7 +839,7 @@ object Streams {
         .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(graft.ops.roundf(col("value"), 4).cast("decimal(22,4)"))
-            .as("sv"))
+            .cast(RollupSum).as("sv"))
       mergeKeyed(rollupPath, id, part)(_.unionByName(part)
         .groupBy("day", "event_type")
         .agg(sum("n").as("n"), sum("sv").as("sv")))
@@ -1441,7 +1446,7 @@ object Streams {
         .agg(sum(col("sign").cast("long")).as("n"),
           sum((graft.ops.roundf(col("value"), 4) *
             col("sign").cast("double")).cast("decimal(22,4)"))
-            .as("sv"))
+            .cast(RollupSum).as("sv"))
       // a group is dropped only when it nets to NOTHING: retract
       // discipline says a retraction carries the old row verbatim, so
       // n netting to 0 implies sv nets to 0 too. Keeping n=0 groups

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.execution.FormattedMode
+import scala.jdk.CollectionConverters._
 
 /** PLANS.md made executable: the physical-plan properties claimed as the
   * 100 TB design evidence are asserted here, so a refactor that silently
@@ -1080,5 +1081,58 @@ class PlanAuditSpec extends SparkTestBase {
       "mergeSketch")
     assert(writers.toSet == allowed,
       s"the audit matched $writers; a renamed writer would pass vacuously")
+  }
+
+  /** The `while` loops of `src` whose condition or body checkpoints or
+    * counts a frame: (line, loop head). The body is the balanced brace
+    * block after the condition, or the rest of the line. */
+  private def actionLoops(src: String): Seq[(Int, String)] =
+    """\bwhile\s*\(""".r.findAllMatchIn(src).toSeq.flatMap { m =>
+      def close(from: Int, open: Char, shut: Char): Int = {
+        var depth = 0
+        var i = from
+        do {
+          if (src(i) == open) depth += 1
+          else if (src(i) == shut) depth -= 1
+          i += 1
+        } while (depth > 0 && i < src.length)
+        i
+      }
+      val cond = close(m.end - 1, '(', ')')
+      val start = src.indexWhere(c => !c.isWhitespace, cond)
+      val eol = src.indexOf('\n', cond)
+      val end =
+        if (start >= 0 && src(start) == '{') close(start, '{', '}')
+        else if (eol < 0) src.length else eol
+      val loop = src.substring(m.start, end)
+      if (loop.contains("localCheckpoint") || loop.contains(".count()"))
+        Some((src.substring(0, m.start).count(_ == '\n') + 1,
+          loop.linesIterator.next()))
+      else None
+    }
+
+  test("ops: every convergent loop runs on Fixpoint — no other while loop " +
+      "checkpoints or counts a frame") {
+    // Fixpoint owns the round cap, the named-cause require and the
+    // progress line; a hand-rolled `while (changed > 0)` around a
+    // checkpoint or a count fails here
+    val probe = "var n = 1L\nwhile (n > 0) {\n  n = df.count()\n}\n" +
+      "while (i < 3) i += 1\nwhile (k < 2) k = df.localCheckpoint().count()"
+    assert(actionLoops(probe).map(_._1) == Seq(2, 6),
+      actionLoops(probe).toString)
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/ops")
+    val files = {
+      val st = java.nio.file.Files.list(dir)
+      try st.iterator().asScala.toList finally st.close()
+    }.filter(_.toString.endsWith(".scala"))
+    assert(files.exists(_.endsWith("Fixpoint.scala")))
+    val stray = for {
+      f <- files if !f.endsWith("Fixpoint.scala")
+      (line, head) <- actionLoops(new String(
+        java.nio.file.Files.readAllBytes(f),
+        java.nio.charset.StandardCharsets.UTF_8))
+    } yield s"${f.getFileName}:$line $head"
+    assert(stray.isEmpty, s"hand-rolled convergent loops: $stray — " +
+      "drive them with Fixpoint.run")
   }
 }

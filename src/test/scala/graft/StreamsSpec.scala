@@ -1928,6 +1928,7 @@ class StreamsSpec extends SparkTestBase {
       assert(Streams.lastAppliedBatchGen(statePath).contains(1L), name)
     }
     val measured = Seq.newBuilder[(String, Int, Int)]
+    val keyed = Seq.newBuilder[(String, String)] // (name, state path)
     // (name, jobs per merge before the combinators, state subdir, apply)
     val direct: Seq[(String, Int, String, (DataFrame, String, Long) => Unit)] =
       Seq(
@@ -1967,6 +1968,7 @@ class StreamsSpec extends SparkTestBase {
       val jobs = jobsOf(apply(halves(1), base, 1L))
       measured += ((name, jobs, bound))
       unchangedOnRetry(name, statePath)(apply(halves(1), base, 1L))
+      if (!Set("hh", "cm", "hll")(name)) keyed += ((name, statePath))
     }
     val (_, events) = ops.Replay.twoBatchStream(spark, "spec_combinators",
       dir, etl.Tables.eventsRaw, "events", raw.filter(col("ts") < cut),
@@ -1997,6 +1999,7 @@ class StreamsSpec extends SparkTestBase {
       assert(ids.contains(0L) && ids.contains(1L),
         s"$name: the replay must run batches 0 and 1, ran $ids")
       measured += ((name, jobs, bound))
+      keyed += ((name, statePath))
       unchangedOnRetry(name, statePath) {
         Seq("1", ".1.crc").foreach(f =>
           new java.io.File(s"$chk/commits/$f").delete())
@@ -2007,6 +2010,20 @@ class StreamsSpec extends SparkTestBase {
     info(all.map { case (n, j, b) => s"$n $j/$b" }.mkString(", "))
     val over = all.filter { case (_, j, b) => j > b }
     assert(over.isEmpty, s"jobs per merge above the bound: $over")
+    // a keyed sink's state has one schema at every generation: gen 0
+    // holds the first batch's partial, gen 1 the merge of it with batch 1
+    def genTypes(statePath: String, gen: Int) = {
+      val dir = new java.io.File(statePath).listFiles()
+        .find(_.getName.startsWith(s"gen=$gen-"))
+        .getOrElse(fail(s"no gen=$gen dir under $statePath")).getPath
+      Streams.readState(spark, dir).schema.map(f => f.name -> f.dataType)
+        .sortBy(_._1)
+    }
+    val drift = keyed.result().flatMap { case (name, statePath) =>
+      val (g0, g1) = (genTypes(statePath, 0), genTypes(statePath, 1))
+      if (g0 == g1) None else Some(s"$name: gen 0 $g0, gen 1 $g1")
+    }
+    assert(drift.isEmpty, s"generation-dependent state schema: $drift")
   }
 
   test("a sink merging into another sink's state fails with a named " +
