@@ -1216,12 +1216,11 @@ object Dedup {
       val idxPath = new java.io.File(base, "ivf").getPath
       Vectors.ivfCentroids(corpus, lloydRounds = 1)
         .write.mode("overwrite").parquet(centPath)
-      val cent = s.read.parquet(centPath)
-      Vectors.ivfAssignTo(corpus, cent)
-        .write.mode("overwrite").parquet(idxPath)
+      val cent = Vectors.Centroids.of(s.read.parquet(centPath))
+      cent.assign(corpus).write.mode("overwrite").parquet(idxPath)
       val corpusIdx = s.read.parquet(idxPath)
       // two consumers (dup join + final projection) — materialize once
-      val basg = Vectors.ivfAssignTo(batch, cent).localCheckpoint()
+      val basg = cent.assign(batch).localCheckpoint()
       val cos = roundf(fdot(col("vu"), col("v")) /
         (sqrt(fdot(col("vu"), col("vu"))) *
           sqrt(fdot(col("v"), col("v")))), 4)

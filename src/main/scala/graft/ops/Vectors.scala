@@ -142,6 +142,11 @@ object Vectors {
     def nearest(v: Column): Column =
       org.apache.spark.sql.graftshim.NearestCell.nearest(v, ids, cv)
 
+    /** The ids of each vector's `n` nearest cells, best first: see
+      * TopCells. */
+    def top(v: Column, n: Int): Column =
+      org.apache.spark.sql.graftshim.NearestCell.top(v, n, ids, cv)
+
     /** (vec_id, v, cluster) for every vector of `e`. No cells, no rows:
       * the answer of the (vector × centroid) cross join. */
     def assign(e: DataFrame): DataFrame =
@@ -154,6 +159,19 @@ object Vectors {
     def toDF(s: org.apache.spark.sql.SparkSession): DataFrame =
       s.createDataFrame(java.util.Arrays.asList(ids.indices.map(i =>
         org.apache.spark.sql.Row(ids(i), cv(i).toSeq)): _*), CentroidSchema)
+  }
+
+  private[graft] object Centroids {
+    /** The centroids of a stored (cl, cv) frame — e.g. one read back from
+      * a maintained parquet index — collected once, so every search over
+      * it runs on the kernel and a drift in the artifact still shows. */
+    def of(cent: DataFrame): Centroids = {
+      val rows = cent.select("cl", "cv").collect().sortBy(r =>
+        (r.isNullAt(0), if (r.isNullAt(0)) 0 else r.getInt(0)))
+      Centroids(rows.map(_.getAs[Integer](0)), rows.map(r =>
+        if (r.isNullAt(1)) null
+        else r.getSeq[java.lang.Double](1).toArray))
+    }
   }
 
   private val CentroidSchema = org.apache.spark.sql.types.StructType.fromDDL(
@@ -231,58 +249,14 @@ object Vectors {
   private def kmeansFixpoint(e: DataFrame, tag: String): DataFrame =
     kmeansLoop(e, tag)._1.assign(e).select(col("vec_id"), col("cluster"))
 
-  /** The converged centroids (cl, cv). */
-  private def kmeansCentroids(e: DataFrame, tag: String): DataFrame =
-    kmeansLoop(e, tag)._1.toDF(e.sparkSession)
-
-  /** Every vector ranked against every centroid → (vec_id, v, cl, cc,
-    * rn): rn = 1 is the assignment, rn <= nprobe are a probe's search
-    * cells. Pure-double arithmetic over the broadcast centroid list —
-    * |cells| rows per vector, never a shuffle of the vector table.
-    */
-  private def ivfRanked(e: DataFrame, cent: DataFrame): DataFrame = {
-    val wA = Window.partitionBy(col("vec_id"))
-      .orderBy(desc("cc"), asc("cl"))
-    ivfScored(e, cent).withColumn("rn", row_number().over(wA))
-  }
-
-  /** The (vector × centroid) cosine table feeding both ivfRanked (full
-    * ranking, window rn) and ivfArgmin (assignment only, hash-agg
-    * argmax). r19 optimization (guide §4 + §2.3): the dot/norm folds
-    * are the codegen'd VecFold expressions instead of interpreted
-    * zip_with/aggregate lambdas, and both norms are HOISTED — |v| is
-    * computed once per vector and |c| once per centroid BEFORE the
-    * crossJoin instead of once per (vector × centroid) pair (the
-    * projection below the join cannot be factored by Catalyst because
-    * each output row recomputed it independently). cc is the identical
-    * IEEE expression dot/(|v|·|c|) — same folds, same operand order —
-    * so results are bit-unchanged (oracle-verified).
-    */
-  private def ivfScored(e: DataFrame, cent: DataFrame): DataFrame = {
-    val ev = e.select(col("vec_id"), col("embedding").as("v"),
-      sqrt(vdot(col("embedding"), col("embedding"))).as("vn"))
-    val cn = cent.select(col("cl"), col("cv"),
-      sqrt(vdot(col("cv"), col("cv"))).as("cn"))
-    ev.crossJoin(broadcast(cn))
-      .select(col("vec_id"), col("v"), col("cl"),
-        (vdot(col("v"), col("cv")) / (col("vn") * col("cn"))).as("cc"))
-  }
-
-  /** `ivfRanked(e, cent).filter(rn === 1).select(vec_id, v, cl)`
-    * without the window: the assignment is an ARGMAX per vec_id, so a
-    * hash aggregate of max(struct(cc, −cl)) replaces sort + window +
-    * rank-limit over the n·|cells| scored rows (guide §2.4 — the sort
-    * existed only to pick row 1). Tie semantics are identical to the
-    * window's (cc DESC, cl ASC): struct max compares cc first (NaN
-    * greatest — same as the sort's NaN-first under DESC), then −cl,
-    * which is cl ascending; `v` rides along and is never compared
-    * because cl is unique within a vec_id group. */
-  private def ivfArgmin(e: DataFrame, cent: DataFrame): DataFrame =
-    ivfScored(e, cent)
-      .groupBy(col("vec_id"))
-      .agg(max(struct(col("cc"), negate(col("cl")).as("ncl"),
-        col("cl").as("cl"), col("v").as("v"))).as("b"))
-      .select(col("vec_id"), col("b.v").as("v"), col("b.cl").as("cl"))
+  /** Every 50th vector of `e` with its `n` nearest cells, best first:
+    * (q, vq, pos, qc), pos 0 being the vector's own cell. Ranks only the
+    * probes, so the kernel sees n/50 vectors. */
+  private def probeCells(e: DataFrame, cent: Centroids,
+      n: Int): DataFrame =
+    e.filter(col("vec_id") % 50 === 0)
+      .select(col("vec_id").as("q"), col("embedding").as("vq"),
+        posexplode(cent.top(col("embedding"), n)).as(Seq("pos", "qc")))
 
   /** Coarse quantizer: label-seeded centroids refined by `lloydRounds`
     * Lloyd iterations (assign every vector to its nearest centroid by
@@ -293,10 +267,8 @@ object Vectors {
   private def ivfTrain(e: DataFrame, lloydRounds: Int): Centroids =
     (1 to lloydRounds).foldLeft(labelSeeds(e))((c, _) => lloydStep(e, c))
 
-  /** [[ivfTrain]] as a (cl, cv) local relation: every caller references
-    * the trained quantizer from ≥2 places (assignment + probe ranking),
-    * and a local relation is computed once, never re-executed per
-    * reference. */
+  /** [[ivfTrain]] as a (cl, cv) local relation: the frame the
+    * maintained rows write as their centroid artifact. */
   def ivfCentroids(e: DataFrame, lloydRounds: Int): DataFrame =
     ivfTrain(e, lloydRounds).toDF(e.sparkSession)
 
@@ -306,14 +278,6 @@ object Vectors {
     * partition of the space. */
   private[graft] def ivfAssign(e: DataFrame, lloydRounds: Int): DataFrame =
     ivfTrain(e, lloydRounds).assign(e)
-
-  /** Assignment against an EXISTING (cl, cv) centroid frame — e.g. one
-    * read back from a maintained parquet index. The incremental half of
-    * SemDeDup: new batches rank against the trained quantizer without
-    * retraining it. */
-  private[graft] def ivfAssignTo(e: DataFrame, cent: DataFrame): DataFrame =
-    ivfArgmin(e, cent)
-      .select(col("vec_id"), col("v"), col("cl").as("cluster"))
 
   // ---- Product quantization (v_pq; Jégou/Douze/Schmid, PAMI 2011) ----
 
@@ -364,25 +328,13 @@ object Vectors {
     * fold, so DuckDB's list_sum mirror stays bit-identical). */
   private def pqD2(sv: Column, cv: Column): Column = vl2sq(sv, cv)
 
-  /** Every sub-vector ranked against its sub-space's centroids by L2,
-    * ties to the smaller centroid id — rn = 1 is the PQ code. Centroids
-    * broadcast (M·K rows); the vector table never shuffles. */
-  private def pqRanked(subs: DataFrame, cent: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("vec_id"), col("m"))
-      .orderBy(asc("dd"), asc("cl"))
-    subs.join(broadcast(cent), "m")
-      .select(col("vec_id"), col("m"), col("sv"), col("cl"),
-        pqD2(col("sv"), col("cv")).as("dd"))
-      .withColumn("rn", row_number().over(w))
-  }
-
-  /** `pqRanked(subs, cent).filter(rn === 1)` without the window: the
-    * PQ code is an ARGMIN per (vec_id, m), so a hash aggregate of
-    * min(struct(dd, cl)) replaces sort + window + rank-limit over the
-    * n·M·K exploded rows (guide §2.4 — for K=256 that sort processed
-    * 2048 rows per vector just to keep 8). Tie semantics identical to
-    * the window's (dd ASC, cl ASC); `sv` rides along, never compared
-    * (cl unique within the group). Returns (vec_id, m, cl, sv). */
+  /** Every sub-vector's PQ code: the ARGMIN of L2 over its sub-space's
+    * centroids (broadcast, M·K rows), ties to the smaller centroid id —
+    * a hash aggregate of min(struct(dd, cl)) per (vec_id, m), with no
+    * sort or window over the n·M·K scored rows (for K=256 a window
+    * would sort 2048 rows per vector just to keep 8). `sv` rides along,
+    * never compared (cl unique within the group). Returns
+    * (vec_id, m, cl, sv). */
   private def pqArgmin(subs: DataFrame, cent: DataFrame): DataFrame =
     subs.join(broadcast(cent), "m")
       .select(col("vec_id"), col("m"), col("sv"), col("cl"),
@@ -430,7 +382,7 @@ object Vectors {
     * optional TRAINING predicate (ROADMAP r13 #2 — the production
     * operating point): seeds and every Lloyd refinement see only the
     * sampled sub-vectors, so training cost scales with the sample while
-    * the final code assignment (the caller's pqRanked over ALL subs)
+    * the final code assignment (the caller's pqEncode over ALL subs)
     * still covers the corpus. The sample must be a deterministic hash
     * predicate (the x_sample discipline) so the oracle mirrors it
     * exactly — sampled K-means with a random sample would be
@@ -574,14 +526,12 @@ object Vectors {
     * join — executed lookup volume is candidate-sized.
     */
   private def ivfpqResTopK(e: DataFrame, nprobe: Int): DataFrame = {
-    val cent = ivfCentroids(e, lloydRounds = 1)
-    // assignment via hash-agg argmax; the full ranking (window) is only
-    // needed for the every-50th probes below. Checkpointed: stored
-    // feeds residual training, the reconstructed-norm join AND the
-    // candidate gate — three references, one computation.
-    val stored = ivfArgmin(e, cent)
-      .select(col("vec_id"), col("v"), col("cl").as("cluster"))
-      .localCheckpoint(true)
+    val trained = ivfTrain(e, lloydRounds = 1)
+    val cent = trained.toDF(e.sparkSession)
+    // Checkpointed: stored feeds residual training, the
+    // reconstructed-norm join AND the candidate gate — three
+    // references, one computation.
+    val stored = trained.assign(e).localCheckpoint(true)
     // residuals (double arrays — cv is already double; the raw float
     // casts once, so both engines compute identical doubles).
     // Checkpointed: referenced by codebook training and encoding.
@@ -617,9 +567,7 @@ object Vectors {
       .groupBy(rcodes("vec_id").as("vec_id"))
       .agg(sqrt(sum(roundf(col("n2"), 9).cast("decimal(38,9)"))
         .cast("double")).as("vnrm"))
-    val probes = ivfRanked(e, cent)
-      .filter(col("rn") <= nprobe && col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("q"), col("cl").as("qc"))
+    val probes = probeCells(e, trained, nprobe).select("q", "qc")
     val qs = pqSubs(e).filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("q"), col("m"), col("sv").as("qs"))
     val qnrm = e.filter(col("vec_id") % 50 === 0)
@@ -666,22 +614,16 @@ object Vectors {
       : DataFrame = {
     val e = t(s, d, "embeddings")
     val trained = ivfTrain(e, lloydRounds)
-    val cent = trained.toDF(s)
-    // assignment: the NearestCell projection against the driver-held
-    // centroids, no shuffle; the window ranking survives only for the
-    // every-50th probes, whose vec_id % 50 filter pushes below the
-    // window (it references only the partitioning column), so the sort
-    // sees n/50 vectors.
-    val asg = trained.assign(e)
-    // quantized mode: the inverted file stores int8 vectors (the v_quant
-    // transform) — 4× less memory bandwidth on the scan that dominates
-    // IVF search at 100 TB. The symmetric scale CANCELS in cosine
-    // (cos(vq, q·s) = cos(vq, q)), so candidates are scored directly
-    // against the integer vector: only the quantization ROUNDING moves
-    // any score. Probes stay float (queries are not storage).
-    val stored =
-      if (!quantized) asg
-      else asg
+    if (!quantized) ivfTopKFrom(e, trained, trained.assign(e), nprobe)
+    else {
+      // quantized mode: the inverted file stores int8 vectors (the
+      // v_quant transform) — 4× less memory bandwidth on the scan that
+      // dominates IVF search at 100 TB. The symmetric scale CANCELS in
+      // cosine (cos(vq, q·s) = cos(vq, q)), so candidates are scored
+      // directly against the integer vector: only the quantization
+      // ROUNDING moves any score. Probes stay float (queries are not
+      // storage).
+      val stored = trained.assign(e)
         .withColumn("maxabs", array_max(transform(col("v"),
           x => abs(x.cast("double")))))
         .filter(col("maxabs") > 0)
@@ -690,56 +632,49 @@ object Vectors {
             (lit(127.0) / col("maxabs")) + lit(0.5)).cast("double"))
             .as("v"),
           col("cluster"))
-    val probes = ivfRanked(e, cent).filter(col("rn") <= nprobe &&
-        col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("q"), col("v").as("vq"),
-        col("cl").as("qc"))
-    val dotP = (a: Column, b: Column) =>
-      if (!quantized) fdot(a, b) else vdot(a, b)
-    val nrmQ = (b: Column) =>
-      if (!quantized) sqrt(fdot(b, b)) else sqrt(vdot(b, b))
+      probeTop5(probeCells(e, trained, nprobe), stored, "cos",
+        roundf(vdot(col("vq"), col("v")) /
+          (sqrt(fdot(col("vq"), col("vq"))) *
+            sqrt(vdot(col("v"), col("v")))), 4))
+    }
+  }
+
+  /** Each probe's top 5 among the members of its probed cells, ranked by
+    * `score` over the probe `vq` and the member `v`, ties to the smaller
+    * vec_id: `probes` carries (q, vq, qc), `stored` is the
+    * (vec_id, v, cluster) inverted file. → (q, vec_id, `name`, rn). */
+  private def probeTop5(probes: DataFrame, stored: DataFrame,
+      name: String, score: Column): DataFrame = {
     val wP = Window.partitionBy(col("q"))
-      .orderBy(desc("cos"), asc("vec_id"))
+      .orderBy(desc(name), asc("vec_id"))
     probes.join(stored,
         col("cluster") === col("qc") && col("vec_id") =!= col("q"))
-      .select(col("q"), col("vec_id"),
-        roundf(dotP(col("vq"), col("v")) /
-          (sqrt(fdot(col("vq"), col("vq"))) * nrmQ(col("v"))), 4)
-          .as("cos"))
+      .select(col("q"), col("vec_id"), score.as(name))
       .withColumn("rn", row_number().over(wP))
       .filter(col("rn") <= 5)
-      .select(col("q"), col("vec_id"), col("cos"), col("rn"))
+      .select(col("q"), col("vec_id"), col(name), col("rn"))
       .orderBy("q", "rn")
   }
+
+  /** [[probeTop5]] by cosine on the 1e-4 grid. */
+  private def cosTop5(probes: DataFrame, stored: DataFrame): DataFrame =
+    probeTop5(probes, stored, "cos",
+      roundf(fdot(col("vq"), col("v")) /
+        (sqrt(fdot(col("vq"), col("vq"))) *
+          sqrt(fdot(col("v"), col("v")))), 4))
 
   /** IVF top-5 probe against an EXISTING index: `stored` is the
     * (vec_id, v, cluster) inverted file — e.g. read back from the
     * streaming-maintained parquet — and `cent` the trained quantizer it
     * was built against. Probes (every 50th vector of `e`) rank against
-    * the read-back centroids only; the search path is independent of
-    * how the index was BUILT, which is the point: v_ann_maintained
-    * shares v_ann_ivf's oracle verbatim, so any drift in either
-    * maintained artifact (centroids or inverted file) goes hash-red.
+    * those centroids only; the search path is independent of how the
+    * index was BUILT, which is the point: v_ann_maintained shares
+    * v_ann_ivf's oracle verbatim, so any drift in either maintained
+    * artifact (centroids or inverted file) goes hash-red.
     */
-  private[graft] def ivfTopKFrom(e: DataFrame, cent: DataFrame,
-      stored: DataFrame, nprobe: Int): DataFrame = {
-    val probes = ivfRanked(e, cent)
-      .filter(col("rn") <= nprobe && col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("q"), col("v").as("vq"),
-        col("cl").as("qc"))
-    val wP = Window.partitionBy(col("q"))
-      .orderBy(desc("cos"), asc("vec_id"))
-    probes.join(stored,
-        col("cluster") === col("qc") && col("vec_id") =!= col("q"))
-      .select(col("q"), col("vec_id"),
-        roundf(fdot(col("vq"), col("v")) /
-          (sqrt(fdot(col("vq"), col("vq"))) *
-            sqrt(fdot(col("v"), col("v")))), 4).as("cos"))
-      .withColumn("rn", row_number().over(wP))
-      .filter(col("rn") <= 5)
-      .select(col("q"), col("vec_id"), col("cos"), col("rn"))
-      .orderBy("q", "rn")
-  }
+  private[graft] def ivfTopKFrom(e: DataFrame, cent: Centroids,
+      stored: DataFrame, nprobe: Int): DataFrame =
+    cosTop5(probeCells(e, cent, nprobe), stored)
 
   /** [[ivfTopKFrom]] with ADAPTIVE nprobe: instead of a fixed cell
     * count, each probe extends down its cell ranking until the
@@ -756,31 +691,64 @@ object Vectors {
     * rule is one running sum over ≤|cells| rows per probe). Cells are
     * taken strictly by proximity rank; the first cell is always taken.
     */
-  private[graft] def ivfTopKFromAdaptive(e: DataFrame, cent: DataFrame,
+  private[graft] def ivfTopKFromAdaptive(e: DataFrame, cent: Centroids,
       stored: DataFrame, target: Long): DataFrame = {
     val csz = stored.groupBy("cluster").agg(count(lit(1)).as("csz"))
-    val wCum = Window.partitionBy(col("vec_id")).orderBy(col("rn"))
+    val wCum = Window.partitionBy(col("q")).orderBy(col("pos"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val probes = ivfRanked(e, cent)
-      .filter(col("vec_id") % 50 === 0)
-      .join(broadcast(csz), col("cl") === csz("cluster"), "left")
+    val probes = probeCells(e, cent, cent.ids.length)
+      .join(broadcast(csz), col("qc") === csz("cluster"), "left")
       .withColumn("cum",
         coalesce(sum(coalesce(col("csz"), lit(0L))).over(wCum), lit(0L)))
-      .filter(col("rn") === 1 || col("cum") < target)
-      .select(col("vec_id").as("q"), col("v").as("vq"),
-        col("cl").as("qc"))
-    val wP = Window.partitionBy(col("q"))
-      .orderBy(desc("cos"), asc("vec_id"))
-    probes.join(stored,
-        col("cluster") === col("qc") && col("vec_id") =!= col("q"))
-      .select(col("q"), col("vec_id"),
-        roundf(fdot(col("vq"), col("v")) /
-          (sqrt(fdot(col("vq"), col("vq"))) *
-            sqrt(fdot(col("v"), col("v")))), 4).as("cos"))
-      .withColumn("rn", row_number().over(wP))
-      .filter(col("rn") <= 5)
-      .select(col("q"), col("vec_id"), col("cos"), col("rn"))
-      .orderBy("q", "rn")
+      .filter(col("pos") === 0 || col("cum") < target)
+      .select("q", "vq", "qc")
+    cosTop5(probes, stored)
+  }
+
+  /** IVF-PQ candidates: each probe paired with the members of its 2
+    * nearest cells in `cells`, the (vec_id, cluster) inverted file.
+    * → (q, vec_id). */
+  private def ivfpqCand(e: DataFrame, coarse: Centroids,
+      cells: DataFrame): DataFrame =
+    probeCells(e, coarse, 2).select("q", "qc")
+      .join(cells.select(col("vec_id"), col("cluster").as("qc")), "qc")
+      .select("q", "vec_id")
+
+  /** IVF-PQ ADC top-`topR` of every probe among the members of its 2
+    * nearest cells, codebooks and coarse quantizer trained over `e`. */
+  private def ivfpqTopK(e: DataFrame, topR: Int): DataFrame = {
+    val cent = pqCodebooks(e, lloydRounds = 1)
+    val icent = ivfTrain(e, lloydRounds = 1)
+    pqTopK(e, cent, pqEncode(e, cent),
+      Some(ivfpqCand(e, icent, icent.assign(e))), topR)
+  }
+
+  /** The maintained inverted file of v_ann_maintained and
+    * v_ann_filtered_maintained: the quantizer trained over the
+    * embeddings is written as a parquet artifact and read back once,
+    * then a two-batch replay assigns the vectors that satisfy `keep`
+    * through the real appendMaintain sink. → (embeddings, read-back
+    * centroids, read-back (vec_id, v, cluster) inverted file). */
+  private def maintainedIvf(s: org.apache.spark.sql.SparkSession,
+      d: String, tag: String,
+      keep: Column): (DataFrame, Centroids, DataFrame) = {
+    val e = t(s, d, "embeddings")
+    val mid = e.agg(max("vec_id")).head.getLong(0) / 2
+    val (base, stream) = Replay.twoBatchStream(s, tag, d,
+      graft.etl.Tables.schemas("embeddings"), "emb",
+      e.filter(col("vec_id") < mid), e.filter(col("vec_id") >= mid))
+    val centPath = new java.io.File(base, "centroids").getPath
+    ivfCentroids(e, lloydRounds = 1)
+      .write.mode("overwrite").parquet(centPath)
+    val cent = Centroids.of(s.read.parquet(centPath))
+    val idxPath = new java.io.File(base, "ivf").getPath
+    val q = graft.streaming.Streams.appendMaintain(stream, idxPath)(
+      b => cent.assign(b.filter(keep)))
+    require(q.awaitTermination(600000),
+      s"$tag inverted-file maintenance stream must drain (AvailableNow)")
+    require(q.recentProgress.map(_.batchId).distinct.length >= 2,
+      "replay must span two micro-batches or the append path is untested")
+    (e, cent, graft.streaming.Streams.readMaintained(s, idxPath))
   }
 
   val queries: Map[String, Q] = Map(
@@ -939,9 +907,8 @@ object Vectors {
       val train = graft.ops.Text.portableHash(concat(lit("kms:"),
         col("vec_id").cast("string"))) % 4 === 0
       val sample = e.filter(train)
-      val cent = kmeansCentroids(sample, "v_kmeans_sampled")
-      ivfArgmin(e, cent)
-        .select(col("vec_id"), col("cl").as("cluster"))
+      kmeansLoop(sample, "v_kmeans_sampled")._1.assign(e)
+        .select(col("vec_id"), col("cluster"))
         .orderBy("vec_id")
     }),
 
@@ -959,24 +926,8 @@ object Vectors {
     // index: each vector shard pays O(shard · |cells|) assignment and
     // one append — the index is never rebuilt and never rescanned.
     "v_ann_maintained" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      val mid = e.agg(max("vec_id")).head.getLong(0) / 2
-      val (base, stream) = Replay.twoBatchStream(s, "ann_idx", d,
-        graft.etl.Tables.schemas("embeddings"), "emb",
-        e.filter(col("vec_id") < mid), e.filter(col("vec_id") >= mid))
-      val centPath = new java.io.File(base, "centroids").getPath
-      ivfCentroids(e, lloydRounds = 1)
-        .write.mode("overwrite").parquet(centPath)
-      val cent = s.read.parquet(centPath)
-      val idxPath = new java.io.File(base, "ivf").getPath
-      val q = graft.streaming.Streams.appendMaintain(stream, idxPath)(
-        b => ivfAssignTo(b, cent))
-      require(q.awaitTermination(600000),
-        "inverted-file maintenance stream must drain (AvailableNow)")
-      require(q.recentProgress.map(_.batchId).distinct.length >= 2,
-        "replay must span two micro-batches or the append path is untested")
-      ivfTopKFrom(e, cent,
-        graft.streaming.Streams.readMaintained(s, idxPath), nprobe = 1)
+      val (e, cent, stored) = maintainedIvf(s, d, "ann_idx", lit(true))
+      ivfTopKFrom(e, cent, stored, nprobe = 1)
     }),
 
     // nprobe=2: the standard recall/cost knob — each probe unions two
@@ -1000,10 +951,9 @@ object Vectors {
     // lever is raising nprobe — same knob, same plan shape.
     "v_ann_filtered" -> ((s, d) => {
       val e = t(s, d, "embeddings")
-      val cent = ivfCentroids(e, lloydRounds = 1)
-      val stored = ivfArgmin(e.filter(col("label") % 2 === 0), cent)
-        .select(col("vec_id"), col("v"), col("cl").as("cluster"))
-      ivfTopKFrom(e, cent, stored, nprobe = 2)
+      val cent = ivfTrain(e, lloydRounds = 1)
+      ivfTopKFrom(e, cent, cent.assign(e.filter(col("label") % 2 === 0)),
+        nprobe = 2)
     }),
 
     // FILTERED ANN over the MAINTAINED index with ADAPTIVE nprobe —
@@ -1020,26 +970,9 @@ object Vectors {
     // drift in the maintained cell sizes changes which cells probes
     // take and goes hash-red.
     "v_ann_filtered_maintained" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      val pred = col("label") === 4
-      val mid = e.agg(max("vec_id")).head.getLong(0) / 2
-      val (base, stream) = Replay.twoBatchStream(s, "annf_idx", d,
-        graft.etl.Tables.schemas("embeddings"), "emb",
-        e.filter(col("vec_id") < mid), e.filter(col("vec_id") >= mid))
-      val centPath = new java.io.File(base, "centroids").getPath
-      ivfCentroids(e, lloydRounds = 1)
-        .write.mode("overwrite").parquet(centPath)
-      val cent = s.read.parquet(centPath)
-      val idxPath = new java.io.File(base, "ivf").getPath
-      val q = graft.streaming.Streams.appendMaintain(stream, idxPath)(
-        b => ivfAssignTo(b.filter(pred), cent))
-      require(q.awaitTermination(600000),
-        "filtered inverted-file maintenance stream must drain")
-      require(q.recentProgress.map(_.batchId).distinct.length >= 2,
-        "replay must span two micro-batches or the append path is untested")
-      ivfTopKFromAdaptive(e, cent,
-        graft.streaming.Streams.readMaintained(s, idxPath),
-        target = AnnFilteredTarget)
+      val (e, cent, stored) =
+        maintainedIvf(s, d, "annf_idx", col("label") === 4)
+      ivfTopKFromAdaptive(e, cent, stored, target = AnnFilteredTarget)
     }),
 
     // nprobe=4: the top of the measured recall/cost ladder (IvfSpec:
@@ -1130,19 +1063,7 @@ object Vectors {
     // candidate cap (nprobe=2 ≈ 0.46 ceiling) gates what ADC can
     // return. Oracle composes the SAME two proven CTE chains with the
     // candidate restriction.
-    "v_ivfpq" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      val cent = pqCodebooks(e, lloydRounds = 1)
-      val codes = pqEncode(e, cent)
-      val icent = ivfCentroids(e, lloydRounds = 1)
-      val stored = ivfArgmin(e, icent)
-        .select(col("vec_id"), col("cl").as("qc"))
-      val probes = ivfRanked(e, icent)
-        .filter(col("rn") <= 2 && col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("q"), col("cl").as("qc"))
-      val cand = probes.join(stored, "qc").select("q", "vec_id")
-      pqTopK(e, cent, codes, Some(cand))
-    }),
+    "v_ivfpq" -> ((s, d) => ivfpqTopK(t(s, d, "embeddings"), topR = 5)),
 
     // TWO-STAGE IVF-PQ search — the production FAISS pattern v_ivfpq
     // stops short of: the compressed index only SHORTLISTS (ADC top-25
@@ -1157,17 +1078,7 @@ object Vectors {
     // v_knn_brute's verbatim (FloatVecDot, 1e-4 grid).
     "v_ivfpq_rerank" -> ((s, d) => {
       val e = t(s, d, "embeddings")
-      val cent = pqCodebooks(e, lloydRounds = 1)
-      val codes = pqEncode(e, cent)
-      val icent = ivfCentroids(e, lloydRounds = 1)
-      val stored = ivfArgmin(e, icent)
-        .select(col("vec_id"), col("cl").as("qc"))
-      val probes = ivfRanked(e, icent)
-        .filter(col("rn") <= 2 && col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("q"), col("cl").as("qc"))
-      val cand = probes.join(stored, "qc").select("q", "vec_id")
-      val short = pqTopK(e, cent, codes, Some(cand), topR = 25)
-        .select("q", "vec_id")
+      val short = ivfpqTopK(e, topR = 25).select("q", "vec_id")
       val ev = e.select(col("vec_id"), col("embedding").as("v"),
         norm(col("embedding")).as("nrm"))
       val qv = ev.filter(col("vec_id") % 50 === 0)
@@ -1259,7 +1170,7 @@ object Vectors {
       val coarsePath = new java.io.File(base, "coarse").getPath
       ivfCentroids(e, lloydRounds = 1)
         .write.mode("overwrite").parquet(coarsePath)
-      val coarse = s.read.parquet(coarsePath)
+      val coarse = Centroids.of(s.read.parquet(coarsePath))
       val cbPath = new java.io.File(base, "codebooks").getPath
       pqCodebooks(e, lloydRounds = 1)
         .write.mode("overwrite").parquet(cbPath)
@@ -1270,7 +1181,7 @@ object Vectors {
         // cell assignment ONLY — the PQ codes carry the payload, so
         // the inverted file never stores the raw vector
         idxPath -> ((b: DataFrame) =>
-          ivfAssignTo(b, coarse).select("vec_id", "cluster")),
+          coarse.assign(b).select("vec_id", "cluster")),
         codesPath -> ((b: DataFrame) =>
           pqArgmin(pqSubs(b), cent)
             .select(col("vec_id"), col("m"), col("cl").as("code")))))
@@ -1279,12 +1190,8 @@ object Vectors {
       require(q.recentProgress.map(_.batchId).distinct.length >= 2,
         "replay must span two micro-batches or the paired append is " +
           "untested")
-      val stored = graft.streaming.Streams.readMaintained(s, idxPath)
-        .select(col("vec_id"), col("cluster").as("qc"))
-      val probes = ivfRanked(e, coarse)
-        .filter(col("rn") <= 2 && col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("q"), col("cl").as("qc"))
-      val cand = probes.join(stored, "qc").select("q", "vec_id")
+      val cand = ivfpqCand(e, coarse,
+        graft.streaming.Streams.readMaintained(s, idxPath))
       pqTopK(e, cent,
         graft.streaming.Streams.readMaintained(s, codesPath),
         Some(cand))
@@ -1437,26 +1344,15 @@ object Vectors {
       val aug = base.select(col("vec_id"), col("label"),
         concat(transform(col("embedding"), x => x.cast("double")),
           array(sqrt(lit(m2) - col("n2")))).as("embedding"))
-      val cent = ivfCentroids(aug, lloydRounds = 1)
-      val stored = ivfArgmin(aug, cent)
-        .select(col("vec_id"), col("cl").as("cluster"))
+      val cent = ivfTrain(aug, lloydRounds = 1)
+      val stored = cent.assign(aug)
+        .select(col("vec_id"), col("cluster"))
         .join(e0.select(col("vec_id"), col("embedding").as("v")),
           "vec_id")
-      val probes = ivfRanked(aug, cent)
-        .filter(col("rn") <= 2 && col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("q"), col("cl").as("qc"))
+      val probes = probeCells(aug, cent, 2).select("q", "qc")
         .join(e0.select(col("vec_id").as("q"),
           col("embedding").as("vq")), "q")
-      val wP = Window.partitionBy(col("q"))
-        .orderBy(desc("dot"), asc("vec_id"))
-      probes.join(stored,
-          col("cluster") === col("qc") && col("vec_id") =!= col("q"))
-        .select(col("q"), col("vec_id"),
-          roundf(fdot(col("vq"), col("v")), 4).as("dot"))
-        .withColumn("rn", row_number().over(wP))
-        .filter(col("rn") <= 5)
-        .select(col("q"), col("vec_id"), col("dot"), col("rn"))
-        .orderBy("q", "rn")
+      probeTop5(probes, stored, "dot", roundf(fdot(col("vq"), col("v")), 4))
     }),
 
     // Per-label centroid, long format (label, dim, exact fixed-point sum +
@@ -1662,7 +1558,7 @@ object Vectors {
       .mkString(" UNION ALL ")
     // sampled-training mode: seeds and Lloyd refinement rank only the
     // sampled sub-vectors (tsubs); codes then come from one extra
-    // final ranking over ALL subs — mirroring pqCodebooksK + pqRanked
+    // final ranking over ALL subs — mirroring pqCodebooksK + pqEncode
     val trainTable = if (trainPred.isEmpty) "subs" else "tsubs"
     val tsubsCte = trainPred.fold("")(p =>
       s"tsubs AS MATERIALIZED (SELECT * FROM subs WHERE $p),\n         ")

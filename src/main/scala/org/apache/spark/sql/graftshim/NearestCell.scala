@@ -10,7 +10,9 @@ import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes,
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
   CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData,
+  SQLOrderingUtil}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.errors.QueryExecutionErrors
 import org.apache.spark.sql.internal.SQLConf
@@ -21,6 +23,17 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType,
   * (ascending, a null id last) and each cell's centroid. A centroid with
   * a null component is stored as null: its norm, and so every cosine
   * against it, is null.
+  *
+  * Both kernels score `cc = v·c / (|v|·|c|)` as the (vector × centroid)
+  * cross join over a `(cl, cv)` frame does (KmeansSpec keeps that join as
+  * the test-side reference and compares against it):
+  *  - every term is VecDotD's double left fold (floats widened), then the
+  *    same `sqrt`, `*` and `/` in the same operand order;
+  *  - Divide's null rules: a null divisor, or a zero divisor outside ANSI
+  *    mode, makes cc null; a zero divisor in ANSI mode raises
+  *    DIVIDE_BY_ZERO unless the dot is null;
+  *  - Spark's double order: NaN greatest, null lowest, −0.0 = 0.0.
+  * A null vector, or a null element (it nulls |v|), makes every cc null.
   */
 final class CellTable private (ids: Array[Integer],
     cells: Array[Array[Double]]) extends Serializable {
@@ -28,55 +41,81 @@ final class CellTable private (ids: Array[Integer],
   private val norms: Array[Double] = cells.map(c =>
     if (c == null) 0.0 else math.sqrt(CellTable.dot(c, c, c.length)))
 
-  /** The argmax of `cc = v·c / (|v|·|c|)` over the cells — the exact
-    * `max(struct(cc, −cl))` of the (vector × centroid) cross join it
-    * replaces:
-    *  - every term is VecDotD's double left fold (floats widened), then
-    *    the same `sqrt`, `*` and `/` in the same operand order;
-    *  - Divide's null rules: a null divisor, or a zero divisor outside
-    *    ANSI mode, makes cc null; a zero divisor in ANSI mode raises
-    *    DIVIDE_BY_ZERO unless the dot is null;
-    *  - Spark's double order: NaN greatest, null lowest, −0.0 = 0.0;
-    *    ties go to the earlier cell, i.e. the smaller id. A vector whose
-    *    cc is null against every cell (a null embedding, or a null
-    *    element) lands in the first cell.
-    * Zero cells → null.
-    */
-  def nearest(v: ArrayData, isFloat: Boolean,
-      failOnError: Boolean): Integer = {
-    if (ids.isEmpty) return null
-    // a null vector, or a null element (it nulls |v|), makes every cc
-    // null: the first cell wins
-    if (v == null) return ids(0)
+  /** `v` widened to doubles; null when `v` or one of its elements is. */
+  private def doubles(v: ArrayData, isFloat: Boolean): Array[Double] = {
+    if (v == null) return null
     val n = v.numElements()
     val x = new Array[Double](n)
     var i = 0
     while (i < n) {
-      if (v.isNullAt(i)) return ids(0)
+      if (v.isNullAt(i)) return null
       x(i) = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
       i += 1
     }
-    val vn = math.sqrt(CellTable.dot(x, x, n))
+    x
+  }
+
+  /** Whether cc against cell `j` is null for a non-null vector of norm
+    * `vn`: a null centroid, or a zero divisor outside ANSI mode. */
+  private def nullCc(vn: Double, j: Int, failOnError: Boolean): Boolean =
+    cells(j) == null || (vn * norms(j) == 0 && !failOnError)
+
+  /** cc against a cell where [[nullCc]] is false. */
+  private def cc(x: Array[Double], vn: Double, j: Int): Double = {
+    val c = cells(j)
+    val div = vn * norms(j)
+    val dot = CellTable.dot(x, c, math.min(x.length, c.length))
+    if (div == 0) throw QueryExecutionErrors.divideByZeroError(null)
+    dot / div
+  }
+
+  /** The argmax of cc over the cells: the cross join's
+    * `max(struct(cc, −cl))`. Ties go to the earlier cell, i.e. the
+    * smaller id; a vector whose cc is null against every cell lands in
+    * the first cell. Zero cells → null.
+    */
+  def nearest(v: ArrayData, isFloat: Boolean,
+      failOnError: Boolean): Integer = {
+    if (ids.isEmpty) return null
+    val x = doubles(v, isFloat)
+    if (x == null) return ids(0)
+    val vn = math.sqrt(CellTable.dot(x, x, x.length))
     var best = -1
     var bestCc = 0.0
     var j = 0
     while (j < ids.length) {
-      val c = cells(j)
-      if (c != null) {
-        val div = vn * norms(j)
-        if (div != 0 || failOnError) {
-          val dot = CellTable.dot(x, c, math.min(n, c.length))
-          if (div == 0) throw QueryExecutionErrors.divideByZeroError(null)
-          val cc = dot / div
-          if (best < 0 || SQLOrderingUtil.compareDoubles(cc, bestCc) > 0) {
-            best = j
-            bestCc = cc
-          }
+      if (!nullCc(vn, j, failOnError)) {
+        val c = cc(x, vn, j)
+        if (best < 0 || SQLOrderingUtil.compareDoubles(c, bestCc) > 0) {
+          best = j
+          bestCc = c
         }
       }
       j += 1
     }
     ids(math.max(best, 0))
+  }
+
+  /** The ids of the `n` best cells, best first, in the cross join's
+    * window order `cc DESC NULLS LAST, cl ASC NULLS FIRST`: it differs
+    * from [[nearest]]'s order only in putting a null id first among
+    * ties. `n` past the cell count ranks every cell.
+    */
+  def top(v: ArrayData, n: Int, isFloat: Boolean,
+      failOnError: Boolean): ArrayData = {
+    val x = doubles(v, isFloat)
+    val vn = if (x == null) 0.0 else math.sqrt(CellTable.dot(x, x, x.length))
+    val score = Array.tabulate[java.lang.Double](ids.length)(j =>
+      if (x == null || nullCc(vn, j, failOnError)) null else cc(x, vn, j))
+    def ahead(a: Int, b: Int): Boolean = {
+      val c =
+        if (score(a) == null || score(b) == null)
+          (if (score(b) == null) 1 else 0) - (if (score(a) == null) 1 else 0)
+        else SQLOrderingUtil.compareDoubles(score(a), score(b))
+      if (c != 0) c > 0 else ids(b) != null && (ids(a) == null || a < b)
+    }
+    new GenericArrayData(
+      ids.indices.sortWith(ahead).take(n).map(ids(_)).toArray[Any])
   }
 
   override def toString: String = s"cells(${ids.length})"
@@ -106,33 +145,36 @@ object CellTable {
   }
 }
 
-/** `NearestCell(embedding, cells)`: the id of the cell whose centroid has
-  * the highest cosine with the vector (see [[CellTable.nearest]]), over
-  * float or double arrays.
-  *
-  * The centroid matrix reaches generated code as a reference object,
-  * never as inlined literals, so the generated source — and Janino's
-  * compile cache entry — is the same for every centroid set: a Lloyd
-  * loop that re-projects each round compiles once, not once per round.
-  * `failOnError` is captured at construction, as Divide captures it.
+/** A float or double vector in, a driver-held [[CellTable]] reached from
+  * generated code as a reference object, never as inlined literals: the
+  * generated source — and Janino's compile cache entry — is the same for
+  * every centroid set, so a Lloyd loop that re-projects each round
+  * compiles once, not once per round. `failOnError` is captured at
+  * construction, as Divide captures it.
   */
-case class NearestCell(child: Expression, cells: CellTable,
-    failOnError: Boolean = SQLConf.get.ansiEnabled)
-    extends UnaryExpression with ExpectsInputTypes {
+sealed trait CellKernel extends UnaryExpression with ExpectsInputTypes {
+  def cells: CellTable
 
   override def inputTypes: Seq[AbstractDataType] =
     Seq(TypeCollection(ArrayType(DoubleType), ArrayType(FloatType)))
+
+  protected def isFloat: Boolean = child.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
+}
+
+/** `NearestCell(embedding, cells)`: the id of the cell whose centroid has
+  * the highest cosine with the vector (see [[CellTable.nearest]]).
+  */
+case class NearestCell(child: Expression, cells: CellTable,
+    failOnError: Boolean = SQLConf.get.ansiEnabled) extends CellKernel {
 
   override def dataType: DataType = IntegerType
 
   override def nullable: Boolean = true
 
   override def prettyName: String = "nearest_cell"
-
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
 
   override def eval(input: InternalRow): Any =
     cells.nearest(child.eval(input).asInstanceOf[ArrayData], isFloat,
@@ -156,10 +198,48 @@ case class NearestCell(child: Expression, cells: CellTable,
       newChild: Expression): NearestCell = copy(child = newChild)
 }
 
+/** `TopCells(embedding, cells, n)`: the ids of the `n` cells nearest the
+  * vector, best first (see [[CellTable.top]]). Never null: a null vector
+  * ranks the cells by id alone.
+  */
+case class TopCells(child: Expression, cells: CellTable, n: Int,
+    failOnError: Boolean = SQLConf.get.ansiEnabled) extends CellKernel {
+
+  override def dataType: DataType = ArrayType(IntegerType)
+
+  override def nullable: Boolean = false
+
+  override def prettyName: String = "top_cells"
+
+  override def eval(input: InternalRow): Any =
+    cells.top(child.eval(input).asInstanceOf[ArrayData], n, isFloat,
+      failOnError)
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("cells", cells)
+    val v = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${v.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = $ref.top(
+        ${v.isNull} ? null : ${v.value}, $n, $isFloat, $failOnError);""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(
+      newChild: Expression): TopCells = copy(child = newChild)
+}
+
 object NearestCell {
   /** Column-API entry point: `cv(i)` is the centroid of cell `ids(i)`. */
   def nearest(v: Column, ids: Array[Integer],
       cv: Array[Array[java.lang.Double]]): Column =
     ExpressionUtils.column(NearestCell(ExpressionUtils.expression(v),
       CellTable(ids, cv)))
+
+  /** [[nearest]]'s ranking form: the `n` nearest cell ids, best first. */
+  def top(v: Column, n: Int, ids: Array[Integer],
+      cv: Array[Array[java.lang.Double]]): Column =
+    ExpressionUtils.column(TopCells(ExpressionUtils.expression(v),
+      CellTable(ids, cv), n))
 }

@@ -85,8 +85,8 @@ class IvfSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     assert(exact.nonEmpty)
-    val cent = Vectors.ivfCentroids(e, lloydRounds = 1)
-    val stored = Vectors.ivfAssignTo(e.filter(pred), cent)
+    val cent = Vectors.Centroids.of(Vectors.ivfCentroids(e, lloydRounds = 1))
+    val stored = cent.assign(e.filter(pred))
     def recallOf(df: org.apache.spark.sql.DataFrame): Double = {
       val got = df.select("q", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1)))

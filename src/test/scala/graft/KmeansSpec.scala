@@ -4,16 +4,17 @@ import org.apache.spark.SparkThrowable
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.NearestCell
 import org.apache.spark.sql.types._
-import graft.ops.Vectors
+import graft.ops.{Vectors, vdot}
 
-/** The driver-held Lloyd loop: the NearestCell kernel picks the same cell
-  * as the (vector × centroid) cross-join argmax it replaced, degenerate
-  * inputs converge instead of tripping the round cap, each round costs a
-  * bounded number of Spark jobs, and the generated code does not change
-  * from round to round.
+/** The driver-held cell kernels and the Lloyd loop: NearestCell picks the
+  * same cell as the (vector × centroid) cross-join argmax, TopCells ranks
+  * cells as that join's window does, degenerate inputs converge instead
+  * of tripping the round cap, each round costs a bounded number of Spark
+  * jobs, and the generated code does not change from round to round.
   */
 class KmeansSpec extends SparkTestBase {
 
@@ -45,20 +46,72 @@ class KmeansSpec extends SparkTestBase {
         else r.getSeq[java.lang.Double](1).toArray))
   }
 
-  /** vec_id → cluster under the cross-join argmax (ivfArgmin) and under
-    * NearestCell, with whole-stage codegen on and fully interpreted. */
-  private def assertParity(e: DataFrame, cent: DataFrame): Unit = {
-    val want = Vectors.ivfAssignTo(e, cent).select("vec_id", "cluster")
+  /** The reference both kernels are held to: every vector scored
+    * against every centroid by a broadcast cross join,
+    * cc = v·c / (|v|·|c|) → (vec_id, cl, cc). */
+  private def scored(e: DataFrame, cent: DataFrame): DataFrame = {
+    val ev = e.select(col("vec_id"), col("embedding").as("v"),
+      sqrt(vdot(col("embedding"), col("embedding"))).as("vn"))
+    val cn = cent.select(col("cl"), col("cv"),
+      sqrt(vdot(col("cv"), col("cv"))).as("cn"))
+    ev.crossJoin(broadcast(cn))
+      .select(col("vec_id"), col("cl"),
+        (vdot(col("v"), col("cv")) / (col("vn") * col("cn"))).as("cc"))
+  }
+
+  /** vec_id → cluster by the reference argmax max(struct(cc, −cl)). */
+  private def argmaxRef(e: DataFrame,
+      cent: DataFrame): Map[Long, Integer] =
+    scored(e, cent).groupBy(col("vec_id"))
+      .agg(max(struct(col("cc"), negate(col("cl")).as("ncl"),
+        col("cl").as("cl"))).as("b"))
+      .select(col("vec_id"), col("b.cl"))
       .collect().map(r => r.getLong(0) -> r.getAs[Integer](1)).toMap
+
+  /** vec_id → every cell, best first, by the reference window
+    * `row_number() OVER (PARTITION BY vec_id ORDER BY cc DESC, cl ASC)`.
+    */
+  private def rankedRef(e: DataFrame,
+      cent: DataFrame): Map[Long, Seq[Integer]] =
+    scored(e, cent).withColumn("rn", row_number().over(
+        Window.partitionBy(col("vec_id")).orderBy(desc("cc"), asc("cl"))))
+      .collect()
+      .groupBy(_.getLong(0)).view.mapValues(_.sortBy(_.getInt(3))
+        .map(_.getAs[Integer](1)).toSeq).toMap
+
+  private val codegenModes = Seq(
+    Seq("spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+    Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+
+  /** vec_id → cluster under the reference argmax and under NearestCell,
+    * with whole-stage codegen on and fully interpreted. */
+  private def assertParity(e: DataFrame, cent: DataFrame): Unit = {
+    val want = argmaxRef(e, cent)
     val (ids, cv) = cells(cent)
-    for (mode <- Seq(Seq("spark.sql.codegen.wholeStage" -> "true",
-        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
-      Seq("spark.sql.codegen.wholeStage" -> "false",
-        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))) withConf(mode: _*) {
+    for (mode <- codegenModes) withConf(mode: _*) {
       val got = e.select(col("vec_id"),
           NearestCell.nearest(col("embedding"), ids, cv).as("cluster"))
         .collect().map(r => r.getLong(0) -> r.getAs[Integer](1)).toMap
       assert(got == want, s"$mode: ${(got.toSet diff want.toSet).take(5)}")
+    }
+  }
+
+  /** vec_id → its `n` best cells under the reference window and under
+    * TopCells, in both codegen modes, for each `n`. */
+  private def assertTopParity(e: DataFrame, cent: DataFrame,
+      ns: Int*): Unit = {
+    val ranked = rankedRef(e, cent)
+    val (ids, cv) = cells(cent)
+    for (n <- ns; mode <- codegenModes) withConf(mode: _*) {
+      val got = e.select(col("vec_id"),
+          NearestCell.top(col("embedding"), n, ids, cv).as("top"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Integer](1)).toMap
+      val want = got.keys.map(k =>
+        k -> ranked.getOrElse(k, Seq.empty).take(n)).toMap
+      assert(got == want,
+        s"n=$n $mode: ${(got.toSet diff want.toSet).take(5)}")
     }
   }
 
@@ -69,7 +122,8 @@ class KmeansSpec extends SparkTestBase {
     spark.createDataFrame(java.util.Arrays.asList(rows.map { case (id, v) =>
       Row(id, v, 0) }: _*), embSchema)
 
-  private def cents(rows: (Int, Seq[java.lang.Double])*): DataFrame =
+  /** (cl, cv) rows; a cell id may be null. */
+  private def cents(rows: (Any, Seq[java.lang.Double])*): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows.map { case (k, c) =>
       Row(k, c) }: _*), StructType.fromDDL("cl INT, cv ARRAY<DOUBLE>"))
 
@@ -77,6 +131,14 @@ class KmeansSpec extends SparkTestBase {
     xs.map(x => java.lang.Float.valueOf(x.toFloat))
   private def d(xs: Double*): Seq[java.lang.Double] =
     xs.map(x => java.lang.Double.valueOf(x))
+
+  /** The error condition `body` raises. */
+  private def condition(body: => Any): String = {
+    val t = intercept[Throwable](body)
+    Iterator.iterate[Throwable](t)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case s: SparkThrowable => s.getCondition }
+      .getOrElse(fail(s"no SparkThrowable in $t"))
+  }
 
   test("NearestCell equals the cross-join argmax on the sf0.01 embeddings") {
     val e = graft.etl.Tables.load(spark, requireFixture("sf0.01"),
@@ -126,18 +188,71 @@ class KmeansSpec extends SparkTestBase {
     // so it lands in the smallest cell — on both paths
     withConf("spark.sql.ansi.enabled" -> "false")(assertParity(e, cent))
     // in ANSI mode cc = 0 / 0 raises on both paths
-    def condition(body: => Any): String = {
-      val t = intercept[Throwable](body)
-      Iterator.iterate[Throwable](t)(_.getCause).takeWhile(_ != null)
-        .collectFirst { case s: SparkThrowable => s.getCondition }
-        .getOrElse(fail(s"no SparkThrowable in $t"))
-    }
     withConf("spark.sql.ansi.enabled" -> "true") {
       val (ids, cv) = cells(cent)
-      assert(condition(Vectors.ivfAssignTo(e, cent).collect()) ==
-        "DIVIDE_BY_ZERO")
+      assert(condition(argmaxRef(e, cent)) == "DIVIDE_BY_ZERO")
       assert(condition(e.select(NearestCell.nearest(col("embedding"),
         ids, cv)).collect()) == "DIVIDE_BY_ZERO")
+    }
+  }
+
+  test("TopCells equals the cross-join window ranking on the sf0.01 " +
+      "embeddings") {
+    val e = graft.etl.Tables.load(spark, requireFixture("sf0.01"),
+      "embeddings")
+    // the probe depths the IVF rows use, and every cell (the adaptive
+    // row) and past it
+    assertTopParity(e, Vectors.ivfCentroids(e, lloydRounds = 0), 1, 2, 12)
+    assertTopParity(e, Vectors.ivfCentroids(e, lloydRounds = 1),
+      1, 2, 4, 8, 10, 12)
+  }
+
+  test("TopCells equals the cross-join window ranking on edge cases") {
+    val nullElem: Seq[java.lang.Float] = Seq(1f, null, 0f)
+    val e = vecs(
+      1L -> f(1, 2, 3),
+      2L -> f(3, 2, 1),
+      3L -> f(0, 0, 1),
+      4L -> null,                                  // null embedding
+      5L -> nullElem,                              // null element
+      6L -> f(Double.PositiveInfinity, 1, 0),      // NaN cc everywhere
+      7L -> f(Double.NaN, 0, 0),                   // NaN cc everywhere
+      8L -> f(1, 1))                               // shorter vector
+    val nullComp: Seq[java.lang.Double] = Seq(1.0, null, 1.0)
+    // duplicate centroids tie: the smaller id ranks first
+    val dup = cents(7 -> d(1, 2, 3), 2 -> d(1, 2, 3), 9 -> d(0, 1, 1),
+      5 -> d(0, 1, 1), 4 -> d(3, 2, 1))
+    // a null cell id tying with cell 3 ranks first (cl ASC NULLS FIRST),
+    // while the argmax sends that tie to cell 3 (null id last)
+    val nullId = cents(3 -> d(1, 2, 3), (null, d(1, 2, 3)), 8 -> d(0, 0, 1),
+      6 -> nullComp, 11 -> d(Double.PositiveInfinity, 0, 0))
+    for (cent <- Seq(dup, nullId, cents(4 -> nullComp),
+        cents(4 -> d(1, 1, 1)))) {
+      val k = cent.count().toInt
+      assertTopParity(e, cent, 1, 2, k, k + 3)
+      assertParity(e, cent)
+      // double-typed vectors (the v_mips augmented input)
+      assertTopParity(e.select(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double"))
+          .as("embedding")), cent, 2, k + 3)
+    }
+    // no cells: an empty ranking, as the cross join has no rows
+    assert(e.select(NearestCell.top(col("embedding"), 3, Array.empty,
+      Array.empty)).collect().forall(_.getSeq[Integer](0).isEmpty))
+  }
+
+  test("TopCells on the zero vector: ANSI division by zero, or a ranking " +
+      "by id alone without ANSI") {
+    val e = vecs(1L -> f(1, 0, 0), 2L -> f(0, 0, 0), 3L -> f(0, 1, 0))
+    val cent = cents(5 -> d(0, 1, 0), 2 -> d(1, 0, 0), (null, d(1, 1, 0)))
+    withConf("spark.sql.ansi.enabled" -> "false")(
+      assertTopParity(e, cent, 1, 3))
+    withConf("spark.sql.ansi.enabled" -> "true") {
+      val (ids, cv) = cells(cent)
+      assert(condition(rankedRef(e, cent)) == "DIVIDE_BY_ZERO")
+      for (mode <- codegenModes) withConf(mode: _*)(
+        assert(condition(e.select(NearestCell.top(col("embedding"), 2,
+          ids, cv)).collect()) == "DIVIDE_BY_ZERO", mode))
     }
   }
 

@@ -111,6 +111,20 @@ class PlanAuditSpec extends SparkTestBase {
     }
   }
 
+  test("IVF rows pick and rank cells on the kernel, never a nested loop") {
+    // assignment and probe ranking are NearestCell / TopCells
+    // projections over driver-held centroids: a (vector × centroid)
+    // cross join coming back shows up as a nested loop or a cartesian
+    for (q <- Seq("v_ann_ivf", "v_ann_ivf4", "v_ann_ivfq", "v_ann_filtered",
+        "v_kmeans_sampled", "v_ivfpq", "v_ivfpq_rerank", "v_ivfpq_res",
+        "v_mips")) {
+      val p = plan(q)
+      assert(nodeCount(p, "CartesianProduct") == 0, s"$q plans cartesian")
+      assert(nodeCount(p, "BroadcastNestedLoopJoin") == 0,
+        s"$q plans a nested loop")
+    }
+  }
+
   test("d_minhash_idf: weighted signatures are fused into the scan") {
     // the IDF weighting pass must cost ZERO shuffles: the DF stop set
     // is collected at plan-build (a bounded ~10^3-entry set, the one
@@ -182,16 +196,17 @@ class PlanAuditSpec extends SparkTestBase {
     // appendMaintain parquet (plan() runs the 2-batch replay rig
     // first) joined on cluster — an in-plan re-assignment of the full
     // corpus feeding the candidate join would mean the maintained
-    // index is decorative. The centroid cross is a deliberate
-    // broadcast of |cells| rows (same as v_ann_ivf), so only a true
-    // CartesianProduct is banned here.
+    // index is decorative. Probes rank the read-back centroids on the
+    // kernel (collected once, before the stream), so no centroid cross
+    // is left either.
     val p = plan("v_ann_maintained")
     assert(p.contains("graft_ann_idx"),
       "candidates should scan the maintained inverted-file parquet")
     assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
       p.contains("BroadcastHashJoin"),
       "probe→cell candidate join must be an equi-join on cluster")
-    assert(nodeCount(p, "CartesianProduct") == 0,
+    assert(nodeCount(p, "CartesianProduct") == 0 &&
+      nodeCount(p, "BroadcastNestedLoopJoin") == 0,
       "maintained ANN probe planned all-pairs")
   }
 
